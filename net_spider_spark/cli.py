@@ -272,29 +272,14 @@ def _do_snapshot(spark: SparkSession, args) -> int:
         "link_ts",
         F.col("link_attrs").getItem("link_type"),
     )
-    if args.output == "-":
-        # stdout streams through toLocalIterator too: identical bytes
-        # to write_graphml, constant driver memory — a snapshot export
-        # never materializes the full row list on the driver, whatever
-        # the output target.
-        from net_spider_spark.graphml import write_graphml_to
+    # The writer owns materialization: it collects each side once under
+    # the driver budget and streams above it, with the same bytes.
+    from net_spider_spark.graphml import write_graphml_file, write_graphml_to
 
+    if args.output == "-":
         write_graphml_to(combined_nodes, combined_links, sys.stdout.write)
     else:
-        # File output streams through toLocalIterator: identical bytes
-        # to the in-memory writer, constant driver memory for snapshots
-        # too large for one string. Persist: each side is read twice
-        # (key pass + element pass).
-        from net_spider_spark.graphml import write_graphml_file
-
-        combined_nodes, combined_links = (
-            combined_nodes.persist(), combined_links.persist()
-        )
-        try:
-            write_graphml_file(combined_nodes, combined_links, args.output)
-        finally:
-            combined_nodes.unpersist()
-            combined_links.unpersist()
+        write_graphml_file(combined_nodes, combined_links, args.output)
     return 0
 
 

@@ -4,18 +4,26 @@ Parity target: ``net-spider/src/NetSpider/GraphML/Writer.hs:301-349``:
 ``<key>`` declarations collected across all elements (ids ``d0, d1,
 ...`` in first-seen order), per-node ``@timestamp``/``@tz_*``/
 ``@is_on_boundary`` data, per-edge explicit ``directed`` attribute,
-``edgedefault`` option, XML escaping (Writer.hs:354-366).
+``edgedefault`` option, XML escaping (Writer.hs:354-366). Attribute
+typing follows the reference's typed scalars (GraphML/Attribute.hs:
+29-35): per key the narrowest of boolean/long/double/string that fits
+every observed value.
 
-GraphML output is a single document, so the snapshot DataFrames are
-collected to the driver — appropriate for the human/tool-facing export
-path (a snapshot graph is the *small* end product of the query; the
-100 TB side stays in Parquet). Attribute typing follows the reference's
-typed scalars (GraphML/Attribute.hs:29-35): per key the narrowest of
-boolean/long/double/string that fits every observed value.
+There is one writer, :func:`write_graphml_to`; :func:`write_graphml`
+(a string) and :func:`write_graphml_file` (an atomic file) wrap it. It
+makes two passes per side (keys, then elements) over rows from
+:func:`rows_of`, which decides once per export from the driver budget
+(``sizing.DRIVER_LOCAL_MAX_BYTES``) whether to collect each side once
+or to stream it through ``toLocalIterator``. A snapshot graph is the
+small end product of the query, so the collect is the usual path; the
+stream keeps driver memory flat for snapshots that are not small.
 """
 
 from __future__ import annotations
 
+import io
+import os
+from contextlib import contextmanager
 from typing import Iterable, Optional
 
 from pyspark.sql import DataFrame
@@ -321,12 +329,11 @@ def _link_data(row) -> list[tuple[str, str]]:
     return data
 
 
-def _emit_graphml(nodes, links, write, rows_of, default_directed: bool) -> None:
-    """Two-pass emitter shared by the in-memory and streaming writers:
-    pass 1 registers keys (first-seen order + incremental type
-    narrowing, O(keys) memory), pass 2 writes elements through
-    ``write``. ``rows_of(df)`` supplies the row iterable and is called
-    once per pass per side."""
+def _emit_graphml(nodes, links, write, rows, default_directed: bool) -> None:
+    """Two-pass emitter: pass 1 registers keys (first-seen order +
+    incremental type narrowing, O(keys) memory), pass 2 writes elements
+    through ``write``. ``rows(df)`` (from :func:`rows_of`) supplies the
+    row iterable and is called once per pass per side."""
     from net_spider_spark.attributes import struct_attr_types
 
     schema_types: dict[tuple[str, str], str] = {}
@@ -339,10 +346,10 @@ def _emit_graphml(nodes, links, write, rows_of, default_directed: bool) -> None:
             schema_types.update({(domain, k): t for k, t in declared.items()})
 
     store = _KeyStore()
-    for row in rows_of(nodes):
+    for row in rows(nodes):
         for k, v in _node_data(row):
             store.add("node", k, v)
-    for row in rows_of(links):
+    for row in rows(links):
         for k, v in _link_data(row):
             store.add("edge", k, v)
 
@@ -357,14 +364,14 @@ def _emit_graphml(nodes, links, write, rows_of, default_directed: bool) -> None:
     write(
         f'<graph edgedefault="{"directed" if default_directed else "undirected"}">\n'
     )
-    for row in rows_of(nodes):
+    for row in rows(nodes):
         write(f'  <node id="{_escape(row["node_id"])}">\n')
         for k, v in _node_data(row):
             write(
                 f'    <data key="{store.key_id("node", k)}">{_escape(v)}</data>\n'
             )
         write("  </node>\n")
-    for row in rows_of(links):
+    for row in rows(links):
         write(
             f'  <edge source="{_escape(row["source_node"])}"'
             f' target="{_escape(row["dest_node"])}"'
@@ -378,44 +385,40 @@ def _emit_graphml(nodes, links, write, rows_of, default_directed: bool) -> None:
     write("</graph>\n</graphml>\n")
 
 
-def write_graphml(
-    nodes: DataFrame,
-    links: DataFrame,
-    default_directed: bool = True,
-) -> str:
-    """Serialize (snapshot_nodes, snapshot_links) DataFrames to a GraphML
-    document string (``writeGraphMLWith``). Struct-typed attr columns
-    declare their ``attr.type`` straight from the schema (typed scalars,
-    GraphML/Attribute.hs:29-35); map attrs fall back to inference.
+@contextmanager
+def rows_of(frames, tag: str):
+    """Row source shared by the GraphML and pangraph emitters: yields
+    ``rows(df)``, the rows of one of ``frames`` in partition order,
+    for as many passes as the emitter makes.
 
-    Sizing guard: below the driver byte budget both sides are collected
-    once (fastest); above it the document streams through
-    :func:`write_graphml_to`'s ``toLocalIterator`` path, so the only
-    driver-sized allocation is the returned string itself. A string
-    return is inherently driver-sized — for snapshots where even the
-    document doesn't fit, use :func:`write_graphml_file`."""
-    import io
+    The path is decided once, by one :func:`sizing.frames_fit`
+    aggregate over all ``frames`` (one ``DECISION_LOG`` entry tagged
+    ``tag``). Under the driver budget each frame is collected once and
+    every pass reads those rows. Above it every pass streams through
+    ``toLocalIterator``, so driver memory stays at one partition plus
+    the emitter's key registry.
+
+    Unpersisted inputs are persisted for the duration (and unpersisted
+    after): the sizing aggregate then materializes them once, and with
+    a nondeterministic upstream (shuffle/sample) the streamed passes
+    still read the same rows, so the element pass never meets a key
+    the key pass did not register."""
+    from pyspark import StorageLevel
 
     from net_spider_spark import sizing
 
-    buf = io.StringIO()
-    n_nodes = nodes.count()
-    n_links = links.count()
-    if sizing.fits_in_driver(
-        nodes, n_nodes, tag="graphml_nodes"
-    ) and sizing.fits_in_driver(links, n_links, tag="graphml_links"):
-        node_rows = nodes.collect()
-        link_rows = links.collect()
-        _emit_graphml(
-            nodes,
-            links,
-            buf.write,
-            lambda df: node_rows if df is nodes else link_rows,
-            default_directed,
-        )
-    else:
-        write_graphml_to(nodes, links, buf.write, default_directed)
-    return buf.getvalue()
+    persisted = [df for df in frames if df.storageLevel == StorageLevel.NONE]
+    for df in persisted:
+        df.persist()
+    try:
+        if sizing.frames_fit(frames, tag=tag):
+            collected = {id(df): df.collect() for df in frames}
+            yield lambda df: collected[id(df)]
+        else:
+            yield lambda df: df.toLocalIterator()
+    finally:
+        for df in persisted:
+            df.unpersist()
 
 
 def write_graphml_to(
@@ -424,42 +427,48 @@ def write_graphml_to(
     write,
     default_directed: bool = True,
 ) -> None:
-    """Streaming GraphML writer to any ``write(str)`` callable (a file,
-    ``sys.stdout.write``, a socket): identical bytes to
-    :func:`write_graphml`, but elements stream through
-    ``toLocalIterator`` — driver memory stays constant (one partition
-    in flight + the key registry) however many nodes/links the
-    snapshot has; the full row list is never materialized.
+    """Serialize (snapshot_nodes, snapshot_links) DataFrames as one
+    GraphML document (``writeGraphMLWith``) to any ``write(str)``
+    callable: a file, ``sys.stdout.write``, a socket, a buffer.
+    Struct-typed attr columns declare their ``attr.type`` straight from
+    the schema (typed scalars, GraphML/Attribute.hs:29-35); map attrs
+    fall back to inference.
 
-    Each side is iterated twice (key pass + element pass), so the
-    inputs are persisted here for the duration of both passes (and
-    unpersisted after): with an unpersisted nondeterministic input
-    (shuffle/sample upstream) the element pass could otherwise produce
-    a key the key pass never registered — a mid-file ``KeyError``
-    instead of a correct document. Iteration order is partition order
-    both times, keeping the two passes and the in-memory writer
-    consistent."""
-    from pyspark import StorageLevel
+    This is the one writer. :func:`rows_of` picks its path: a snapshot
+    under the driver budget costs one sizing aggregate plus one collect
+    per side (at most four Spark jobs on cached inputs); a larger one
+    streams twice per side through ``toLocalIterator``, one job per
+    partition each time. Both paths read rows in partition order, so
+    the bytes are the same."""
+    with rows_of((nodes, links), "graphml") as rows:
+        _emit_graphml(nodes, links, write, rows, default_directed)
 
-    # persist() is a no-op on an already-persisted frame and tracks
-    # nothing we'd clobber; unpersisting in finally is still safe for
-    # callers that persisted beforehand because they re-persist cheaply.
-    persisted = []
-    for df in (nodes, links):
-        if df.storageLevel == StorageLevel.NONE:
-            df.persist()
-            persisted.append(df)
+
+def write_graphml(
+    nodes: DataFrame,
+    links: DataFrame,
+    default_directed: bool = True,
+) -> str:
+    """:func:`write_graphml_to` into a string. The string itself is
+    driver-sized; for snapshots where even the document does not fit,
+    use :func:`write_graphml_file`."""
+    buf = io.StringIO()
+    write_graphml_to(nodes, links, buf.write, default_directed)
+    return buf.getvalue()
+
+
+def write_file_atomically(output_path: str, emit) -> None:
+    """Run ``emit(write)`` into a sibling temp file and rename it to
+    ``output_path``, so a failure mid-document never leaves a truncated
+    file at ``output_path``."""
+    tmp = output_path + ".tmp"
     try:
-        _emit_graphml(
-            nodes,
-            links,
-            write,
-            lambda df: df.toLocalIterator(),
-            default_directed,
-        )
+        with open(tmp, "w", encoding="utf-8") as f:
+            emit(f.write)
+        os.replace(tmp, output_path)
     finally:
-        for df in persisted:
-            df.unpersist()
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def write_graphml_file(
@@ -468,19 +477,11 @@ def write_graphml_file(
     output_path: str,
     default_directed: bool = True,
 ) -> None:
-    """Streaming GraphML writer for snapshots too large for one driver
-    string: :func:`write_graphml_to` into ``output_path``. The document
-    is written to a sibling temp file and renamed into place, so a
-    failure mid-stream never leaves a truncated file at
-    ``output_path``. (Reference S10 is inherently driver-side
-    single-document output; this is the scale-respecting extension.)"""
-    import os
-
-    tmp = output_path + ".tmp"
-    try:
-        with open(tmp, "w", encoding="utf-8") as f:
-            write_graphml_to(nodes, links, f.write, default_directed)
-        os.replace(tmp, output_path)
-    finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
+    """:func:`write_graphml_to` into ``output_path`` (atomically). This
+    is how to export snapshots too large for one driver string
+    (reference S10 is inherently driver-side single-document output;
+    this is the scale-respecting extension)."""
+    write_file_atomically(
+        output_path,
+        lambda write: write_graphml_to(nodes, links, write, default_directed),
+    )

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from net_spider_spark.graphml import rows_of, write_file_atomically
+
 
 def _empty_map():
     return F.map_from_arrays(
@@ -96,16 +98,16 @@ def make_edges(links: DataFrame) -> DataFrame:
     )
 
 
-def _emit_pangraph(verts: DataFrame, edges: DataFrame, write, rows_of) -> None:
-    """Two-pass emitter shared by the in-memory and streaming writers
-    (same structure as ``graphml._emit_graphml``): pass 1 registers
-    keys in first-seen order (O(keys) memory), pass 2 writes elements
-    through ``write``. ``rows_of(df)`` supplies the row iterable and is
-    called once per pass per side."""
+def _emit_pangraph(verts: DataFrame, edges: DataFrame, write, rows) -> None:
+    """Two-pass emitter (same structure as ``graphml._emit_graphml``):
+    pass 1 registers keys in first-seen order (O(keys) memory), pass 2
+    writes elements through ``write``. ``rows(df)`` (from
+    ``graphml.rows_of``) supplies the row iterable and is called once
+    per pass per side."""
     keys: list[tuple[str, str]] = []
     seen: set[tuple[str, str]] = set()
     for domain, df in (("node", verts), ("edge", edges)):
-        for row in rows_of(df):
+        for row in rows(df):
             for k in row["attributes"]:
                 dk = (domain, k)
                 if dk not in seen:
@@ -120,7 +122,7 @@ def _emit_pangraph(verts: DataFrame, edges: DataFrame, write, rows_of) -> None:
             f' attr.name="{_esc(name)}" attr.type="string"/>\n'
         )
     write('<graph edgedefault="directed">\n')
-    for row in rows_of(verts):
+    for row in rows(verts):
         write(f'  <node id="{_esc(row["vertex_id"])}">\n')
         for k in sorted(row["attributes"]):
             write(
@@ -128,7 +130,7 @@ def _emit_pangraph(verts: DataFrame, edges: DataFrame, write, rows_of) -> None:
                 f'{_esc(row["attributes"][k])}</data>\n'
             )
         write("  </node>\n")
-    for row in rows_of(edges):
+    for row in rows(edges):
         write(
             f'  <edge source="{_esc(row["source"])}" target="{_esc(row["target"])}">\n'
         )
@@ -141,52 +143,35 @@ def _emit_pangraph(verts: DataFrame, edges: DataFrame, write, rows_of) -> None:
     write("</graph>\n</graphml>\n")
 
 
+def _write_pangraph_to(nodes: DataFrame, links: DataFrame, write) -> None:
+    verts, edges = make_vertices(nodes), make_edges(links)
+    with rows_of((verts, edges), "pangraph") as rows:
+        _emit_pangraph(verts, edges, write, rows)
+
+
 def write_pangraph(nodes: DataFrame, links: DataFrame) -> str:
     """``writePangraph``: GraphML text via the pangraph-model tables.
 
     Attribute typing in this path is all-string (pangraph stores
-    ByteStrings), unlike graphml.write_graphml's inferred types."""
+    ByteStrings), unlike graphml.write_graphml's inferred types. Rows
+    come from ``graphml.rows_of``: each side is collected once under
+    the driver budget and streamed through ``toLocalIterator`` above
+    it, with the same bytes either way."""
     import io
 
-    verts_df, edges_df = make_vertices(nodes), make_edges(links)
-    vrows, erows = verts_df.collect(), edges_df.collect()
     buf = io.StringIO()
-    _emit_pangraph(
-        verts_df,
-        edges_df,
-        buf.write,
-        lambda df: vrows if df is verts_df else erows,
-    )
+    _write_pangraph_to(nodes, links, buf.write)
     return buf.getvalue()
 
 
 def write_pangraph_file(nodes: DataFrame, links: DataFrame, output_path: str) -> None:
-    """Streaming pangraph writer for exports too large for one driver
-    string: identical bytes to :func:`write_pangraph`, but elements
-    stream through ``toLocalIterator`` straight to ``output_path`` —
-    driver memory stays constant (one partition in flight + the key
-    registry). Mirrors ``graphml.write_graphml_file``: the converted
-    frames are persisted here for the duration of the two passes (key
-    pass + element pass) so a nondeterministic upstream can't produce
-    an unregistered key mid-file, and the document lands via temp file
-    + rename so a failure never leaves a truncated export."""
-    import os
-
-    verts_df, edges_df = make_vertices(nodes), make_edges(links)
-    verts_df.persist()
-    edges_df.persist()
-    tmp = output_path + ".tmp"
-    try:
-        with open(tmp, "w", encoding="utf-8") as f:
-            _emit_pangraph(
-                verts_df, edges_df, f.write, lambda df: df.toLocalIterator()
-            )
-        os.replace(tmp, output_path)
-    finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
-        verts_df.unpersist()
-        edges_df.unpersist()
+    """:func:`write_pangraph` straight into ``output_path`` for exports
+    too large for one driver string, through a temp file and rename
+    (``graphml.write_file_atomically``) so a failure never leaves a
+    truncated export."""
+    write_file_atomically(
+        output_path, lambda write: _write_pangraph_to(nodes, links, write)
+    )
 
 
 def _esc(text) -> str:

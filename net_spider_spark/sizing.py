@@ -2,17 +2,19 @@
 
 The iterative graph operators (traverse/components/pagerank/kcore/sssp)
 take a driver-local fast path when the deduplicated edge projection is
-small: one collect, zero iterative jobs. A row-count threshold alone
-mis-sizes wide rows — 2M edges of 16-byte node IDs is ~100 MB, but 2M
-edges of kilobyte URLs is gigabytes. The guard therefore ALSO estimates
-bytes from a bounded sample of actual row widths and refuses the local
-path when the estimate exceeds a driver budget, regardless of row
-count.
+small: one collect, zero iterative jobs; the GraphML and pangraph
+exports likewise collect each side once when the snapshot is small. A
+row-count threshold alone mis-sizes wide rows — 2M edges of 16-byte
+node IDs is ~100 MB, but 2M edges of kilobyte URLs is gigabytes. The
+guard therefore ALSO estimates bytes from actual row widths and refuses
+the local path when the estimate exceeds a driver budget, regardless
+of row count.
 """
 
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -24,7 +26,7 @@ DRIVER_LOCAL_MAX_BYTES = 256 * 1024 * 1024
 
 _SAMPLE_ROWS = 4096
 
-# Ring buffer of recent guard decisions, appended by fits_in_driver.
+# Ring buffer of recent guard decisions, appended by every guard below.
 # A silent local<->distributed path flip between rounds makes bench
 # numbers incomparable (round-9 lesson: j5_reachability fell off the
 # fast path when the byte estimate was reworked, +41% wall with no
@@ -72,12 +74,18 @@ def _log_decision(tag: str | None, n_rows: int, est: int, local: bool) -> None:
 
 def _row_width_expr(df: DataFrame):
     """Column summing an approximate serialized width per row: actual
-    octet length for strings/binary, fixed widths for scalars."""
+    octet length for strings/binary, the JSON length for maps, arrays
+    and structs (an attribute map can dwarf the rest of its row), fixed
+    widths for scalars."""
     width = F.lit(16)  # per-row object overhead
     for field in df.schema.fields:
         c = F.col(field.name)
         if isinstance(field.dataType, (T.StringType, T.BinaryType)):
             width = width + F.coalesce(F.octet_length(c), F.lit(0)) + F.lit(8)
+        elif isinstance(field.dataType, (T.MapType, T.ArrayType, T.StructType)):
+            width = (
+                width + F.coalesce(F.octet_length(F.to_json(c)), F.lit(0)) + F.lit(8)
+            )
         else:
             width = width + F.lit(8)
     return width
@@ -161,4 +169,24 @@ def fits_in_driver(
     est = estimated_bytes(df, n_rows)
     local = est <= max_bytes
     _log_decision(tag, n_rows, est, local)
+    return local
+
+
+def frames_fit(frames, tag: str | None = None) -> bool:
+    """True when collecting every frame in ``frames`` together stays
+    within :data:`DRIVER_LOCAL_MAX_BYTES` (read at call time). One
+    aggregate over the union of the frames' row widths sizes them all,
+    and one :data:`DECISION_LOG` entry records the total row count, the
+    estimate and the decision."""
+    widths = reduce(
+        DataFrame.unionAll,
+        [df.select(_row_width_expr(df).alias("w")) for df in frames],
+    )
+    row = widths.agg(
+        F.count(F.lit(1)).alias("n"), F.sum("w").alias("w")
+    ).collect()[0]
+    n = int(row["n"])
+    est = int((row["w"] or 0) * _PY_OVERHEAD)
+    local = est <= DRIVER_LOCAL_MAX_BYTES
+    _log_decision(tag, n, est, local)
     return local

@@ -38,11 +38,13 @@ def _edges(spark):
     return spark.createDataFrame(rows, "src string, dst string, weight long")
 
 
-def test_operator_burst_leaves_cache_manager_empty(spark, tmp_path):
+def test_operator_burst_leaves_cache_manager_empty(spark, tmp_path, monkeypatch):
+    from net_spider_spark import sizing
     from net_spider_spark.graph.components import connected_components
     from net_spider_spark.graph.kcore import kcore
     from net_spider_spark.graph.pagerank import pagerank
     from net_spider_spark.graph.sssp import shortest_paths
+    from net_spider_spark.graphml import write_graphml_to
     from net_spider_spark.pipeline.dedup import dedup_representatives
     from net_spider_spark.pipeline.temporal import time_rollup
     from net_spider_spark.pipeline.text import bm25_search
@@ -93,6 +95,23 @@ def test_operator_burst_leaves_cache_manager_empty(spark, tmp_path):
                 max_hops=3,
                 local_threshold=thresh,
             ).count()
+
+    # The GraphML writer persists unpersisted inputs for the export and
+    # must release them on the collect path (under the driver budget)
+    # and on the stream path (above it).
+    gml_nodes = spark.createDataFrame(
+        [("n0", False, 5, {"k": "v"}), ("n1", True, None, {})],
+        "node_id string, is_on_boundary boolean, node_ts long, "
+        "node_attrs map<string,string>",
+    )
+    gml_links = spark.createDataFrame(
+        [("n0", "n1", True, 5, {"w": "2"})],
+        "source_node string, dest_node string, is_directed boolean, "
+        "link_ts long, link_attrs map<string,string>",
+    )
+    for budget in (sizing.DRIVER_LOCAL_MAX_BYTES, 0):
+        monkeypatch.setattr(sizing, "DRIVER_LOCAL_MAX_BYTES", budget)
+        write_graphml_to(gml_nodes, gml_links, lambda text: None)
 
     gc.collect()
     assert _cache_manager_empty(spark), (

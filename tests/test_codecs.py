@@ -275,8 +275,8 @@ def test_graphml_file_writer_identical_output(spark, tmp_path):
 
 
 def test_graphml_file_writer_many_nodes(spark, tmp_path):
-    # the streaming writer handles multi-partition frames whose rows
-    # never sit in one driver list; output matches the in-memory writer
+    # multi-partition frames: the file writer's output matches the
+    # string writer's
     from pyspark.sql import functions as F
 
     from net_spider_spark.graphml import write_graphml_file
@@ -539,7 +539,7 @@ def test_timestamp_reference_spec_cases():
 
 def test_write_graphml_streams_above_driver_budget(spark, monkeypatch):
     # Library entry point at the sizing guard boundary: when
-    # fits_in_driver says no, write_graphml must route through the
+    # frames_fit says no, write_graphml must route through the
     # toLocalIterator streaming writer — patch DataFrame.collect to
     # fail so any collect on the oversized path is an error, and the
     # document must still come out byte-identical to the small path.
@@ -555,9 +555,7 @@ def test_write_graphml_streams_above_driver_budget(spark, monkeypatch):
     nodes, links = nodes.persist(), links.persist()
     expected = write_graphml(nodes, links)
 
-    monkeypatch.setattr(
-        sizing, "fits_in_driver", lambda *a, **kw: False
-    )
+    monkeypatch.setattr(sizing, "frames_fit", lambda *a, **kw: False)
     real_collect = DataFrame.collect
 
     def no_collect(self):
@@ -572,3 +570,59 @@ def test_write_graphml_streams_above_driver_budget(spark, monkeypatch):
         monkeypatch.setattr(DataFrame, "collect", real_collect)
     assert got == expected
     nodes.unpersist(); links.unpersist()
+
+
+def test_write_graphml_under_budget_collects_each_side_once(spark, monkeypatch):
+    # Under the driver budget the writer sizes both sides in one
+    # aggregate and collects each side once: at most 4 Spark jobs
+    # however many partitions, where the two-pass stream runs one job
+    # per partition per pass per side (32 here). The inputs are cached
+    # by the caller, as snapshot results are before export. The bytes
+    # must equal the streamed document's, and each export logs exactly
+    # one guard decision.
+    import io
+
+    from net_spider_spark import sizing
+    from net_spider_spark.graphml import write_graphml_to
+
+    sc = spark.sparkContext
+    nodes = spark.createDataFrame(
+        sc.parallelize(
+            [(f"n{i}", i % 3 == 0, i * 7, {"k": str(i)}) for i in range(400)], 8
+        ),
+        "node_id string, is_on_boundary boolean, node_ts long, "
+        "node_attrs map<string,string>",
+    ).persist()
+    links = spark.createDataFrame(
+        sc.parallelize(
+            [(f"n{i}", f"n{i + 1}", True, i * 7, {"w": "2"}) for i in range(399)],
+            8,
+        ),
+        "source_node string, dest_node string, is_directed boolean, "
+        "link_ts long, link_attrs map<string,string>",
+    ).persist()
+    nodes.count(), links.count()
+    tracker = sc.statusTracker()
+
+    def export():
+        buf = io.StringIO()
+        n_log = len(sizing.DECISION_LOG)
+        first = max(tracker.getJobIdsForGroup(None) or [-1])
+        write_graphml_to(nodes, links, buf.write)
+        jobs = max(tracker.getJobIdsForGroup(None) or [-1]) - first
+        return buf.getvalue(), jobs, sizing.DECISION_LOG[n_log:]
+
+    local_doc, local_jobs, local_log = export()
+    monkeypatch.setattr(sizing, "DRIVER_LOCAL_MAX_BYTES", 0)
+    streamed_doc, streamed_jobs, streamed_log = export()
+    nodes.unpersist(); links.unpersist()
+
+    assert local_doc == streamed_doc
+    assert local_doc.count("<node ") == 400
+    assert local_jobs <= 4, local_jobs
+    assert streamed_jobs >= 2 * 2 * 8
+    assert [(d["tag"], d["n_rows"], d["local"]) for d in local_log] == [
+        ("graphml", 799, True)
+    ]
+    assert [(d["tag"], d["local"]) for d in streamed_log] == [("graphml", False)]
+    assert local_log[0]["est_bytes"] == streamed_log[0]["est_bytes"] > 0

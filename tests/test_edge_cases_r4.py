@@ -76,14 +76,15 @@ def test_snapshot_logged_empty_history(spark):
 
 
 def test_graphml_streaming_writer_never_collects(spark, monkeypatch):
-    # The CLI export contract: however large the snapshot, GraphML
-    # serialization must stream through toLocalIterator — the full row
-    # list is never materialized on the driver. collect() is patched
-    # to fail so any regression to the in-memory path trips here.
+    # Above the driver budget, GraphML serialization must stream
+    # through toLocalIterator: the full row list is never materialized
+    # on the driver. The guard is forced to refuse, and collect() is
+    # patched to fail so any regression to the in-memory path trips.
     import io
 
     from pyspark.sql import DataFrame
 
+    from net_spider_spark import sizing
     from net_spider_spark.graphml import write_graphml, write_graphml_to
 
     nodes = spark.createDataFrame(
@@ -103,6 +104,7 @@ def test_graphml_streaming_writer_never_collects(spark, monkeypatch):
     def boom(self):
         raise AssertionError("streaming writer must not collect()")
 
+    monkeypatch.setattr(sizing, "frames_fit", lambda *a, **kw: False)
     monkeypatch.setattr(DataFrame, "collect", boom)
     buf = io.StringIO()
     write_graphml_to(nodes, links, buf.write)

@@ -37,10 +37,8 @@ def test_pangraph_export(spark):
 
 
 def test_pangraph_file_writer_identical_output(spark, tmp_path):
-    # S11 streaming symmetry with graphml.write_graphml_file: the
-    # toLocalIterator file writer emits byte-identical output to the
-    # in-memory writer (driver memory stays constant — one partition in
-    # flight + the key registry — however large the export).
+    # S11 symmetry with graphml.write_graphml_file: the file writer
+    # emits byte-identical output to the string writer.
     from net_spider_spark.pangraph import write_pangraph_file
 
     findings = [
@@ -59,7 +57,7 @@ def test_pangraph_file_writer_identical_output(spark, tmp_path):
     assert out.read_text(encoding="utf-8") == in_memory
     nodes.unpersist(); links.unpersist()
 
-    # multi-partition frames whose rows never sit in one driver list
+    # multi-partition frames
     big_nodes = (
         spark.range(500)
         .repartition(8)
@@ -89,6 +87,43 @@ def test_pangraph_file_writer_identical_output(spark, tmp_path):
     assert text == write_pangraph(big_nodes, big_links)
     assert text.count("<node ") == 500 and text.count("<edge ") == 499
 
+
+
+def test_pangraph_streams_above_driver_budget(spark, monkeypatch):
+    # write_pangraph sizes its tables with the same guard as GraphML:
+    # above the budget it streams and never collects the vertex/edge
+    # tables (the guard's own one-row aggregate may collect), with the
+    # same bytes as under it. Each export logs one "pangraph" decision.
+    from pyspark.sql import DataFrame
+
+    from net_spider_spark import sizing
+
+    findings = [
+        FoundNode("a", 1500, [FoundLink("b", "to_target", {"w": "3"})],
+                  {"label": "x<y"}),
+        FoundNode("b", 2500, [FoundLink("c", "to_subject", {})]),
+    ]
+    nodes, links = get_snapshot(findings_to_df(spark, findings), Query())
+    nodes, links = nodes.persist(), links.persist()
+    n_log = len(sizing.DECISION_LOG)
+    expected = write_pangraph(nodes, links)
+
+    real_collect = DataFrame.collect
+
+    def no_table_collect(self):
+        if "attributes" in self.columns:
+            raise AssertionError("over-budget write_pangraph collected a table")
+        return real_collect(self)
+
+    monkeypatch.setattr(sizing, "DRIVER_LOCAL_MAX_BYTES", 0)
+    monkeypatch.setattr(DataFrame, "collect", no_table_collect)
+    got = write_pangraph(nodes, links)
+    monkeypatch.setattr(DataFrame, "collect", real_collect)
+    nodes.unpersist(); links.unpersist()
+    assert got == expected
+    assert [(d["tag"], d["local"]) for d in sizing.DECISION_LOG[n_log:]] == [
+        ("pangraph", True), ("pangraph", False)
+    ]
 
 def test_connected_components(spark):
     edges = spark.createDataFrame(

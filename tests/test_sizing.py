@@ -3,7 +3,8 @@ rows to the collect fast path."""
 
 from pyspark.sql import functions as F
 
-from net_spider_spark.sizing import estimated_bytes, fits_in_driver
+from net_spider_spark import sizing
+from net_spider_spark.sizing import estimated_bytes, fits_in_driver, frames_fit
 
 
 def test_narrow_edges_fit(spark):
@@ -25,6 +26,27 @@ def test_wide_rows_refused_despite_small_count(spark):
     assert not fits_in_driver(wide, 500, max_bytes=1024 * 1024)
     est = estimated_bytes(wide, 500)
     assert est > 500 * 20_000
+
+
+def test_wide_attribute_maps_refused(spark, monkeypatch):
+    # 500 rows x a ~20 KB attribute map: the map column must count at
+    # its serialized width, not as one 8-byte scalar, so a 1 MB budget
+    # refuses the collect (the GraphML export's guard sizes these maps).
+    wide = spark.range(500).select(
+        F.col("id").cast("string").alias("node_id"),
+        F.map_from_arrays(
+            F.array(*[F.lit(f"k{j}") for j in range(20)]),
+            F.array_repeat(F.lit("v" * 1000), 20),
+        ).alias("node_attrs"),
+    )
+    assert not fits_in_driver(wide, 500, max_bytes=1024 * 1024)
+    assert estimated_bytes(wide, 500) > 500 * 20_000
+    monkeypatch.setattr(sizing, "DRIVER_LOCAL_MAX_BYTES", 1024 * 1024)
+    n_log = len(sizing.DECISION_LOG)
+    assert not frames_fit([wide, wide.limit(1)], tag="t")
+    (entry,) = sizing.DECISION_LOG[n_log:]
+    assert (entry["tag"], entry["n_rows"], entry["local"]) == ("t", 501, False)
+    assert entry["est_bytes"] > 500 * 20_000
 
 
 def test_estimate_scales_with_unseen_rows(spark):
