@@ -7,9 +7,11 @@ and its pure specification ``Weaver.getSnapshot'``
 
     findings
       |> time-interval filter          (F1; Catalyst pushdown)
-      |> found-node policy             (A1/A2; max_by groupBy, map-side combine)
+      |> found-node policy             (A1/A2; keep_argmax: one narrow
+      |                                 max(struct) aggregate + semi-join)
       |> [starts_from] BFS restriction (J4/J5; driver loop, traverse.py)
-      |> node states                   (latest kept finding per node)
+      |> node table                    (one generator pass + one groupBy:
+      |                                 latest state, visited, boundary)
       |> explode link samples          (J2)
       |> unify per undirected pair     (A3-A6; unify.py)
       |> negation                      (J8; two equi-joins on node states)
@@ -31,6 +33,7 @@ from pyspark.sql import types as T
 
 from net_spider_spark.findings import explode_link_samples
 from net_spider_spark.interval import Interval
+from net_spider_spark.reliability import materialize_lazy
 from net_spider_spark.traverse import reachable_nodes
 from net_spider_spark.unify import UnifyConfig, unify_to_one
 
@@ -81,39 +84,42 @@ def keep_argmax(
     df: DataFrame, group_cols: list[str], order_cols: list[str]
 ) -> DataFrame:
     """Keep each group's row(s) maximal under the lexicographic order
-    of ``order_cols`` — the engine's scalable argmax.
+    of ``order_cols`` — the engine's scalable argmax. Every row tied on
+    the full key is kept.
 
-    Shape: per order column, a scalar-``max`` hash aggregate over
-    (group key, long) followed by a semi-join of the full rows. Scalar
-    longs keep the aggregate a map-side-combinable HashAggregate;
-    ``max_by(struct(...))``/``max(struct)``/window-``row_number`` all
-    degrade to sort-based plans because struct buffers and wide rows
-    aren't hash-aggregation buffer types — sorting the full history by
-    key is exactly what must not happen at 100 TB. The winner-key table
-    is one row per group (node/pair count << row count), so the
-    semi-joins broadcast under AQE at typical scales.
+    Shape: one ``max(struct(order_cols))`` aggregate over the NARROW
+    ``group_cols + order_cols`` projection, then one left-semi join of
+    the full rows against the winner keys. Only the narrow key rows
+    reach the aggregate, so the wide rows (nested link arrays, attr
+    maps) are never sorted — sorting the full history by key is exactly
+    what must not happen at 100 TB. The winner-key table is one row per
+    group (node/pair count << row count), so the semi-join broadcasts
+    under AQE at typical scales. Null order values lose to non-null
+    ones and never match the semi-join, as with per-column ``max``.
     """
-    out = df
-    for oc in order_cols:
-        keys = out.groupBy(*group_cols).agg(F.max(F.col(oc)).alias(oc))
-        out = out.join(keys, on=group_cols + [oc], how="left_semi")
-    return out
+    keys = (
+        df.select(*group_cols, F.struct(*order_cols).alias("_k"))
+        .groupBy(*group_cols)
+        .agg(F.max("_k").alias("_k"))
+        .select(*group_cols, *[F.col(f"_k.{c}").alias(c) for c in order_cols])
+    )
+    return df.join(keys, on=group_cols + order_cols, how="left_semi")
 
 
 def latest_findings_per_node(findings: DataFrame) -> DataFrame:
     """policyOverwrite (A1): keep only each subject's latest finding
     (ties broken by ingest order = finding_id, Weaver.hs:84-88).
 
-    Shape choice, measured at 6.4M findings / 1.5k subjects on
-    local[32] with FULL materialization (xxhash64(to_json) over every
-    column — a bare ``count()`` prunes the payload and flatters
-    ``max_by``): keep_argmax 10-18 s, ``max_by(struct)`` 8-21 s,
-    window ``row_number`` 17-20 s — a wash within this box's noise.
-    keep_argmax stays: its aggregates are map-side-combinable scalar
-    hash-aggs and its winner-key table is one row per *node*, which in
-    this domain (network nodes, not events) always broadcasts; the
-    ``max_by`` SortAggregate buffers full-width rows map-side, which
-    loses when findings carry large attr maps / many links.
+    Shape: :func:`keep_argmax`. Its aggregate reads only (subject,
+    found_at, finding_id) and its winner-key table is one row per
+    *node*, which in this domain (network nodes, not events) always
+    broadcasts; a ``max_by`` over the full rows buffers full-width rows
+    map-side, which loses when findings carry large attr maps / many
+    links. Measured at 6.4M findings / 1.5k subjects on local[32] with
+    FULL materialization (xxhash64(to_json) over every column — a bare
+    ``count()`` prunes the payload and flatters ``max_by``): the
+    earlier per-column argmax rounds 10-18 s, full-row
+    ``max_by(struct)`` 8-21 s, window ``row_number`` 17-20 s.
     """
     return keep_argmax(findings, ["subject_node"], ["found_at", "finding_id"])
 
@@ -151,61 +157,43 @@ def snapshot_timeline(
     )
 
 
-_NODE_STATE_COLS = [
-    "subject_node", "found_at", "finding_id", "node_attrs",
-    "tz_offset_min", "tz_summer_only", "tz_name",
-]
+def _node_table(kept: DataFrame, marks: Optional[DataFrame]) -> DataFrame:
+    """One row per snapshot node: (node_id, visited, _s) where ``_s`` is
+    the node's latest kept state or null (makeSnapshotNode plus the
+    visited/boundary sets, Weaver.hs:120-151).
 
-
-def _node_states(node_src: DataFrame, already_latest: bool) -> DataFrame:
-    """Per-node latest timestamp + attributes over the kept findings
-    (makeSnapshotNode, Weaver.hs:136-151).
-
-    Under the overwrite policy the input is the policy dedup's own
-    output — already exactly one row per subject (finding_id is
-    unique) — so ``already_latest=True`` skips the argmax entirely.
-    The append path reduces the NARROW node projection (no
-    neighbor_links array — the one payload that makes sorting rows a
-    100 TB hazard) with a single ``max_by(struct)`` aggregate: one
-    map-side-combinable pass whose partial collapses every partition
-    to ~one row per subject before the shuffle — the same shape (and
-    justification) as the unify merge below. The former
-    ``keep_argmax`` rounds cost two aggregates plus two joins over the
-    full history; measured at 12.8M findings they shuffled 704 MB in
-    581 tasks where this aggregate shuffles only the per-partition
-    partials. The winner is identical: lexicographic max over
-    (found_at, finding_id), finding_id unique. The winner's display
-    timezone travels with the timestamp (the reference round-trips tz
-    meta-properties through the history graph into GraphML,
+    One generator pass over the kept findings emits a row for the
+    subject, carrying its state keyed by (found_at, finding_id), and a
+    state-less row per link target; ``marks`` (node_id) adds state-less
+    visited rows. One ``groupBy(node_id)`` then takes ``max_by`` of the
+    state — null keys never win, so target-only nodes keep a null
+    state — and ``bool_or`` of the visited flag. The rows are narrow
+    (no neighbor_links array) and the partial aggregate collapses each
+    partition to about one row per node before the shuffle. The
+    winner's display timezone travels with its timestamp (the reference
+    round-trips tz meta-properties into GraphML,
     Graph/Internal.hs:84-98 / GraphML/Writer.hs:252-259).
     """
-    latest = (
-        node_src
-        if already_latest
-        else node_src.groupBy("subject_node")
-        .agg(
-            F.expr(
-                "max_by(struct("
-                + ", ".join(c for c in _NODE_STATE_COLS if c != "subject_node")
-                + "), struct(found_at, finding_id))"
-            ).alias("_w")
-        )
-        .selectExpr(
-            "subject_node",
-            *[
-                f"_w.{c} AS {c}"
-                for c in _NODE_STATE_COLS
-                if c != "subject_node"
-            ],
-        )
+    rows = kept.selectExpr(
+        "posexplode(concat(array(subject_node),"
+        " coalesce(neighbor_links.target_node, array()))) AS (_pos, node_id)",
+        "struct(found_at, finding_id) AS _k",
+        "struct(found_at AS node_ts, node_attrs, tz_offset_min,"
+        " tz_summer_only, tz_name) AS _s",
+    ).selectExpr(
+        "node_id",
+        "_pos = 0 AS visited",
+        "IF(_pos = 0, _k, NULL) AS _k",
+        "IF(_pos = 0, _s, NULL) AS _s",
     )
-    return latest.selectExpr(
-        "subject_node",
-        "found_at AS node_ts",
-        "node_attrs",
-        "tz_offset_min",
-        "tz_summer_only",
-        "tz_name",
+    if marks is not None:
+        rows = rows.unionByName(
+            marks.selectExpr("node_id", "true AS visited"),
+            allowMissingColumns=True,
+        )
+    return rows.groupBy("node_id").agg(
+        F.expr("max_by(_s, _k)").alias("_s"),
+        F.expr("bool_or(visited)").alias("visited"),
     )
 
 
@@ -222,13 +210,14 @@ def get_snapshot(
     spirit of ``Weaver.getSnapshot'``'s ``[LogLine]`` channel
     (Weaver.hs:156-160, Log.hs) are appended in place — policy choice,
     traversal/boundary accounting, and unify group counts. The counts
-    run extra (cheap) actions over the persisted narrow intermediates,
-    so leave ``log_sink`` off on production paths; unlike the
+    run extra (cheap) actions over the narrow node table and link
+    samples, so leave ``log_sink`` off on production paths; unlike the
     reference's per-group lines the unify entry is an aggregate, which
     is the only shape that survives a 10^9-pair graph.
     """
     query = query or Query()
     spark = findings.sparkSession
+    traversal = query.starts_from is not None
 
     def _log(msg: str) -> None:
         if log_sink is not None:
@@ -245,36 +234,25 @@ def get_snapshot(
         + (" (latest finding per subject)" if overwrite else " (full history)")
     )
 
-    # What gets persisted depends on the policy. Overwrite: `kept` is
-    # the policy aggregate's output — bounded by node count, tiny —
-    # persist it whole so the argmax runs once, not once per consumer.
-    # Append: `kept` IS the full filtered history, and NOTHING
-    # history-sized is cached: the consumers are narrow projections
-    # (targets reads one column, visited one, the unify merge a
-    # handful), so each re-derives straight off the column-pruned
-    # source scan. Measured at 51M findings, caching the exploded
-    # samples for its two whole-graph consumers cost 110 s (38 s fill
-    # + 40 s of GC + slow heap reads) against 15 s recomputing the
-    # explode per consumer, and the narrow node projection cache lost
-    # 33.6 s vs 12.7 s the same way — the §5 caching rule measured:
-    # a cheap codegen projection is not worth corpus-sized memory
-    # pressure, and the cache also defeats per-consumer column
-    # pruning. Traversal mode still persists the samples: the BFS
-    # loop reads them once per level.
-    from pyspark import StorageLevel
-
+    # What is materialized, and why. Overwrite: `kept` is the policy's
+    # output, one row per subject, read by the node table in both the
+    # nodes and the links action and by the link samples; a lazy
+    # materialization runs the argmax once, and its blocks are
+    # RDD-owned (freed with the returned frames, no CacheManager
+    # entry). Append: `kept` IS the filtered history and nothing
+    # history-sized is kept: each consumer re-derives its narrow
+    # projection off the column-pruned scan. Measured at 51M findings,
+    # caching the exploded samples cost 110 s (fill + GC + slow heap
+    # reads) against 15 s recomputing them per consumer. Traversal mode
+    # persists the samples: the BFS loop reads them once per level.
     if overwrite:
-        kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
-    node_src = kept.select(*_NODE_STATE_COLS)
+        kept = materialize_lazy(kept)
     samples = explode_link_samples(kept)
-    # Overwrite mode: samples explode off the TINY persisted kept —
-    # keep the r11 persist (cheap, and the consumers stay cache-local).
-    # Traversal mode: the BFS loop reads samples once per level.
-    # Append whole-graph mode: stream (the measurement above).
-    if overwrite or query.starts_from is not None:
-        samples = samples.persist(StorageLevel.MEMORY_AND_DISK)
+    marks = None
+    if traversal:
+        from pyspark import StorageLevel
 
-    if query.starts_from is not None:
+        samples = samples.persist(StorageLevel.MEMORY_AND_DISK)
         # The traversal can only begin at nodes that exist in the history
         # graph at all — identity vertices persist outside the query
         # interval (getOrMakeNode, Spider.hs:146-158), so existence is
@@ -295,77 +273,60 @@ def get_snapshot(
         edges = samples.select(
             F.col("subject_node").alias("src"), F.col("target_node").alias("dst")
         )
-        visited = reachable_nodes(edges, starts_df, max_hops=query.max_hops)
-        node_src = node_src.join(
-            visited.withColumnRenamed("node_id", "subject_node"),
-            "subject_node",
-            "left_semi",
+        marks = reachable_nodes(edges, starts_df, max_hops=query.max_hops)
+        # Only visited subjects contribute states and links. With an
+        # unbounded traversal every link target is itself visited;
+        # under max_hops, targets past the bound are boundary nodes
+        # (observed but not visited, Weaver.hs:120-129) — they still
+        # appear so the output graph is closed over its links.
+        on_visited = marks.withColumnRenamed("node_id", "subject_node")
+        kept = kept.join(on_visited, "subject_node", "left_semi")
+        samples = samples.join(on_visited, "subject_node", "left_semi")
+    elif query.extra_visited:
+        marks = spark.createDataFrame(
+            [(str(s),) for s in query.extra_visited], "node_id string"
         )
-        samples = samples.join(
-            visited.withColumnRenamed("node_id", "subject_node"),
-            "subject_node",
-            "left_semi",
-        )
-        # With an unbounded traversal every link target is itself
-        # visited; under max_hops, targets past the bound are boundary
-        # nodes (observed but not visited, Weaver.hs:120-129) — they
-        # must still appear so the output graph is closed over its
-        # links.
-        targets = samples.select(F.col("target_node").alias("node_id")).distinct()
-        boundary = targets.join(visited, "node_id", "left_anti")
-        node_ids = visited.withColumn("is_on_boundary", F.lit(False)).unionByName(
-            boundary.withColumn("is_on_boundary", F.lit(True))
-        )
-        if log_sink is not None:
+
+    # Whole-graph (Weaver) mode: visited = subjects (+ explicit marks),
+    # boundary = link targets never visited (Weaver.hs:120-129), marked
+    # only under BOUNDARY_MARK. Traversal mode always marks them.
+    table = _node_table(kept, marks)
+    if log_sink is not None:
+        n_visited, n_boundary = table.agg(
+            F.expr("count_if(visited)"), F.expr("count_if(NOT visited)")
+        ).first()
+        if traversal:
             _log(
                 f"traverse: starts_from={sorted(str(s) for s in query.starts_from)}"
                 f" max_hops={query.max_hops}:"
-                f" visited {visited.count()} nodes,"
-                f" {boundary.count()} past-bound targets on boundary"
+                f" visited {n_visited} nodes,"
+                f" {n_boundary} past-bound targets on boundary"
             )
-    else:
-        # Whole-graph (Weaver) mode: visited = subjects (+ explicit marks),
-        # boundary = link targets never visited (Weaver.hs:120-129).
-        visited = node_src.select(F.col("subject_node").alias("node_id")).distinct()
-        if query.extra_visited:
-            extra = spark.createDataFrame(
-                [(str(s),) for s in query.extra_visited], "node_id string"
-            )
-            visited = visited.unionByName(extra).distinct()
-        targets = samples.select(F.col("target_node").alias("node_id")).distinct()
-        boundary = targets.join(visited, "node_id", "left_anti")
-        flag = F.lit(query.boundary_mode == BOUNDARY_MARK)
-        node_ids = visited.withColumn("is_on_boundary", F.lit(False)).unionByName(
-            boundary.withColumn("is_on_boundary", flag)
-        )
-        if log_sink is not None:
+        else:
             _log(
                 f"boundary (mode={query.boundary_mode}):"
-                f" {visited.count()} visited nodes,"
-                f" {boundary.count()} observed-only targets"
+                f" {n_visited} visited nodes,"
+                f" {n_boundary} observed-only targets"
                 + (" marked on boundary"
                    if query.boundary_mode == BOUNDARY_MARK
                    else " included unmarked")
             )
-
-    # --- snapshot nodes -------------------------------------------------
-    node_states = _node_states(node_src, already_latest=overwrite)
-    nodes = (
-        node_ids.join(
-            node_states.withColumnRenamed("subject_node", "node_id"),
-            "node_id",
-            "left",
-        ).select(
-            "node_id", "is_on_boundary", "node_ts", "node_attrs",
-            "tz_offset_min", "tz_summer_only", "tz_name",
-        )
+    mark = traversal or query.boundary_mode == BOUNDARY_MARK
+    nodes = table.selectExpr(
+        "node_id",
+        "NOT visited AS is_on_boundary" if mark else "false AS is_on_boundary",
+        "_s.node_ts AS node_ts",
+        "_s.node_attrs AS node_attrs",
+        "_s.tz_offset_min AS tz_offset_min",
+        "_s.tz_summer_only AS tz_summer_only",
+        "_s.tz_name AS tz_name",
     )
 
     # --- unify ----------------------------------------------------------
     if log_sink is not None:
         # Aggregate twin of Weaver.hs:186-191's per-group "Unify link
         # [a]-[b]: from N samples" lines: total samples and distinct
-        # unify groups, both off the persisted narrow sample table.
+        # unify groups.
         n_samples = samples.count()
         n_groups = (
             samples.select(
@@ -376,9 +337,7 @@ def get_snapshot(
             .count()
         )
         _log(f"unify: {n_groups} link groups from {n_samples} samples")
-    links = _unify_links(
-        samples, nodes, query.unify, persist_node_ts=not overwrite
-    )
+    links = _unify_links(samples, nodes, query.unify)
     return nodes, links
 
 
@@ -397,7 +356,6 @@ def _unify_links(
     samples: DataFrame,
     nodes: DataFrame,
     conf: UnifyConfig,
-    persist_node_ts: bool = False,
 ) -> DataFrame:
     """Steps 1-3 of unifyStd (Unify.hs:169-193) + direction resolution
     (Weaver.hs:190-203)."""
@@ -461,16 +419,13 @@ def _unify_links(
         for name, col in conf.winner_transform().items():
             merged = merged.withColumn(name, col)
 
-    return negate_and_resolve(
-        merged, nodes, conf, persist_node_ts=persist_node_ts
-    )
+    return negate_and_resolve(merged, nodes, conf)
 
 
 def negate_and_resolve(
     merged: DataFrame,
     nodes: DataFrame,
     conf: Optional[UnifyConfig] = None,
-    persist_node_ts: bool = False,
 ) -> DataFrame:
     """The unify tail: negation + direction resolution over MERGED link
     samples (p1/p2 pair keys + subject/target/state/found_at/attrs).
@@ -487,20 +442,10 @@ def negate_and_resolve(
     # Negation (Unify.hs:184-193): check the merged sample against BOTH
     # endpoints' snapshot-node timestamps. Node states are a per-node
     # aggregate — orders of magnitude smaller than the sample table — so
-    # these two equi-joins broadcast under AQE at typical scales.
-    # ``persist_node_ts`` (the append path sets it): the table is
-    # joined once per endpoint, and each broadcast build otherwise
-    # re-executes the whole nodes subtree — node-state reduction +
-    # visited/boundary union over the FULL history, measured as the
-    # dominant repeat in the append path at 128x scale. One row per
-    # node, narrow. Overwrite mode skips the persist: its nodes
-    # subtree reads the tiny cached kept table, and the cache-fill
-    # stages cost more than the repeat there.
+    # these two equi-joins broadcast under AQE at typical scales. Both
+    # read the same node subtree, which the plan computes once and
+    # reuses (exchange reuse), so nothing is persisted here.
     node_ts = nodes.selectExpr("node_id", "node_ts AS _end_ts")
-    if persist_node_ts:
-        from pyspark import StorageLevel
-
-        node_ts = node_ts.persist(StorageLevel.MEMORY_AND_DISK)
     for end in ("p1", "p2"):
         nt = node_ts.selectExpr(
             f"node_id AS _{end}_id", f"_end_ts AS _{end}_ts"

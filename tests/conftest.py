@@ -16,6 +16,20 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
 from pyspark.sql import SparkSession
 
 
+def spark_jobs(spark):
+    """Start counting Spark jobs: returns a function giving the number
+    of jobs started since this call (the status tracker's job-id
+    delta). Counts jobs outside any job group, which is every job the
+    library starts."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def last() -> int:
+        return max(tracker.getJobIdsForGroup(None) or [-1])
+
+    first = last()
+    return lambda: last() - first
+
+
 @pytest.fixture(scope="session")
 def spark():
     session = (

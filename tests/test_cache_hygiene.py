@@ -44,12 +44,14 @@ def test_operator_burst_leaves_cache_manager_empty(spark, tmp_path, monkeypatch)
     from net_spider_spark.graph.kcore import kcore
     from net_spider_spark.graph.pagerank import pagerank
     from net_spider_spark.graph.sssp import shortest_paths
+    from net_spider_spark.findings import FoundLink, FoundNode, findings_to_df
     from net_spider_spark.graphml import write_graphml_to
     from net_spider_spark.pipeline.dedup import dedup_representatives
     from net_spider_spark.pipeline.temporal import time_rollup
     from net_spider_spark.pipeline.text import bm25_search
     from net_spider_spark.rpl.contiki import parse_contiki_logs
     from net_spider_spark.seqid import convert_graph
+    from net_spider_spark.snapshot import Query, get_snapshot, snapshot_timeline
     from net_spider_spark.traverse import reachable_nodes
 
     spark.catalog.clearCache()
@@ -112,6 +114,25 @@ def test_operator_burst_leaves_cache_manager_empty(spark, tmp_path, monkeypatch)
     for budget in (sizing.DRIVER_LOCAL_MAX_BYTES, 0):
         monkeypatch.setattr(sizing, "DRIVER_LOCAL_MAX_BYTES", budget)
         write_graphml_to(gml_nodes, gml_links, lambda text: None)
+
+    # Whole-graph snapshots under both policies (the overwrite policy's
+    # shared output is an RDD-owned materialization, not a persist) and
+    # the as-of timeline, each consumed as nodes then links.
+    findings = findings_to_df(
+        spark,
+        [
+            FoundNode("a", 10, [FoundLink("b"), FoundLink("c", "to_subject")]),
+            FoundNode("b", 20, [FoundLink("a", "bidirectional")]),
+            FoundNode("a", 30, [FoundLink("b")]),
+        ],
+    )
+    for policy in ("overwrite", "append"):
+        snap_nodes, snap_links = get_snapshot(
+            findings, Query(found_node_policy=policy)
+        )
+        snap_nodes.collect()
+        snap_links.collect()
+    snapshot_timeline(findings, [15, 25, 35]).collect()
 
     gc.collect()
     assert _cache_manager_empty(spark), (

@@ -5,6 +5,7 @@ import json
 
 import pytest
 
+from conftest import spark_jobs
 from net_spider_spark.findings import (
     FoundLink,
     FoundNode,
@@ -602,15 +603,13 @@ def test_write_graphml_under_budget_collects_each_side_once(spark, monkeypatch):
         "link_ts long, link_attrs map<string,string>",
     ).persist()
     nodes.count(), links.count()
-    tracker = sc.statusTracker()
 
     def export():
         buf = io.StringIO()
         n_log = len(sizing.DECISION_LOG)
-        first = max(tracker.getJobIdsForGroup(None) or [-1])
+        jobs = spark_jobs(spark)
         write_graphml_to(nodes, links, buf.write)
-        jobs = max(tracker.getJobIdsForGroup(None) or [-1]) - first
-        return buf.getvalue(), jobs, sizing.DECISION_LOG[n_log:]
+        return buf.getvalue(), jobs(), sizing.DECISION_LOG[n_log:]
 
     local_doc, local_jobs, local_log = export()
     monkeypatch.setattr(sizing, "DRIVER_LOCAL_MAX_BYTES", 0)

@@ -13,7 +13,12 @@ from hypothesis import strategies as st
 from net_spider_spark.findings import FoundLink, FoundNode, findings_to_df
 from net_spider_spark.interval import Interval
 from net_spider_spark.pyweaver import PyFinding, PyLink, snapshot as py_snapshot
-from net_spider_spark.snapshot import Query, get_snapshot
+from net_spider_spark.snapshot import (
+    BOUNDARY_MARK,
+    BOUNDARY_VISIT,
+    Query,
+    get_snapshot,
+)
 
 NODE_IDS = ["a", "b", "c", "d", "e"]
 STATES = ["unused", "to_target", "to_subject", "bidirectional"]
@@ -31,11 +36,28 @@ finding_st = st.builds(
     links=st.lists(link_st, max_size=3),
 )
 
-findings_st = st.lists(finding_st, min_size=0, max_size=8).map(
-    lambda fs: [
-        PyFinding(i, s, ts, tuple(ls)) for i, (s, ts, ls) in enumerate(fs)
+def _numbered(fs):
+    # the finding_id as a node attribute makes the node-state winner
+    # visible in the result, not just its timestamp
+    return [
+        PyFinding(i, s, ts, tuple(ls), attrs=(("fid", str(i)),))
+        for i, (s, ts, ls) in enumerate(fs)
     ]
-)
+
+
+findings_st = st.lists(finding_st, min_size=0, max_size=8).map(_numbered)
+
+# Few distinct timestamps: most subjects see several findings at the
+# same found_at, so the winner is decided by finding_id alone.
+tied_findings_st = st.lists(
+    st.tuples(
+        st.sampled_from(NODE_IDS),
+        st.sampled_from([3, 7]),
+        st.lists(link_st, max_size=3),
+    ),
+    min_size=0,
+    max_size=10,
+).map(_numbered)
 
 
 def run_engine(spark, pyfindings, **query_kw):
@@ -44,28 +66,51 @@ def run_engine(spark, pyfindings, **query_kw):
             f.subject,
             f.found_at,
             [FoundLink(l.target, l.state) for l in f.links],
+            node_attrs=dict(f.attrs),
         )
         for f in pyfindings
     ]
     df = findings_to_df(spark, fns)
     nodes_df, links_df = get_snapshot(df, Query(**query_kw))
-    nodes = {
-        r["node_id"]: (r["is_on_boundary"], r["node_ts"])
-        for r in nodes_df.collect()
-    }
-    links = {
+    node_rows = nodes_df.collect()
+    link_rows = [
         (r["source_node"], r["dest_node"], r["is_directed"], r["link_ts"])
         for r in links_df.collect()
+    ]
+    nodes = {
+        r["node_id"]: (
+            r["is_on_boundary"],
+            r["node_ts"],
+            None if r["node_attrs"] is None
+            else tuple(sorted(r["node_attrs"].items())),
+        )
+        for r in node_rows
     }
+    links = set(link_rows)
+    # the dict and set above would hide duplicate rows
+    assert len(nodes) == len(node_rows), f"duplicate node rows: {node_rows}"
+    assert len(links) == len(link_rows), f"duplicate link rows: {link_rows}"
     return nodes, links
 
 
 def check(spark, pyfindings, policy, interval=None, starts_from=None,
-          max_hops=None):
+          max_hops=None, boundary_mode=BOUNDARY_VISIT, extra_visited=()):
     exp_nodes, exp_links = py_snapshot(
         pyfindings, policy=policy, interval=interval,
         starts_from=starts_from, max_hops=max_hops,
     )
+    want_nodes = dict(exp_nodes)
+    # Whole-graph marks (Weaver.hs:93-96, 120-129), which the spec
+    # leaves to the caller: an extra visited node joins the graph
+    # without a state, and under BOUNDARY_MARK a node is on the
+    # boundary exactly when it has no kept finding and is not marked.
+    for n in extra_visited:
+        want_nodes.setdefault(n, (False, None, None))
+    if boundary_mode == BOUNDARY_MARK:
+        want_nodes = {
+            n: (ts is None and n not in extra_visited, ts, attrs)
+            for n, (_, ts, attrs) in want_nodes.items()
+        }
     got_nodes, got_links = run_engine(
         spark,
         pyfindings,
@@ -73,10 +118,10 @@ def check(spark, pyfindings, policy, interval=None, starts_from=None,
         time_interval=interval or Interval.always(),
         starts_from=starts_from,
         max_hops=max_hops,
+        boundary_mode=boundary_mode,
+        extra_visited=extra_visited,
     )
-    assert got_nodes == {
-        n: (b, ts) for n, (b, ts, _) in exp_nodes.items()
-    }, f"nodes differ for {pyfindings}"
+    assert got_nodes == want_nodes, f"nodes differ for {pyfindings}"
     assert got_links == exp_links, f"links differ for {pyfindings}"
 
 
@@ -93,6 +138,36 @@ _settings = settings(
 @_settings
 def test_whole_graph_matches_spec(spark, fs, policy):
     check(spark, fs, policy)
+
+
+@given(fs=findings_st, policy=st.sampled_from(["overwrite", "append"]))
+@_settings
+def test_whole_graph_boundary_mark_matches_spec(spark, fs, policy):
+    check(spark, fs, policy, boundary_mode=BOUNDARY_MARK)
+
+
+@given(
+    fs=findings_st,
+    policy=st.sampled_from(["overwrite", "append"]),
+    mode=st.sampled_from([BOUNDARY_VISIT, BOUNDARY_MARK]),
+    extra=st.lists(st.sampled_from(NODE_IDS + ["zz"]), max_size=2, unique=True),
+)
+@_settings
+def test_extra_visited_matches_spec(spark, fs, policy, mode, extra):
+    check(spark, fs, policy, boundary_mode=mode, extra_visited=extra)
+
+
+@given(
+    fs=tied_findings_st,
+    policy=st.sampled_from(["overwrite", "append"]),
+    mode=st.sampled_from([BOUNDARY_VISIT, BOUNDARY_MARK]),
+)
+@_settings
+def test_tied_timestamps_match_spec(spark, fs, policy, mode):
+    """Equal found_at values with distinct finding_ids: the node state
+    (seen through its attributes) and the link winner are decided by
+    finding_id (Weaver.hs:84-88)."""
+    check(spark, fs, policy, boundary_mode=mode)
 
 
 @given(
@@ -169,9 +244,9 @@ def test_custom_negates_matches_spec(spark, fs, policy, grace, exempt_subject):
         found_node_policy=policy,
         unify=UnifyConfig(negates=engine_rule),
     )
-    assert got_nodes == {
-        n: (b, ts) for n, (b, ts, _) in exp_nodes.items()
-    }, f"nodes differ for {fs} grace={grace} exempt={exempt_subject}"
+    assert got_nodes == exp_nodes, (
+        f"nodes differ for {fs} grace={grace} exempt={exempt_subject}"
+    )
     assert got_links == exp_links, (
         f"links differ for {fs} grace={grace} exempt={exempt_subject}"
     )

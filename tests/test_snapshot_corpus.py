@@ -379,3 +379,50 @@ def test_get_snapshot_logged_channel(spark):
         findings, Query(starts_from=["a"], max_hops=1))
     assert any(m.startswith("traverse: starts_from=['a'] max_hops=1")
                for m in logs2)
+
+
+@pytest.mark.parametrize("policy,max_jobs", [("overwrite", 9), ("append", 7)])
+def test_whole_graph_snapshot_job_count(spark, policy, max_jobs):
+    # At small scale a snapshot costs Spark jobs, not data. The node
+    # table is one aggregate, the overwrite policy one argmax, and no
+    # intermediate is cached for a second consumer to re-fill, so a
+    # whole-graph snapshot of an 8-partition history, collected as
+    # nodes then links, stays within a fixed job budget — and agrees
+    # with the spec.
+    from conftest import spark_jobs
+    from net_spider_spark.model import FINDINGS_SCHEMA
+    from net_spider_spark.pyweaver import PyFinding, PyLink
+    from net_spider_spark.pyweaver import snapshot as py_snapshot
+
+    states = ["to_target", "to_subject", "bidirectional", "unused"]
+    rows = [
+        (
+            i, f"n{i % 40}", 1000 + (i * 37) % 500, None, None, None,
+            {"k": str(i)},
+            [(f"n{(i * 7 + j) % 45}", states[(i + j) % 4], {}) for j in range(3)],
+        )
+        for i in range(400)
+    ]
+    findings = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 8), FINDINGS_SCHEMA
+    )
+    want_nodes, want_links = py_snapshot(
+        [
+            PyFinding(r[0], r[1], r[2], tuple(PyLink(t, s) for t, s, _ in r[7]))
+            for r in rows
+        ],
+        policy=policy,
+    )
+
+    jobs = spark_jobs(spark)
+    nodes, links = get_snapshot(findings, Query(found_node_policy=policy))
+    got_nodes = {r["node_id"]: r["node_ts"] for r in nodes.collect()}
+    got_links = {
+        (r["source_node"], r["dest_node"], r["is_directed"], r["link_ts"])
+        for r in links.collect()
+    }
+    used = jobs()
+
+    assert got_nodes == {n: ts for n, (_, ts, _) in want_nodes.items()}
+    assert got_links == want_links
+    assert used <= max_jobs, f"{policy}: {used} Spark jobs"
