@@ -15,8 +15,11 @@ time-varying graphs), re-expressed Spark-first:
   on the default path.
 
 Public API mirrors the reference surface (Query / get_snapshot /
-Weaver / GraphML + JSON writers) plus large-scale data-pipeline
-extensions (dedup, similarity search, text analysis).
+Weaver / GraphML + JSON writers), plus the Parquet history store
+(``ingest``), incremental latest-state folds (``incremental``) and the
+Contiki-NG RPL log layer (``rpl``). Corpus operators outside the
+snapshot engine (dedup, similarity search, text analysis) live in
+``pipeline``.
 """
 
 from net_spider_spark.model import (
@@ -59,7 +62,6 @@ from net_spider_spark.incremental import (
     fold_latest_nodes,
     update_latest_state,
 )
-from net_spider_spark.skew import salted_join
 
 __all__ = [
     "LinkState",
@@ -103,7 +105,6 @@ __all__ = [
     "fold_latest_links",
     "fold_latest_nodes",
     "update_latest_state",
-    "salted_join",
 ]
 
 __version__ = "0.1.0"

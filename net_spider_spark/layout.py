@@ -10,10 +10,10 @@ task runs. This is the standard lakehouse layout trick (Delta/Iceberg
 arithmetic + one repartition-and-sort write; reference n/a (extension
 suite).
 
-Everything is deterministic and engine-reproducible: quantization uses
-driver-collected min/max (one tiny aggregate) with pure integer/IEEE
-ops, and the interleave is a static codegen expression — the DuckDB
-oracle recomputes identical z-values.
+Everything is deterministic: quantization uses driver-collected
+min/max (one tiny aggregate) with pure integer/IEEE ops, and the
+interleave is a static codegen expression (``tests/test_layout.py``
+checks it against a Python spec).
 """
 
 from __future__ import annotations

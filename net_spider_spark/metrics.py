@@ -1,59 +1,24 @@
-"""Executor-side counters from Spark's AppStatusStore.
+"""Host and JVM counters read beside wall-clock measurements.
 
-Wall-clock on a shared box swings 2-5x run to run; shuffle bytes, task
-counts, and spill are functions of the PLAN and DATA only, so scaling
-claims cite them alongside (noisy) seconds. Reads the same store that
-backs the UI/REST status API — populated even with
-``spark.ui.enabled=false`` — via one py4j call; no listener
-registration, no extra jobs.
+Wall-clock on a shared box swings 2-5x run to run. GC time (from
+Spark's AppStatusStore, which is populated even with
+``spark.ui.enabled=false``; one py4j call, no listener, no extra jobs)
+and hypervisor steal tell memory pressure and box contention apart
+from a real regression.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-COUNTER_KEYS = (
-    "tasks",
-    "shuffle_read_bytes",
-    "shuffle_write_bytes",
-    "memory_spill_bytes",
-    "disk_spill_bytes",
-)
-
-
-def executor_counters(spark: SparkSession) -> dict:
-    """Cumulative counters over all completed stages of this app."""
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    store = sc._jsc.sc().statusStore()
-    # Spark 4 signature: stageList(statuses, details, withSummaries,
-    # quantiles, taskStatus); empty statuses list = no filter.
-    stages = store.stageList(
-        jvm.java.util.ArrayList(),
-        False,
-        False,
-        sc._gateway.new_array(jvm.double, 0),
-        jvm.java.util.ArrayList(),
-    )
-    tot = dict.fromkeys(COUNTER_KEYS, 0)
-    it = stages.iterator()
-    while it.hasNext():
-        s = it.next()
-        tot["tasks"] += s.numCompleteTasks()
-        tot["shuffle_read_bytes"] += s.shuffleReadBytes()
-        tot["shuffle_write_bytes"] += s.shuffleWriteBytes()
-        tot["memory_spill_bytes"] += s.memoryBytesSpilled()
-        tot["disk_spill_bytes"] += s.diskBytesSpilled()
-    return tot
-
 
 def gc_time_ms(spark: SparkSession) -> int:
     """Cumulative JVM GC milliseconds across all executors (in local
     mode: the driver). A wall regression with flat counters AND flat
     GC-time delta is box contention; a GC spike is memory pressure —
-    recording both makes the distinction visible in the bench artifact
-    instead of requiring a judge re-run (round-9 lesson: sustained
-    ingest 829k -> 15.4k rows/s with byte-identical shuffle counters)."""
+    recording both makes the distinction visible in the benchmark
+    record instead of requiring a re-run (sustained ingest once fell
+    829k -> 15.4k rows/s with byte-identical shuffle counters)."""
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()
     total = 0
@@ -68,9 +33,9 @@ def host_steal_jiffies() -> int:
     shared-host VM, steal is the smoking gun for 'identical counters,
     inflated wall': the guest was runnable but the host ran someone
     else. Recording the per-query delta beside the wall makes box
-    noise PROVABLE in the committed artifact (round-9/10 lesson:
-    carried scale queries ran 4-13x slower with byte-identical shuffle
-    and task counts while steal accumulated). Returns 0 where
+    noise PROVABLE in the benchmark record (scale queries once ran
+    4-13x slower with byte-identical shuffle and task counts while
+    steal accumulated). Returns 0 where
     /proc/stat is unavailable (non-Linux)."""
     try:
         with open("/proc/stat") as f:
@@ -78,10 +43,3 @@ def host_steal_jiffies() -> int:
         return int(fields[8])  # cpu  user nice system idle iowait irq softirq steal
     except (OSError, IndexError, ValueError):
         return 0
-
-
-def counters_delta(after: dict, before: dict) -> dict:
-    """Per-query counters: the difference of two cumulative snapshots.
-    Clamped at 0 — the status store evicts old stages
-    (spark.ui.retainedStages), which can only shrink ``before``."""
-    return {k: max(0, after[k] - before[k]) for k in COUNTER_KEYS}

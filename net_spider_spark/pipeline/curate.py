@@ -7,8 +7,8 @@ These are the pipeline stages between "raw scraped documents" and
 :mod:`net_spider_spark.pipeline.text` and ``.dedup`` feed into. Like
 those modules, everything here is built-in Catalyst expressions or
 plain shuffles with map-side combine — no Python in the row loop — and
-every operator has a DuckDB twin in ``__spark_entry__.oracle_sql`` so
-the driver's correctness gate covers it.
+every operator uses only engine-portable expressions, so an external
+SQL engine can recompute its output.
 
 Determinism is load-bearing: sampling, sharding, and packing use
 md5-derived keys (portable across Spark and DuckDB, unlike xxhash64)

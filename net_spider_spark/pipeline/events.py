@@ -5,8 +5,7 @@ The canonical gaps-and-islands shape: one shuffle on the user key, a
 per-user window sort (users are numerous and sessions short, so
 partitions stay balanced — the opposite of a global sort), then
 ``lag`` marks gap starts and a running ``sum`` numbers the islands.
-Everything is built-in window expressions — codegen, no Python — and
-each step has a DuckDB twin in ``__spark_entry__.oracle_sql``.
+Everything is built-in window expressions — codegen, no Python.
 
 For skewed users (one user = millions of events) pre-split by
 ``(user, day)`` first; session boundaries then heal across day edges

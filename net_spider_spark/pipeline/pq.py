@@ -191,7 +191,7 @@ def _adc_query_rows(queries: DataFrame, id_col: str, vec_col: str,
     relational broadcast-LUT path is the right shape anyway), an id
     type outside :data:`_ADC_ID_TYPES`, duplicate/null ids, or
     null/ragged vectors. Every decision lands in sizing.DECISION_LOG so
-    bench.py commits which side of the guard each query took."""
+    tests can pin which side of the guard each query took."""
     import os
 
     import numpy as np

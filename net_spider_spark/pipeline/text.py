@@ -3,9 +3,9 @@ scoring, language-ID heuristic, fingerprinting.
 
 All pure Catalyst expressions (split / higher-order array functions /
 md5) — these run inside whole-stage codegen with zero Python per row,
-so they scale linearly with executors at 100 TB. Each operator has a
-DuckDB-SQL twin in ``__spark_entry__.oracle_sql`` for the correctness
-gate.
+so they scale linearly with executors at 100 TB. Each operator uses
+only engine-portable expressions, so an external SQL engine can
+recompute its output.
 """
 
 from __future__ import annotations

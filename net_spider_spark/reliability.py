@@ -1,18 +1,19 @@
 """Session-level reliability mode for mid-plan materialization.
 
-Many operators materialize an intermediate table that several
-downstream consumers re-read (shingle sets, pHash tables, BFS
-frontiers, parsed log blocks). The default mechanism is
+Several engine calls materialize an intermediate table that more than
+one downstream consumer re-reads (the overwrite policy's kept findings,
+a traversal snapshot's link samples, BFS frontiers, parsed log
+blocks). The default mechanism is
 ``localCheckpoint(eager=True)``: blocks are RDD-owned (freed by the
 ContextCleaner when the caller drops the result — never a session
 CacheManager entry, see tests/test_cache_hygiene.py), and lineage is
 TRUNCATED, which is exactly what the iterative loops need. The
-tradeoff, documented since round 8: truncated lineage means a lost
+tradeoff: truncated lineage means a lost
 executor cannot recompute its blocks — the downstream action fails
 and the caller re-runs the whole operator. On a long-lived production
 cluster with preemptible/spot executors that retry-the-operator
 contract may be unacceptable for the expensive materializations
-(image decode, corpus tokenization).
+(a large history's policy pass, a long RPL log parse).
 
 ``reliability mode`` swaps the mechanism session-wide:
 

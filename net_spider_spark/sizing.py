@@ -1,19 +1,24 @@
-"""Driver-local fast-path sizing guard.
+"""Driver-local fast-path sizing guards.
 
-The iterative graph operators (traverse/components/pagerank/kcore/sssp)
-take a driver-local fast path when the deduplicated edge projection is
-small: one collect, zero iterative jobs; the GraphML and pangraph
-exports likewise collect each side once when the snapshot is small. A
-row-count threshold alone mis-sizes wide rows — 2M edges of 16-byte
-node IDs is ~100 MB, but 2M edges of kilobyte URLs is gigabytes. The
-guard therefore ALSO estimates bytes from actual row widths and refuses
-the local path when the estimate exceeds a driver budget, regardless
-of row count.
+The BFS in ``traverse`` and ``graph.components`` take a driver-local
+fast path when the deduplicated edge projection is small (one collect,
+zero iterative jobs), and the GraphML and pangraph exports collect each side once when
+the snapshot is small. A row-count threshold alone mis-sizes wide rows
+— 2M edges of 16-byte node IDs is ~100 MB, but 2M edges of kilobyte
+URLs is gigabytes. The guards therefore ALSO estimate bytes from actual
+row widths and refuse the local path when the estimate exceeds a driver
+budget, regardless of row count:
+
+* :func:`count_and_fits` — row count plus byte budget, for the BFS and
+  connected components;
+* :func:`frames_fit` — byte budget over several frames, for export;
+* :func:`fits_in_driver` — byte budget for a frame whose row count the
+  caller already holds (the quality-model trainer in
+  ``pipeline.text``).
 """
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 
 from pyspark.sql import DataFrame
@@ -27,41 +32,14 @@ DRIVER_LOCAL_MAX_BYTES = 256 * 1024 * 1024
 _SAMPLE_ROWS = 4096
 
 # Ring buffer of recent guard decisions, appended by every guard below.
-# A silent local<->distributed path flip between rounds makes bench
-# numbers incomparable (round-9 lesson: j5_reachability fell off the
-# fast path when the byte estimate was reworked, +41% wall with no
-# code change to the operator). Recording every decision lets bench.py
-# commit which path each query took and lets tests PIN the expected
-# path at the bench scale factor, so a flip fails CI instead of
-# surfacing as an unexplained wall delta.
+# A silent local<->distributed path flip makes benchmark numbers
+# incomparable (a reworked byte estimate once pushed a reachability
+# query off the fast path: +41% wall with no change to the operator).
+# Recording every decision lets perfbench report which path each
+# operation took and lets tests PIN the expected path, so a flip fails
+# CI instead of surfacing as an unexplained wall delta.
 DECISION_LOG: list[dict] = []
 _DECISION_LOG_MAX = 256
-
-
-# Target rows per task for an explicit compute-spread exchange (a
-# round-robin/hash repartition inserted purely so a heavy per-row
-# Python stage runs data-parallel). Spreading a few hundred rows over
-# defaultParallelism tasks is pure scheduling + Python-worker spin-up:
-# several spread queries measured FASTER at 8 cores than 32 at bench
-# scale (round-11 verdict item 3). 512 rows/task reproduces the 8-core
-# width on the sf0.1 media spreads; at corpus scale n_rows/512 far
-# exceeds any core count, so the cap never binds and the width stays
-# the session's parallelism.
-SPREAD_ROWS_PER_TASK = int(
-    os.environ.get("NET_SPIDER_SPREAD_ROWS_PER_TASK", "512")
-)
-
-
-def spread_width(spark, n_rows: int | None = None) -> int:
-    """Task width for an explicit compute-spread exchange: the
-    session's default parallelism, capped at
-    ``ceil(n_rows / SPREAD_ROWS_PER_TASK)`` when the caller knows (or
-    can bound) the row count. ``n_rows`` is a width HINT — it affects
-    scheduling only, never results."""
-    par = spark.sparkContext.defaultParallelism
-    if n_rows is not None and n_rows >= 0:
-        par = max(1, min(par, -(-n_rows // SPREAD_ROWS_PER_TASK)))
-    return par
 
 
 def _log_decision(tag: str | None, n_rows: int, est: int, local: bool) -> None:
@@ -134,17 +112,12 @@ def count_and_fits(
 ) -> tuple[int, bool]:
     """Row count + driver-budget check as ONE aggregate job.
 
-    The guarded operators (components/pagerank/kcore/sssp/BFS) all ran
-    ``count()`` then :func:`fits_in_driver`'s width probe — two full
-    jobs over the (persisted) edge projection before any work starts,
-    each a stage of pure scheduling at bench scale. One
-    ``agg(count, avg(width))`` pass computes both. The width estimate
-    averages EVERY row instead of the sampled probe — a strictly
-    better estimate for one extra cheap expression during a pass the
-    count already paid for. Returns ``(n_rows, local)`` where local
-    requires BOTH ``n_rows <= row_threshold`` and the byte budget, and
-    logs the combined decision (so a row-threshold refusal is visible
-    in the decision log too, which the two-step form never recorded)."""
+    One ``agg(count, avg(width))`` pass over the (persisted) frame
+    computes both, averaging the width over EVERY row. Returns
+    ``(n_rows, local)`` where local requires BOTH
+    ``n_rows <= row_threshold`` and the byte budget, and logs the
+    combined decision, so a row-threshold refusal is visible in
+    :data:`DECISION_LOG` too."""
     row = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.avg(_row_width_expr(df)).alias("avg_w"),
@@ -164,8 +137,8 @@ def fits_in_driver(
 ) -> bool:
     """True when collecting ``df`` is within the driver byte budget.
     Every decision is appended to :data:`DECISION_LOG` (with the
-    caller's ``tag``) so the taken path is observable by bench.py and
-    pinnable by tests."""
+    caller's ``tag``) so the taken path is observable and pinnable by
+    tests."""
     est = estimated_bytes(df, n_rows)
     local = est <= max_bytes
     _log_decision(tag, n_rows, est, local)

@@ -214,6 +214,11 @@ def get_snapshot(
     samples, so leave ``log_sink`` off on production paths; unlike the
     reference's per-group lines the unify entry is an aggregate, which
     is the only shape that survives a 10^9-pair graph.
+
+    Overwrite snapshots and traversal snapshots (``starts_from``)
+    materialize an intermediate through ``reliability``, so in
+    ``reliable`` reliability mode they need the session's checkpoint
+    dir; nothing is left in the session CacheManager.
     """
     query = query or Query()
     spark = findings.sparkSession
@@ -243,16 +248,15 @@ def get_snapshot(
     # history-sized is kept: each consumer re-derives its narrow
     # projection off the column-pruned scan. Measured at 51M findings,
     # caching the exploded samples cost 110 s (fill + GC + slow heap
-    # reads) against 15 s recomputing them per consumer. Traversal mode
-    # persists the samples: the BFS loop reads them once per level.
+    # reads) against 15 s recomputing them per consumer. Traversal: the
+    # samples feed both the BFS edge projection and the visited links,
+    # so they are lazily materialized too (RDD-owned blocks again).
     if overwrite:
         kept = materialize_lazy(kept)
     samples = explode_link_samples(kept)
     marks = None
     if traversal:
-        from pyspark import StorageLevel
-
-        samples = samples.persist(StorageLevel.MEMORY_AND_DISK)
+        samples = materialize_lazy(samples)
         # The traversal can only begin at nodes that exist in the history
         # graph at all — identity vertices persist outside the query
         # interval (getOrMakeNode, Spider.hs:146-158), so existence is

@@ -4,9 +4,8 @@ The findings-ingest layer deliberately has NO watermark (a late finding
 must still lose the latest-per-node comparison — see
 ``streaming/ingest.py``). Metric rollups are the opposite trade: a
 window must CLOSE so results can ship downstream, so lateness needs a
-bound. This module is the streaming face of
-``pipeline.temporal.time_rollup`` — same bucket semantics, maintained
-incrementally by Structured Streaming state instead of a batch scan.
+bound. Windows are maintained incrementally by Structured Streaming
+state instead of a batch scan.
 
 * ``stream_windowed_stats`` — tumbling or sliding event-time windows
   with a watermark; rows later than the watermark are dropped and the

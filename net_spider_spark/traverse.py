@@ -61,54 +61,9 @@ def reachable_nodes(
     The reference leaves a max-step bound as an unimplemented TODO
     (Spider.hs:254); ``max_hops`` implements it.
     """
-    edges = (
-        edges.select(F.col("src"), F.col("dst"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .persist()
-    )
-    n_edges, _local = count_and_fits(edges, local_threshold, tag="bfs")
-    if _local:
-        try:
-            return _local_bfs(edges, starts, max_hops)
-        finally:
-            edges.unpersist()
-    # One job per level: the new frontier is lazily local-checkpointed and
-    # its count() both materializes it (truncating lineage) and drives the
-    # termination test. The visited set stays a lazy union of checkpointed
-    # levels (each is small and cached); it is re-checkpointed only every
-    # few levels to bound plan growth.
-    visited = starts.select("node_id").distinct().transform(_materialize)
-    frontier = visited
-    n_frontier = frontier.count()
-    hops = 0
-    try:
-        while n_frontier > 0:
-            if max_hops is not None and hops >= max_hops:
-                break
-            f = (
-                F.broadcast(frontier)
-                if n_frontier <= _BROADCAST_FRONTIER_MAX
-                else frontier
-            )
-            nxt = (
-                edges.join(f, edges.src == f.node_id, "inner")
-                .select(F.col("dst").alias("node_id"))
-                .distinct()
-                .join(visited, "node_id", "left_anti")
-                .transform(_materialize_lazy)
-            )
-            n_frontier = nxt.count()
-            if n_frontier == 0:
-                break
-            visited = visited.unionByName(nxt)
-            if hops % 8 == 7:
-                visited = visited.transform(_materialize)
-            frontier = nxt
-            hops += 1
-    finally:
-        edges.unpersist()
-    return visited
+    return reachable_with_levels(
+        edges, starts, max_hops=max_hops, local_threshold=local_threshold
+    ).select("node_id")
 
 
 def reachable_with_levels(
@@ -121,11 +76,12 @@ def reachable_with_levels(
     DataFrame(node_id string, level long) — the hop distance from the
     nearest start node (starts are level 0).
 
-    Same scale structure as ``reachable_nodes``: driver-local fast path
-    for small deduplicated edge projections, else one broadcast-join
-    job per level with anti-join dedup and periodic lineage
-    truncation. This is the scale path for depth analytics
-    (``analyze.tree_depth``) — no unguarded edge collect.
+    Driver-local fast path for small deduplicated edge projections
+    (one ``bfs``-tagged :data:`sizing.DECISION_LOG` entry per call
+    records the choice), else one broadcast-join job per level with
+    anti-join dedup and periodic lineage truncation. This is also the
+    scale path for depth analytics (``analyze.tree_depth``) — no
+    unguarded edge collect.
     """
     spark = edges.sparkSession
     edges = (
@@ -134,8 +90,8 @@ def reachable_with_levels(
         .distinct()
         .persist()
     )
-    n_edges, _local = count_and_fits(edges, local_threshold, tag="bfs")
-    if _local:
+    _, local = count_and_fits(edges, local_threshold, tag="bfs")
+    if local:
         try:
             adj: dict[str, list[str]] = {}
             for row in edges.collect():
@@ -165,6 +121,11 @@ def reachable_with_levels(
             sorted(levels.items()), "node_id string, level long"
         )
 
+    # One job per level: the new frontier is lazily local-checkpointed and
+    # its count() both materializes it (truncating lineage) and drives the
+    # termination test. The visited set stays a lazy union of checkpointed
+    # levels (each is small and cached); it is re-checkpointed only every
+    # few levels to bound plan growth.
     visited = (
         starts.select("node_id")
         .distinct()
@@ -202,29 +163,3 @@ def reachable_with_levels(
     finally:
         edges.unpersist()
     return visited
-
-
-def _local_bfs(
-    edges: DataFrame, starts: DataFrame, max_hops: Optional[int]
-) -> DataFrame:
-    """Driver-local BFS over a collected adjacency list (fast path)."""
-    adj: dict[str, list[str]] = {}
-    for row in edges.collect():
-        adj.setdefault(row["src"], []).append(row["dst"])
-    visited = {r["node_id"] for r in starts.select("node_id").distinct().collect()}
-    frontier = set(visited)
-    hops = 0
-    while frontier and (max_hops is None or hops < max_hops):
-        nxt = {
-            dst
-            for src in frontier
-            for dst in adj.get(src, ())
-            if dst not in visited
-        }
-        visited |= nxt
-        frontier = nxt
-        hops += 1
-    spark = edges.sparkSession
-    if not visited:
-        return spark.createDataFrame([], "node_id string")
-    return spark.createDataFrame([(n,) for n in sorted(visited)], "node_id string")

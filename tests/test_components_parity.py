@@ -46,14 +46,10 @@ def test_symmetric_closure_is_single_subtree(spark):
     # chain once per direction (measured: dedup_representatives ran
     # its candidate+verify pipeline twice).
     from net_spider_spark.graph.components import connected_components
-    from net_spider_spark.graph.kcore import kcore
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c")], "src string, dst string"
     )
-    for df in (
-        connected_components(edges, local_threshold=0),
-        kcore(edges, k=1, local_threshold=0),
-    ):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Union" not in plan
+    df = connected_components(edges, local_threshold=0)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in plan

@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from net_spider_spark import demo
 from net_spider_spark.pipeline import similarity as S
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -15,7 +14,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return demo.read_table(spark, SF_DIR, "embeddings").where(
+    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").where(
         F.col("vec_id") < 200
     )
 
@@ -148,7 +147,9 @@ def test_quantized_cosine_close(spark, emb):
             F.col("b.vec_id").alias("ib"),
         )
     )
-    e = demo.read_table(spark, SF_DIR, "embeddings").where(F.col("vec_id") < 200)
+    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").where(
+        F.col("vec_id") < 200
+    )
     exact = (
         e.alias("a")
         .join(e.alias("b"), F.col("a.vec_id") + 1 == F.col("b.vec_id"))

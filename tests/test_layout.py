@@ -1,10 +1,13 @@
 """Z-order layout: interleave math vs a python spec, and the property
 that actually matters — per-file min/max stats prune on BOTH columns."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
 from net_spider_spark import layout as LY
+from net_spider_spark.findings import FoundLink, FoundNode, findings_to_df
 
 
 def py_interleave(a: int, b: int, bits: int) -> int:
@@ -46,6 +49,26 @@ def test_zorder_value_null_and_determinism(spark):
     assert out == again
     with pytest.raises(ValueError):
         LY.zorder_value(df, ["x"], bits=8)
+
+
+def _event_findings(spark, n=1000, n_subjects=15, days=30):
+    """An event-log-shaped history: ``n`` findings in time order over
+    ``days`` days from ``n_subjects`` subjects, each with one link."""
+    rng = random.Random(7)
+    start = 1_704_067_200_000  # 2024-01-01T00:00:00Z
+    stamps = sorted(rng.randrange(days * 86_400_000) for _ in range(n))
+    rows = []
+    for i, ts in enumerate(stamps):
+        user = rng.randrange(n_subjects)
+        rows.append(
+            FoundNode(
+                str(user),
+                start + ts,
+                [FoundLink(str((user * 7 + i) % 50), link_attrs={"v": str(i)})],
+                {"event_type": rng.choice(["click", "view", "purchase"])},
+            )
+        )
+    return findings_to_df(spark, rows)
 
 
 def _file_extents(spark, path, cols):
@@ -110,7 +133,7 @@ def test_write_zordered_prunes_both_columns(spark, tmp_path):
 
 
 def test_write_findings_zordered_prunes_subject_lookups(spark, tmp_path):
-    """The r8 history-table layout claim: vs write_findings (whose
+    """The history-table layout claim: vs write_findings (whose
     per-file subject stats are useless — every write task spans the
     full subject range), write_findings_zordered must (a) return
     byte-identical query results and (b) leave per-file subject_node
@@ -118,10 +141,9 @@ def test_write_findings_zordered_prunes_subject_lookups(spark, tmp_path):
     files on stats alone, while found_at stats still prune intervals."""
     import glob
 
-    from net_spider_spark import demo
     from net_spider_spark import ingest as IG
 
-    findings = demo.events_findings(spark, "/root/testdata/sf0.001")
+    findings = _event_findings(spark)
     flat = str(tmp_path / "flat")
     zord = str(tmp_path / "zord")
     IG.write_findings(findings, flat, mode="overwrite", partition_by_day=False)
@@ -175,10 +197,9 @@ def test_compact_history_zorder_relayouts_day_table(spark, tmp_path):
     """OPTIMIZE-ZORDER: a stream-appended day-partitioned table (whose
     per-file subject stats are useless) compacts into a globally
     Z-curve-laid table — same rows, subject lookups now prune."""
-    from net_spider_spark import demo
     from net_spider_spark import ingest as IG
 
-    findings = demo.events_findings(spark, "/root/testdata/sf0.001")
+    findings = _event_findings(spark)
     path = str(tmp_path / "hist")
     IG.write_findings(findings, path, mode="overwrite")  # day-partitioned
     before = spark.read.parquet(path)

@@ -11,6 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from net_spider_spark import ingest
+from net_spider_spark.findings import FoundLink, FoundNode, findings_to_df
+from net_spider_spark.incremental import fold_latest_links
 from net_spider_spark.interval import Interval
 from net_spider_spark.pipeline import curate as CU
 from net_spider_spark.pipeline import dedup as D
@@ -91,118 +93,28 @@ def test_repetition_stats_shuffles_on_doc_key_only(docs):
     assert "Window" not in plan
 
 
-def test_tpch_q18_broadcasts_qualifying_orders(spark, tmp_path):
-    # Q18: the HAVING-filtered order set is tiny relative to lineitem;
-    # it must reach orders via a broadcast join, never a sort-merge
-    # shuffle of the fact table against it.
-    import os
-
-    import __spark_entry__ as em
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
-    if not os.path.exists(f"{sf_dir}/lineitem.parquet"):
-        pytest.skip("no testdata")
-    plan = plan_of(em.q_tpch_q18(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-
-
-def test_topk_per_source_single_window_exchange(spark, tmp_path):
-    # Per-source top-k: exactly one hashpartitioning exchange (for the
-    # window), no global sort over the corpus.
-    import os
-
-    import __spark_entry__ as em
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
-    if not os.path.exists(f"{sf_dir}/documents.parquet"):
-        pytest.skip("no testdata")
-    plan = plan_of(em.q_curate_topk_per_source(spark, sf_dir))
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Exchange rangepartitioning" not in plan  # no global sort
-
-
-def test_funnel_stage_filters_reach_scan(spark):
-    # The per-stage event_type filter must push into the parquet scan:
-    # a funnel that reads the whole event log per level is wrong.
-    import os
-
-    import __spark_entry__ as em
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
-    if not os.path.exists(f"{sf_dir}/events.parquet"):
-        pytest.skip("no testdata")
-    plan = plan_of(em.q_events_funnel(spark, sf_dir))
-    assert "PushedFilters: [" in plan and "event_type" in plan
-
-
-def test_funnel_level_joins_broadcast(spark):
-    # Funnel shape census: the per-level (user, t) set shrinks
-    # monotonically, so every level join must be a broadcast —
-    # sort-merge or cartesian there means the whole event log is
-    # being shuffled per stage.
-    import os
-
-    import __spark_entry__ as em
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
-    if not os.path.exists(f"{sf_dir}/events.parquet"):
-        pytest.skip("no testdata")
-    plan = plan_of(em.q_events_funnel(spark, sf_dir))
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "Exchange rangepartitioning" not in plan  # no global sort
-    # one user-keyed aggregate exchange per funnel level + the base
-    # stage; per-stage counts collapse to SinglePartition rollups
-    assert plan.count("BroadcastHashJoin") == 3
-    assert plan.count("Exchange hashpartitioning") == 5
-
-
-def test_retention_hash_agg_only_shape(spark):
-    # Retention census: distinct-activity + min-bucket + cell counts
-    # are all hash aggregates on user/cohort keys; cohort-size join is
-    # broadcast. No window, no sort, no cartesian anywhere.
-    import os
-
-    import __spark_entry__ as em
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
-    if not os.path.exists(f"{sf_dir}/events.parquet"):
-        pytest.skip("no testdata")
-    plan = plan_of(em.q_events_retention(spark, sf_dir))
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "Exchange rangepartitioning" not in plan
-    assert "Window" not in plan
-    assert plan.count("BroadcastHashJoin") == 2
-    assert plan.count("Exchange hashpartitioning") == 6
-
-
-def test_embed_truncate_no_exchange(spark):
-    # Pure projection over the embeddings scan — any Exchange is a
-    # regression.
-    import os
-
-    import __spark_entry__ as em
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
-    if not os.path.exists(f"{sf_dir}/embeddings.parquet"):
-        pytest.skip("no testdata")
-    plan = plan_of(em.q_embed_truncate(spark, sf_dir))
-    assert "Exchange" not in plan
-
-
 def test_incremental_links_single_aggregate(spark):
     # The two-batch fold must stay one aggregate tree over the union —
     # no join of state against batch (the fold IS the aggregate).
-    import os
-
-    import __spark_entry__ as em
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
-    if not os.path.exists(f"{sf_dir}/events.parquet"):
-        pytest.skip("no testdata")
-    plan = plan_of(em.q_snapshot_incremental_links(spark, sf_dir))
+    findings = findings_to_df(
+        spark,
+        [
+            FoundNode(
+                f"n{i % 5}",
+                1000 + i,
+                [FoundLink(f"n{(i + 1) % 5}"), FoundLink(f"n{(i + 2) % 5}")],
+            )
+            for i in range(20)
+        ],
+    )
+    b1 = findings.where(findings.finding_id % 2 == 0)
+    b2 = findings.where(findings.finding_id % 2 == 1)
+    state = fold_latest_links(fold_latest_links(None, b1), b2)
+    plan = plan_of(state)
     assert "Join" not in plan  # union + aggregates only
+    assert sorted(map(str, state.collect())) == sorted(
+        map(str, fold_latest_links(None, findings).collect())
+    )
 
 
 def test_set_based_dedup_never_explodes_shingles(docs):
@@ -239,17 +151,6 @@ def test_span_removal_no_range_join(docs):
     exec_plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ShuffledHashJoin" in exec_plan or "BroadcastHashJoin" in exec_plan
     assert "SortMergeJoin [doc_id" not in exec_plan
-
-
-def test_star_join_broadcasts_all_dims(spark):
-    # tpch_q9_nation_profit: every dimension joins as a broadcast hash
-    # join — the lineitem fact must never shuffle on a dimension key
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.q_tpch_q9_nation_profit(spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") >= 3
-    assert "SortMergeJoin" not in plan
 
 
 def test_mixture_sample_rank_never_spans_a_source(docs):
@@ -397,159 +298,3 @@ def test_wordpiece_encode_single_arrow_stage(docs):
     plan = plan_of(df)
     assert plan.count("MapInPandas") == 1
     assert "Exchange" not in plan
-
-
-def test_crawl_frontier_rules_broadcast(spark):
-    # In the composed frontier pipeline the per-URL side never carries
-    # a cartesian; robots rules reach the frontier as a broadcast (the
-    # rule table is tiny by construction).
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["pipeline_crawl_frontier"](
-        spark, "/root/testdata/sf0.001"
-    )
-    plan = plan_of(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
-def test_bench_scale_guard_paths_pinned(spark):
-    # Pin which side of the driver-local guard each guarded HEADLINE
-    # query takes at the BENCH scale factor (sf0.1). A silent flip
-    # between rounds makes bench walls incomparable (round-9 lesson:
-    # j5_reachability's counters changed with no operator edit). Any
-    # change to sizing.estimated_bytes / thresholds that moves one of
-    # these decisions must consciously update this pin.
-    import os
-
-    import __spark_entry__ as em
-    from net_spider_spark import sizing
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if not os.path.exists(f"{sf_dir}/events.parquet"):
-        pytest.skip("no sf0.1 testdata")
-    expected = {
-        "j5_reachability": [("bfs", True)],
-        "graph_components": [("components", True)],
-        "graph_pagerank": [("pagerank", True)],
-        "graph_kcore": [("kcore", True)],
-        "graph_sssp": [("sssp", True)],
-        # forced-distributed twins: the fused count+width guard logs
-        # their row-threshold refusal (local=False) — the two-step form
-        # short-circuited before the byte probe and logged nothing, so
-        # a threshold refusal was invisible in bench.py's paths record.
-        "j5_reachability_dist": [("bfs", False)],
-        "graph_components_dist": [("components", False)],
-    }
-    qs = em.queries()
-    for name, want in expected.items():
-        sizing.DECISION_LOG.clear()
-        qs[name](spark, sf_dir)  # guard fires at build time
-        got = [(d["tag"], d["local"]) for d in sizing.DECISION_LOG]
-        assert got == want, f"{name}: guard path flipped: {got} != {want}"
-
-
-def test_synth_decode_spread_across_cores(spark):
-    # The sf tables are single parquet files (one scan split at every
-    # sf), so the heavy payload synth+decode queries must round-robin
-    # their parameter rows across the session before the mapInPandas
-    # stage — otherwise the whole render+decode runs in ONE task
-    # regardless of core count (measured 8.5 s -> 3.6 s on
-    # dedup_image_phash at sf0.1). Pin the exchange and that it only
-    # carries the parameter projection, not payload bytes.
-    import __spark_entry__ as entry_mod
-
-    # With enough rows for the width cap not to bind, the round-robin
-    # exchange appears below the Python stage (no payload column
-    # exists yet when rows are spread).
-    from net_spider_spark import sizing
-
-    wide_n = sizing.SPREAD_ROWS_PER_TASK * 1000
-    ev = (
-        entry_mod._events_typed(spark, "/root/testdata/sf0.001")
-        .where(F.col("event_id") % 25 == 21)
-        .select("event_id")
-    )
-    plan = plan_of(entry_mod._synth_class_media(ev, n_rows=wide_n))
-    assert "RoundRobinPartitioning" in plan, "class-media spread lost"
-    assert plan.index("RoundRobinPartitioning") > plan.index(
-        "MapInPandas"
-    ), "exchange above the synth stage"
-
-
-def test_replay_state_partitions_scale_adaptive():
-    # Stateful-replay shuffle width follows the SOURCE size, floored
-    # for compute parallelism and capped by the session parallelism —
-    # never a constant tuned to one core count (a 32-wide state layout
-    # for kilobytes of state measured ~2x the whole replay wall).
-    import __spark_entry__ as entry_mod
-
-    class _SC:
-        defaultParallelism = 32
-
-    class _Spark:
-        sparkContext = _SC()
-
-    f = entry_mod._replay_state_partitions
-    assert f(_Spark(), 2 << 20) == 8          # 2 MB file -> floor
-    assert f(_Spark(), 100 << 30) == 32       # 100 GB -> capped at dp
-    assert f(_Spark(), None) == 32            # unknown -> prior cap
-    _SC.defaultParallelism = 4
-    assert f(_Spark(), 2 << 20) == 4          # floor respects small dp
-    _SC.defaultParallelism = 32
-
-    import os
-
-    os.environ["SPARK_GRAFT_STREAM_STATE_PARTS"] = "12"
-    try:
-        assert f(_Spark(), 2 << 20) == 12     # deployment override
-    finally:
-        del os.environ["SPARK_GRAFT_STREAM_STATE_PARTS"]
-
-
-def test_spread_width_row_count_aware():
-    # Compute-spread width is capped at ceil(n / rows_per_task) when
-    # the caller knows the row count: 32 tasks under a few thousand
-    # rows is pure scheduling overhead (several spread queries ran
-    # FASTER at 8 cores than 32 — round-11 verdict item 3). At corpus
-    # scale the cap never binds, so a real cluster keeps full width.
-    from net_spider_spark import sizing
-
-    class _SC:
-        defaultParallelism = 32
-
-    class _Spark:
-        sparkContext = _SC()
-
-    rpt = sizing.SPREAD_ROWS_PER_TASK
-    assert sizing.spread_width(_Spark(), None) == 32       # no hint
-    assert sizing.spread_width(_Spark(), 0) == 1           # empty input
-    assert sizing.spread_width(_Spark(), rpt * 4) == 4     # capped
-    assert sizing.spread_width(_Spark(), rpt * 1000) == 32  # corpus scale
-    _SC.defaultParallelism = 8
-    assert sizing.spread_width(_Spark(), rpt * 1000) == 8  # dp bound
-    _SC.defaultParallelism = 32
-
-
-def test_spread_width_reaches_media_plans(spark):
-    # The media queries' spread exchanges carry the footer-derived
-    # width hint: at sf0.001 the %25 filters keep ~40 event rows, so
-    # the spread collapses to ONE task (Catalyst elides the 1-wide
-    # round-robin exchange entirely) instead of defaultParallelism
-    # tasks of scheduling overhead.
-    import __spark_entry__ as entry_mod
-
-    qs = entry_mod.queries()
-    plan = plan_of(qs["multimodal_png_decode"](spark, "/root/testdata/sf0.001"))
-    assert "RoundRobinPartitioning" not in plan, "tiny input over-spread"
-    # an explicit mid-size hint produces exactly the capped width
-    from net_spider_spark import sizing
-
-    ev = (
-        entry_mod._events_typed(spark, "/root/testdata/sf0.001")
-        .select("event_id")
-    )
-    plan = plan_of(
-        entry_mod._spread_ids(ev, n_rows=sizing.SPREAD_ROWS_PER_TASK * 2)
-    )
-    assert "RoundRobinPartitioning(2)" in plan, "width hint not applied"

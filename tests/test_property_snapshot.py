@@ -7,9 +7,13 @@ the reference applies between Weaver and the live Gremlin server,
 extended with randomized inputs the reference never had.
 """
 
+import functools
+from unittest import mock
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from net_spider_spark import sizing, traverse
 from net_spider_spark.findings import FoundLink, FoundNode, findings_to_df
 from net_spider_spark.interval import Interval
 from net_spider_spark.pyweaver import PyFinding, PyLink, snapshot as py_snapshot
@@ -202,6 +206,42 @@ def test_bounded_traversal_matches_spec(spark, fs, starts, max_hops):
     (observed, not visited) so the output graph stays closed over its
     links — engine vs spec across random graphs and bounds."""
     check(spark, fs, "overwrite", starts_from=starts, max_hops=max_hops)
+
+
+def check_distributed(spark, pyfindings, **kw):
+    """:func:`check` with get_snapshot's BFS forced onto the distributed
+    frontier loop (the default threshold always takes the driver-local
+    path at these sizes). Patched per example, inside the test body:
+    hypothesis rejects function-scoped fixtures such as monkeypatch."""
+    n_log = len(sizing.DECISION_LOG)
+    with mock.patch(
+        "net_spider_spark.snapshot.reachable_nodes",
+        functools.partial(traverse.reachable_nodes, local_threshold=0),
+    ):
+        check(spark, pyfindings, "overwrite", **kw)
+    # One BFS per snapshot, on the distributed loop unless it has no
+    # edges at all (zero rows pass even a zero threshold).
+    (bfs,) = [d for d in sizing.DECISION_LOG[n_log:] if d["tag"] == "bfs"]
+    assert bfs["local"] == (bfs["n_rows"] == 0)
+
+
+@given(
+    fs=findings_st,
+    starts=st.lists(st.sampled_from(NODE_IDS + ["zz"]), min_size=1, max_size=2),
+)
+@_settings
+def test_distributed_traversal_matches_spec(spark, fs, starts):
+    check_distributed(spark, fs, starts_from=starts)
+
+
+@given(
+    fs=findings_st,
+    starts=st.lists(st.sampled_from(NODE_IDS), min_size=1, max_size=2),
+    max_hops=st.integers(min_value=0, max_value=3),
+)
+@_settings
+def test_distributed_bounded_traversal_matches_spec(spark, fs, starts, max_hops):
+    check_distributed(spark, fs, starts_from=starts, max_hops=max_hops)
 
 
 @given(

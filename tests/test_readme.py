@@ -9,7 +9,6 @@ run the new text.
 """
 
 import os
-import re
 import shlex
 import shutil
 
@@ -93,15 +92,3 @@ def test_readme_cli_block(spark, tmp_path):
     assert rc == 0
     out = open(f"{tmp_path}/topology.graphml", encoding="utf-8").read()
     assert out.startswith('<?xml version="1.0"') and "<node " in out
-
-
-def test_readme_query_count_matches_entry():
-    # the README advertises the driver-contract size; keep it honest
-    import __spark_entry__ as entry_mod
-
-    text = open(README, encoding="utf-8").read()
-    m = re.search(r"`queries\(\)`\n\((\d+) operators\)", text)
-    if m is None:
-        m = re.search(r"\((\d+) operators\)", text)
-    assert m, "README no longer states the queries() count"
-    assert int(m.group(1)) == len(entry_mod.queries())

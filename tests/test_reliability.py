@@ -69,10 +69,14 @@ def test_reliable_mode_writes_stable_checkpoints(reliable_session):
 def test_operators_agree_across_modes(spark, tmp_path, reliable_session):
     """A representative slice of the materialize()-using operators —
     BFS traversal (loop truncation), MinHash representatives (shared
-    shingle table), BM25 (corpus stats) — must produce identical
-    results in both modes and leave the CacheManager empty."""
+    shingle table), BM25 (corpus stats), the overwrite snapshot (its
+    policy output ``kept``) and a traversal snapshot (its link
+    samples) — must produce identical results in both modes and leave
+    the CacheManager empty."""
+    from net_spider_spark.findings import FoundLink, FoundNode, findings_to_df
     from net_spider_spark.pipeline.dedup import dedup_representatives
     from net_spider_spark.pipeline.text import bm25_search
+    from net_spider_spark.snapshot import Query, get_snapshot
     from net_spider_spark.traverse import reachable_nodes
 
     spark, _ = reliable_session
@@ -86,6 +90,15 @@ def test_operators_agree_across_modes(spark, tmp_path, reliable_session):
     edges = spark.createDataFrame(
         [(f"n{i}", f"n{i + 1}") for i in range(6)] + [("x1", "x2")],
         "src string, dst string",
+    )
+    findings = findings_to_df(
+        spark,
+        [
+            FoundNode("a", 10, [FoundLink("b"), FoundLink("c", "to_subject")]),
+            FoundNode("b", 20, [FoundLink("a", "bidirectional")]),
+            FoundNode("a", 30, [FoundLink("b")], {"k": "v"}),
+            FoundNode("c", 40, [FoundLink("d")]),
+        ],
     )
 
     def run_all():
@@ -103,7 +116,14 @@ def test_operators_agree_across_modes(spark, tmp_path, reliable_session):
             (r["doc_id"], round(r["score"], 9))
             for r in bm25_search(docs, ["alpha", "dup"]).limit(50).collect()
         )
-        return reach, reps, bm
+        snaps = []
+        for query in (
+            Query(found_node_policy="overwrite"),
+            Query(starts_from=["b"], max_hops=1),
+        ):
+            for frame in get_snapshot(findings, query):
+                snaps.append(sorted(str(r) for r in frame.collect()))
+        return reach, reps, bm, snaps
 
     reliable = run_all()
     assert _cache_manager_empty(spark)

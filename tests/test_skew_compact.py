@@ -1,72 +1,10 @@
-"""Salted join equivalence and history compaction."""
+"""History storage: compaction and latest-state folds."""
 
 import os
 
 from pyspark.sql import functions as F
 
 from net_spider_spark import ingest
-from net_spider_spark.skew import salted_join
-
-
-def test_salted_join_matches_plain_join(spark):
-    # one hot key (90% of rows) + a long tail
-    big = spark.createDataFrame(
-        [(("hot" if i % 10 else f"k{i}"), i) for i in range(1000)],
-        "k string, v long",
-    )
-    small = spark.createDataFrame(
-        [("hot", 1.5), ("k10", 2.5), ("k20", 3.5), ("absent", 9.9)],
-        "k string, w double",
-    )
-    plain = {(r["k"], r["v"], r["w"]) for r in big.join(small, "k").collect()}
-    salted = {
-        (r["k"], r["v"], r["w"])
-        for r in salted_join(big, small, "k", salt=4).collect()
-    }
-    assert salted == plain and len(plain) > 900
-
-    plain_left = {
-        (r["k"], r["v"], r["w"])
-        for r in big.join(small, "k", "left").collect()
-    }
-    salted_left = {
-        (r["k"], r["v"], r["w"])
-        for r in salted_join(big, small, "k", salt=4, how="left").collect()
-    }
-    assert salted_left == plain_left
-
-
-def test_salted_join_scatters_hot_key(spark):
-    big = spark.createDataFrame(
-        [("hot", i) for i in range(100)], "k string, v long"
-    )
-    small = spark.createDataFrame([("hot", 1.0)], "k string, w double")
-    b = big.withColumn(
-        "_salt", F.pmod(F.monotonically_increasing_id(), F.lit(8))
-    )
-    n_buckets = b.select("_salt").distinct().count()
-    assert n_buckets > 4  # the hot key really spreads across salts
-    assert salted_join(big, small, "k", salt=8).count() == 100
-
-
-def test_salted_join_map_columns_and_duplicate_rows(spark):
-    # MapType columns break hash-based salting (AnalysisException), and a
-    # hot key made of *identical* rows must still scatter across salts.
-    big = spark.createDataFrame(
-        [("hot", {"a": "1"})] * 200, "k string, attrs map<string,string>"
-    ).repartition(4)
-    small = spark.createDataFrame([("hot", 7)], "k string, w int")
-    out = salted_join(big, small, "k", salt=8)
-    assert out.count() == 200
-    scatter = (
-        big.withColumn(
-            "_salt", F.pmod(F.monotonically_increasing_id(), F.lit(8))
-        )
-        .select("_salt")
-        .distinct()
-        .count()
-    )
-    assert scatter > 4
 
 
 def _count_files(path):
