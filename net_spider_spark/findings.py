@@ -20,7 +20,6 @@ from dataclasses import dataclass, field
 from typing import Iterable, Mapping, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from net_spider_spark.model import FINDINGS_SCHEMA, LinkState
 from net_spider_spark.timestamp import Timestamp, to_epoch_ms
@@ -185,24 +184,4 @@ def found_node_from_json(text: str) -> FoundNode:
             )
             for nl in doc.get("neighbor_links") or []
         ],
-    )
-
-
-def findings_df_to_json(findings_df: DataFrame) -> DataFrame:
-    """Column of JSON documents mirroring the wire format (to_json is
-    JVM-side; no Python in the loop)."""
-    return findings_df.select(
-        F.to_json(
-            F.struct(
-                F.col("subject_node"),
-                F.struct(
-                    F.col("found_at").alias("epoch_time"),
-                    F.col("tz_offset_min"),
-                    F.col("tz_summer_only"),
-                    F.col("tz_name"),
-                ).alias("found_at"),
-                F.col("node_attrs"),
-                F.col("neighbor_links"),
-            )
-        ).alias("json")
     )

@@ -126,17 +126,6 @@ class Interval:
             pred = pred & (c <= hi if self.upper_inclusive else c < hi)
         return pred
 
-    def sql_predicate(self, col: str = "found_at") -> str:
-        """Same predicate as ANSI SQL text (for oracle parity checks)."""
-        parts = []
-        if not isinstance(self.lower, _NegInf):
-            op = ">=" if self.lower_inclusive else ">"
-            parts.append(f"{col} {op} {to_epoch_ms(self.lower)}")
-        if not isinstance(self.upper, _PosInf):
-            op = "<=" if self.upper_inclusive else "<"
-            parts.append(f"{col} {op} {to_epoch_ms(self.upper)}")
-        return " AND ".join(parts) if parts else "TRUE"
-
     def contains(self, value) -> bool:
         v = to_epoch_ms(value)
         if not isinstance(self.lower, _NegInf):

@@ -18,32 +18,46 @@ and its captured device logs):
   rows; a row without `` to `` is the DODAG-root entry; ``links: end
   of list`` terminator. One finding per parent, all sharing the
   block's timestamp; route_num only on the root's finding.
-* Error tolerance: any foreign line inside a block discards the whole
-  block (handleBlockError, :186-196) — relationally, a block is valid
-  iff the lines strictly between header and terminator are all member
-  rows.
+* Error tolerance: any foreign line between a header and its
+  terminator discards the whole block (handleBlockError, :186-196), and
+  so does a new header or the end of the file before the terminator.
+  Lines before a file's first header are ignored.
 
-Spark design: file = unit of parallelism (``wholetext`` read; device
-logs are many small-to-medium files). Line classification and field
-extraction are JVM-side regexes; block assembly is a per-file window
-cumsum plus conditional aggregates (no arrays of noise lines); only
-IPv6 canonicalization/prefix-substitution drops to an Arrow-batched
-pandas UDF (address math, ContikiNG.hs:239-243).
+Spark design: the file is the unit of parallelism (device logs are
+many small-to-medium files, and a block never spans two). One
+``wholetext`` read hands each file to one ``mapInPandas`` call, where a
+sequential line state machine — header, member rows, terminator —
+transcribes ``ContikiNG.hs`` and resolves addresses with the scalar
+``rpl/ipv6`` functions. At log scale the cost is Spark jobs, not
+lines, so the parse is one job and nothing downstream re-runs it.
+The map hands its rows to Spark as plain Python values (dicts for the
+attribute maps, tuples for link structs), so no Arrow schema is built
+by hand.
+
+Evaluation contract: the parse runs eagerly at call time, once, through
+``reliability.materialize`` (no CacheManager entry); both returned
+frames read its output, so appending them is one more job. Under the
+default ``local`` reliability mode the blocks are unreplicated:
+executor loss fails downstream actions instead of recomputing —
+re-call to recover. A head whose timestamp is out of range (``Feb 30``,
+hour 24, a minute count past 64 bits) fails the parse, as Spark's ANSI
+date and cast functions do.
 """
 
 from __future__ import annotations
 
+import re
+from datetime import datetime, timedelta
+from functools import partial
 from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
-from net_spider_spark.rpl import ipv6
-from net_spider_spark.rpl.findingid import finding_id_col
+from net_spider_spark.model import ATTRS_TYPE
 from net_spider_spark.reliability import materialize as _materialize
+from net_spider_spark.rpl import ipv6
 
 COOJA_HEAD_RE = r"^(\d+):(\d+)\.(\d+)\s+ID:(\d+)\s+(.*)$"
 SYSLOG_HEAD_RE = (
@@ -57,226 +71,219 @@ DIO_HEAD_RE = (
     r"MOP \d+ OCP \d+ rank (\d+) max-rank \d+, dioint (\d+)"
 )
 DIO_NBR_RE = r"^nbr: ([^,]+), +(\d+) => +\d+ -- *(\d+)(.*)$"
+DIO_END_RE = r"^nbr: end of list"
 DAO_HEAD_RE = r"^links: (\d+) routing links in total "
 DAO_LINK_RE = (
     r"^links: ((?:6G-)?[0-9a-fA-F:]+)"
     r"(?:\s+to\s+((?:6G-)?[0-9a-fA-F:]+) \(lifetime: (\d+) seconds\))?"
 )
+DAO_END_RE = r"^links: end of list"
 
 _MONTHS = ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
            "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"]
 
+# The patterns keep their java.util.regex meaning, which the findings
+# (and their finding_ids) were defined by: there `.` also stops at \r,
+# \x85, \u2028 and \u2029, and `$` may stand before one such trailing
+# character (a CRLF log's \r). Every `.` in them sits in a final
+# `(.*)$`, rewritten to match so.
+_EOL = "\r\x85\u2028\u2029"
 
-def _by_line_no(left, right):
-    # array_sort comparator: structs holding maps are not naturally
-    # orderable, so order explicitly by the captured line number.
-    return (
-        F.when(left["line_no"] < right["line_no"], -1)
-        .when(left["line_no"] > right["line_no"], 1)
-        .otherwise(0)
+
+def _compile(pattern: str) -> re.Pattern:
+    return re.compile(
+        pattern.replace("(.*)$", f"([^{_EOL}]*)[{_EOL}]?$"), re.ASCII
     )
 
 
-_ADDR_HALVES_TYPE = T.StructType(
+_COOJA, _SYSLOG, _MODULE = map(
+    _compile, (COOJA_HEAD_RE, SYSLOG_HEAD_RE, LOG_MODULE_RE)
+)
+_SPACES = re.compile(r"\s+", re.ASCII)
+_INT64_MAX = (1 << 63) - 1
+
+# (kind, pattern) in classification order; the first match wins.
+_KINDS = [
+    (kind, _compile(p))
+    for kind, p in [
+        ("dio_head", DIO_HEAD_RE), ("dio_end", DIO_END_RE),
+        ("dio_nbr", DIO_NBR_RE), ("dao_head", DAO_HEAD_RE),
+        ("dao_end", DAO_END_RE), ("dao_link", DAO_LINK_RE),
+    ]
+]
+_MEMBER = {"dio": "dio_nbr", "dao": "dao_link"}
+_END = {"dio": "dio_end", "dao": "dao_end"}
+
+# A neighbor or DIO subject address outside the ipv6 grammar leaves
+# its node ID null, so these node-ID columns are nullable.
+_LINK_TYPE = T.StructType(
     [
-        T.StructField("hi", T.LongType()),
-        T.StructField("lo", T.LongType()),
-        T.StructField("ok", T.BooleanType()),
+        T.StructField("target_node", T.StringType()),
+        T.StructField("link_state", T.StringType(), False),
+        T.StructField("link_attrs", ATTRS_TYPE, False),
+    ]
+)
+_PARSED_SCHEMA = T.StructType(
+    [
+        T.StructField("file", T.StringType()),
+        T.StructField("block_id", T.LongType()),
+        T.StructField("family", T.StringType()),
+        T.StructField("subject_node", T.StringType()),
+        T.StructField("found_at", T.LongType()),
+        T.StructField("node_attrs", ATTRS_TYPE, False),
+        T.StructField("neighbor_links", T.ArrayType(_LINK_TYPE, False), False),
     ]
 )
 
 
-@F.pandas_udf(_ADDR_HALVES_TYPE)
-def _addr_halves(addr: pd.Series) -> pd.DataFrame:
-    """Address text (incl. compact 6G- forms) -> 2×Long halves (SURVEY
-    C4): Arrow batch in, pure numpy/pandas string kernels, NO per-row
-    Python loop (ipv6.parse_ipv6_halves). ok=False = unparseable (the
-    halves stay non-null int64 — nullable ints decay to float64 across
-    Arrow and round the low bits)."""
-    return ipv6.parse_ipv6_halves(addr)
+def _cooja_ms(m: re.Match) -> int:
+    """``MM:SS.mmm`` simulator clock -> ms (the digits are plain
+    integers: ``02.5`` is 2 s 5 ms)."""
+    ms = (int(m[1]) * 60 + int(m[2])) * 1000 + int(m[3])
+    if ms > _INT64_MAX:
+        raise ValueError(f"cooja timestamp overflows 64 bits: {m[0]!r}")
+    return ms
 
 
-@F.pandas_udf(T.StringType())
-def _halves_to_addr(hi: pd.Series, lo: pd.Series) -> pd.Series:
-    """2×Long halves -> canonical RFC 5952 text, vectorized
-    (ipv6.format_ipv6_halves)."""
-    import numpy as np
-
-    return ipv6.format_ipv6_halves(
-        hi.to_numpy(dtype=np.int64), lo.to_numpy(dtype=np.int64)
-    )
-
-
-def _canon_addr(col) -> F.Column:
-    """Canonicalize an address column through the 2×Long form."""
-    h = _addr_halves(col)
-    return F.when(
-        h.getField("ok"),
-        _halves_to_addr(h.getField("hi"), h.getField("lo")),
-    )
+def _syslog_ms(year: int, tz_offset_min: Optional[int], m: re.Match) -> int:
+    """``Mmm dd hh:mm:ss`` in ``year`` -> epoch ms, less the offset. A
+    60th second is the next minute's 0th (Spark's make_timestamp)."""
+    sec = int(m[5])
+    try:
+        t = datetime(year, _MONTHS.index(m[1]) + 1, int(m[2]), int(m[3]),
+                     int(m[4]), 0 if sec == 60 else sec)
+    except (ValueError, OverflowError) as e:
+        raise ValueError(f"invalid syslog timestamp {m[0][:15]!r}: {e}")
+    t += timedelta(minutes=sec == 60)
+    epoch_s = (t - datetime(1970, 1, 1)) // timedelta(seconds=1)
+    return (epoch_s - (tz_offset_min or 0) * 60) * 1000
 
 
-def _resolve_neighbor_addr(subject, neighbor) -> F.Column:
-    """Neighbor resolution: compact decode + link-local prefix
-    substitution + canonicalize. The address MATH is Catalyst bitwise
-    on the hi/lo-64 columns — link-local test = top 10 bits of the
-    high half (``isLinkLocal``, IPv6.hs:26-31), prefix substitution =
-    replace the whole high half with the subject's
-    (``setNonLocalPrefix``, ContikiNG.hs:239-243) — with Python only at
-    the text<->halves edges (both vectorized)."""
-    s = _addr_halves(subject)
-    n = _addr_halves(neighbor)
-    link_local = (
-        F.shiftrightunsigned(n.getField("hi"), 54)
-        == F.lit(ipv6.LINK_LOCAL_PREFIX)
-    )
-    hi = F.when(link_local, s.getField("hi")).otherwise(n.getField("hi"))
-    return F.when(
-        s.getField("ok") & n.getField("ok"),
-        _halves_to_addr(hi, n.getField("lo")),
-    )
+def _classify(head: re.Pattern, stamp, line: str):
+    """One log line -> (kind, timestamp ms, body match); kind is
+    ``other`` for a line without a log head or a known body."""
+    m = head.match(line)
+    if m is None:
+        return "other", None, None
+    ts = stamp(m)
+    body = _MODULE.match(m[m.re.groups])
+    if body is not None:
+        for kind, pattern in _KINDS:
+            b = pattern.match(body[1])
+            if b is not None:
+                return kind, ts, b
+    return "other", ts, None
 
 
-def read_log_lines(spark: SparkSession, path) -> DataFrame:
-    """Log files -> (file, line_no, line). ``wholetext`` keeps per-file
-    line order without a global zipWithIndex. ``path``: glob string or
-    list of paths."""
-    paths = path if isinstance(path, list) else [path]
-    raw = spark.read.text(*paths, wholetext=True).select(
-        F.input_file_name().alias("file"), F.col("value")
-    )
-    return raw.select(
-        "file",
-        F.posexplode(F.split(F.col("value"), "\n")).alias("line_no", "line"),
-    )
-
-
-def _with_head(lines: DataFrame, head: str, year: Optional[int],
-               tz_offset_min: Optional[int]) -> DataFrame:
-    """Extract timestamp (epoch ms) and the post-head rest of line."""
-    if head == "cooja":
-        m = [F.regexp_extract("line", COOJA_HEAD_RE, i) for i in range(1, 6)]
-        ts = (
-            (m[0].cast("long") * 60 + m[1].cast("long")) * 1000 + m[2].cast("long")
+def _dio_findings(head: re.Match, members) -> list:
+    subject = ipv6.canonical(head[1])
+    links = []
+    for m in members:
+        blob = m[1].strip(" ")
+        parts = _SPACES.split(blob)
+        if len(parts) >= 2:
+            addr, rank = parts[0], parts[-1]
+        else:
+            # pNeighborAndRank's non_spaced case: a 5-digit rank glued
+            # to the address.
+            addr, rank = blob[: max(len(blob) - 5, 0)], blob[-5:]
+        flags = m[4]
+        kind = (
+            "preferred_parent" if flags[5:6] == "p"
+            else "parent_candidate" if flags[3:4] == "a"
+            else "other_neighbor"
         )
-        return lines.withColumn("_matched", F.col("line").rlike(COOJA_HEAD_RE)) \
-            .withColumn("ts_ms", F.when(F.col("_matched"), ts)) \
-            .withColumn("rest", F.when(F.col("_matched"), m[4]))
+        target = subject and ipv6.resolve_neighbor(subject, addr)
+        links.append((
+            target and f"dio://[{target}]",
+            # dioLinkState (DIO.hs:202-206): only the preferred parent
+            # is a live link; other rows carry attrs but state 'unused'.
+            "to_target" if kind == "preferred_parent" else "unused",
+            {"neighbor_type": kind, "neighbor_rank": rank, "metric": m[2]},
+        ))
+    attrs = {"rank": head[2], "dio_interval": head[3]}
+    return [(subject and f"dio://[{subject}]", attrs, links)]
+
+
+def _dao_findings(head: re.Match, members) -> list:
+    rows = [
+        (ipv6.canonical(m[1]), m[2] and ipv6.canonical(m[2]), m[3] or "")
+        for m in members
+    ]
+    # Root entry = first row without a (parseable) parent; a block
+    # lacking one yields nothing (rootAddressFailure).
+    roots = [child for child, parent, _ in rows if parent is None]
+    if not roots:
+        return []
+    by_parent: dict = {}
+    for child, parent, lifetime in rows:
+        if parent is not None:
+            by_parent.setdefault(parent, []).append((
+                child and f"dao://[{child}]", "to_target",
+                {"path_lifetime_sec": lifetime},
+            ))
+    return [
+        (
+            f"dao://[{parent}]",
+            # Non-root: `DAONode Nothing` (DAO.hs:55-61). The presence
+            # marker (model.INTERNAL_ATTR_KEYS) keeps "DAONode with no
+            # route count" distinguishable from "no DAONode" through
+            # combine_nodes and the JSON wire; GraphML/pangraph drop it
+            # like `toAttributes = []`.
+            {"dao_route_num": head[1]} if parent == roots[0]
+            else {"dao_present": "true"},
+            links,
+        )
+        for parent, links in by_parent.items()
+    ]
+
+
+def _parse_file(head: re.Pattern, stamp, file: str, text: str):
+    """Rows of ``_PARSED_SCHEMA`` for one file: the line state machine.
+    ``block_id`` is the 1-based ordinal of the header in the file."""
+    block_id, block = 0, None  # block: (family, ts, head match, members)
+    for line in text.split("\n"):
+        kind, ts, m = _classify(head, stamp, line)
+        if kind in ("dio_head", "dao_head"):
+            block_id += 1
+            block = (kind[:3], ts, m, [])  # kind[:3]: "dio" or "dao"
+        elif block is None:
+            continue
+        elif kind == _MEMBER[block[0]]:
+            block[3].append(m)
+        else:
+            family, found_at, head_m, members = block
+            block = None
+            if kind == _END[family]:
+                build = _dio_findings if family == "dio" else _dao_findings
+                for subject, attrs, links in build(head_m, members):
+                    yield (file, block_id, family, subject, found_at, attrs, links)
+
+
+def _parse_frames(head: str, year, tz_offset_min, frames):
+    """The ``mapInPandas`` body: (file, value) frames -> frames of
+    ``_PARSED_SCHEMA`` rows."""
+    import pandas as pd
+
+    pattern, stamp = _head(head, year, tz_offset_min)
+    for frame in frames:
+        rows = [
+            row
+            for file, text in zip(frame["file"], frame["value"])
+            for row in _parse_file(pattern, stamp, file, text)
+        ]
+        yield pd.DataFrame(rows, columns=_PARSED_SCHEMA.names)
+
+
+def _head(head: str, year: Optional[int], tz_offset_min: Optional[int]):
+    """(head pattern, timestamp function of its match) for a format."""
+    if head == "cooja":
+        return _COOJA, _cooja_ms
     if head == "syslog":
         if year is None:
             raise ValueError("syslog head needs an explicit year (format has none)")
-        m = [F.regexp_extract("line", SYSLOG_HEAD_RE, i) for i in range(1, 7)]
-        month = F.array_position(
-            F.array(*[F.lit(x) for x in _MONTHS]), m[0]
-        ).cast("int")
-        epoch_s = F.to_unix_timestamp(
-            F.make_timestamp_ntz(
-                F.lit(year), month, m[1].cast("int"),
-                m[2].cast("int"), m[3].cast("int"), m[4].cast("decimal(16,6)"),
-            )
-        )
-        if tz_offset_min is not None:
-            epoch_s = epoch_s - F.lit(tz_offset_min * 60)
-        return lines.withColumn("_matched", F.col("line").rlike(SYSLOG_HEAD_RE)) \
-            .withColumn("ts_ms", F.when(F.col("_matched"), epoch_s * 1000)) \
-            .withColumn("rest", F.when(F.col("_matched"), m[5]))
+        return _SYSLOG, partial(_syslog_ms, year, tz_offset_min)
     raise ValueError(f"unknown head format: {head}")
-
-
-def _classified(lines: DataFrame) -> DataFrame:
-    """Strip the ``[LEVEL: MODULE]`` prefix and classify each line."""
-    body = F.regexp_extract("rest", LOG_MODULE_RE, 1)
-    df = lines.withColumn(
-        "body", F.when(F.col("rest").rlike(LOG_MODULE_RE), body)
-    )
-    b = F.col("body")
-    kind = (
-        F.when(b.isNull(), "other")
-        .when(b.rlike(DIO_HEAD_RE), "dio_head")
-        .when(b.rlike(r"^nbr: end of list"), "dio_end")
-        .when(b.rlike(DIO_NBR_RE), "dio_nbr")
-        .when(b.rlike(DAO_HEAD_RE), "dao_head")
-        .when(b.rlike(r"^links: end of list"), "dao_end")
-        .when(b.rlike(DAO_LINK_RE), "dao_link")
-        .otherwise("other")
-    )
-    return df.withColumn("kind", kind)
-
-
-def _with_blocks(df: DataFrame) -> DataFrame:
-    is_head = F.col("kind").isin("dio_head", "dao_head")
-    w = (
-        Window.partitionBy("file")
-        .orderBy("line_no")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return df.withColumn("block_id", F.sum(is_head.cast("int")).over(w)).where(
-        F.col("block_id") > 0
-    )
-
-
-def _block_table(df: DataFrame) -> DataFrame:
-    """Per-(file, block): head fields + terminator/garbage positions.
-
-    Validity (= handleBlockError semantics): the terminator exists and
-    no foreign line sits between head and terminator.
-    """
-    is_head = F.col("kind").isin("dio_head", "dao_head")
-    k = F.col("kind")
-    agg = df.groupBy("file", "block_id").agg(
-        F.max(F.when(is_head, k)).alias("block_type"),
-        F.max(F.when(is_head, F.col("line_no"))).alias("head_no"),
-        F.max(F.when(is_head, F.col("ts_ms"))).alias("ts_ms"),
-        F.max(
-            F.when(k == "dio_head", F.regexp_extract("body", DIO_HEAD_RE, 1))
-        ).alias("self_addr_raw"),
-        F.max(
-            F.when(k == "dio_head", F.regexp_extract("body", DIO_HEAD_RE, 2))
-        ).alias("rank"),
-        F.max(
-            F.when(k == "dio_head", F.regexp_extract("body", DIO_HEAD_RE, 3))
-        ).alias("dio_interval"),
-        F.max(
-            F.when(k == "dao_head", F.regexp_extract("body", DAO_HEAD_RE, 1))
-        ).alias("route_num"),
-        F.min(F.when(k == "dio_end", F.col("line_no"))).alias("dio_end_no"),
-        F.min(F.when(k == "dao_end", F.col("line_no"))).alias("dao_end_no"),
-        F.min(
-            F.when(~is_head & ~k.isin("dio_nbr", "dio_end"), F.col("line_no"))
-        ).alias("bad_dio_no"),
-        F.min(
-            F.when(~is_head & ~k.isin("dao_link", "dao_end"), F.col("line_no"))
-        ).alias("bad_dao_no"),
-    )
-    end_no = F.when(F.col("block_type") == "dio_head", F.col("dio_end_no")).otherwise(
-        F.col("dao_end_no")
-    )
-    bad_no = F.when(F.col("block_type") == "dio_head", F.col("bad_dio_no")).otherwise(
-        F.col("bad_dao_no")
-    )
-    return (
-        agg.withColumn("end_no", end_no)
-        .withColumn("bad_no", bad_no)
-        .where(
-            F.col("end_no").isNotNull()
-            & (F.col("bad_no").isNull() | (F.col("bad_no") > F.col("end_no")))
-        )
-        .withColumn("subject_addr", _canon_addr(F.col("self_addr_raw")))
-    )
-
-
-def _finding_shape(df: DataFrame) -> DataFrame:
-    """Project to model.FINDINGS_SCHEMA column set."""
-    return df.select(
-        F.xxhash64("file", "block_id", "subject_node").alias("finding_id"),
-        "subject_node",
-        F.col("ts_ms").alias("found_at"),
-        F.lit(None).cast("int").alias("tz_offset_min"),
-        F.lit(None).cast("boolean").alias("tz_summer_only"),
-        F.lit(None).cast("string").alias("tz_name"),
-        "node_attrs",
-        "neighbor_links",
-    )
 
 
 def parse_contiki_logs(
@@ -288,191 +295,32 @@ def parse_contiki_logs(
 ) -> tuple[DataFrame, DataFrame]:
     """Parse RPL logs -> (dio_findings, dao_findings), both in
     model.FINDINGS_SCHEMA with FindingID node IDs (``parseFile``).
+    ``path``: a glob string or a list of paths.
 
-    Evaluation contract: the line-classification pass materializes
-    eagerly at call time (``localCheckpoint``); blocks are
-    unreplicated, so executor loss fails downstream actions instead of
-    recomputing — re-call to recover.
+    One job parses every file at call time; see the module docstring
+    for the evaluation contract. ``finding_id`` is
+    ``xxhash64(file, block_id, subject_node)``.
     """
-    lines = read_log_lines(spark, path)
-    classified = _with_blocks(
-        _classified(_with_head(lines, head, year, tz_offset_min))
+    _head(head, year, tz_offset_min)  # reject a bad format at call time
+    files = spark.read.text(path, wholetext=True).select(
+        F.input_file_name().alias("file"), F.col("value")
     )
-    # Both returned findings tables re-read the classified lines and
-    # the block table several times; localCheckpoint materializes the
-    # parse once with RDD-owned blocks (freed by the ContextCleaner
-    # when the caller drops the results) — persist() would leave an
-    # ownerless CacheManager entry alive for the whole session.
-    classified = classified.transform(_materialize)
-    blocks = _block_table(classified).transform(_materialize)
-
-    # ---- DIO findings: one per valid dio block ------------------------
-    dio_blocks = blocks.where(F.col("block_type") == "dio_head")
-    nbr = (
-        classified.where(F.col("kind") == "dio_nbr")
-        .join(
-            dio_blocks.select(
-                "file", "block_id", "subject_addr", "end_no"
-            ),
-            ["file", "block_id"],
-        )
-        .where(F.col("line_no") < F.col("end_no"))
+    parsed = files.mapInPandas(
+        partial(_parse_frames, head, year, tz_offset_min), _PARSED_SCHEMA
     )
-    nbr = nbr.withColumn(
-        "_blob", F.trim(F.regexp_extract("body", DIO_NBR_RE, 1))
+    parsed = parsed.select(
+        F.xxhash64("file", "block_id", "subject_node").alias("finding_id"),
+        "family",
+        "subject_node",
+        "found_at",
+        F.lit(None).cast("int").alias("tz_offset_min"),
+        F.lit(None).cast("boolean").alias("tz_summer_only"),
+        F.lit(None).cast("string").alias("tz_name"),
+        "node_attrs",
+        "neighbor_links",
+    ).transform(_materialize)
+    dio, dao = (
+        parsed.where(F.col("family") == family).drop("family")
+        for family in ("dio", "dao")
     )
-    blob = F.col("_blob")
-    parts = F.split(blob, r"\s+")
-    # 5-digit ranks can be glued to the address (pNeighborAndRank
-    # non_spaced case): split the last 5 chars off.
-    addr_raw = F.when(F.size(parts) >= 2, F.element_at(parts, 1)).otherwise(
-        F.substring(blob, 1, F.length(blob) - 5)
-    )
-    rank_raw = F.when(F.size(parts) >= 2, F.element_at(parts, -1)).otherwise(
-        F.substring(blob, -5, 5)
-    )
-    flags = F.rpad(F.regexp_extract("body", DIO_NBR_RE, 4), 6, " ")
-    acceptable = F.substring(flags, 4, 1) == "a"
-    preferred = F.substring(flags, 6, 1) == "p"
-    nbr_resolved = nbr.select(
-        "file",
-        "block_id",
-        "line_no",
-        _resolve_neighbor_addr(F.col("subject_addr"), addr_raw).alias("target_addr"),
-        rank_raw.alias("neighbor_rank"),
-        F.regexp_extract("body", DIO_NBR_RE, 2).alias("metric"),
-        F.when(preferred, "preferred_parent")
-        .when(acceptable, "parent_candidate")
-        .otherwise("other_neighbor")
-        .alias("neighbor_type"),
-    )
-    link_struct = F.struct(
-        finding_id_col(F.lit("dio"), F.col("target_addr")).alias("target_node"),
-        # dioLinkState (DIO.hs:202-206): only the preferred parent is a
-        # live link; other rows carry attrs but state 'unused'.
-        F.when(F.col("neighbor_type") == "preferred_parent", "to_target")
-        .otherwise("unused")
-        .alias("link_state"),
-        F.map_from_arrays(
-            F.array(F.lit("neighbor_type"), F.lit("neighbor_rank"), F.lit("metric")),
-            F.array(F.col("neighbor_type"), F.col("neighbor_rank"), F.col("metric")),
-        ).alias("link_attrs"),
-    )
-    nbr_agg = (
-        nbr_resolved.withColumn("_ls", link_struct)
-        .groupBy("file", "block_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("line_no"), F.col("_ls"))),
-                _by_line_no,
-            ).alias("_sorted")
-        )
-        .select(
-            "file", "block_id", F.col("_sorted._ls").alias("neighbor_links")
-        )
-    )
-    dio_findings = (
-        dio_blocks.join(nbr_agg, ["file", "block_id"], "left")
-        .select(
-            "file",
-            "block_id",
-            finding_id_col(F.lit("dio"), F.col("subject_addr")).alias("subject_node"),
-            "ts_ms",
-            F.map_from_arrays(
-                F.array(F.lit("rank"), F.lit("dio_interval")),
-                F.array(F.col("rank"), F.col("dio_interval")),
-            ).alias("node_attrs"),
-            F.coalesce(
-                F.col("neighbor_links"),
-                F.array().cast(
-                    "array<struct<target_node:string,link_state:string,"
-                    "link_attrs:map<string,string>>>"
-                ),
-            ).alias("neighbor_links"),
-        )
-    )
-
-    # ---- DAO findings: one per (valid dao block, parent) --------------
-    dao_blocks = blocks.where(F.col("block_type") == "dao_head")
-    dao_rows = (
-        classified.where(F.col("kind") == "dao_link")
-        .join(
-            dao_blocks.select("file", "block_id", "end_no", "route_num"),
-            ["file", "block_id"],
-        )
-        .where(F.col("line_no") < F.col("end_no"))
-        .select(
-            "file",
-            "block_id",
-            "line_no",
-            "route_num",
-            _canon_addr(F.regexp_extract("body", DAO_LINK_RE, 1)).alias("child"),
-            _canon_addr(
-                F.when(
-                    F.regexp_extract("body", DAO_LINK_RE, 2) != "",
-                    F.regexp_extract("body", DAO_LINK_RE, 2),
-                )
-            ).alias("parent"),
-            F.regexp_extract("body", DAO_LINK_RE, 3).alias("lifetime"),
-        )
-    )
-    # Root entry = first row without a parent; blocks lacking one are
-    # discarded (rootAddressFailure).
-    roots = (
-        dao_rows.where(F.col("parent").isNull())
-        .groupBy("file", "block_id")
-        .agg(F.min_by("child", "line_no").alias("root_addr"))
-    )
-    child_links = (
-        dao_rows.where(F.col("parent").isNotNull())
-        .join(roots, ["file", "block_id"])
-        .withColumn(
-            "_ls",
-            F.struct(
-                finding_id_col(F.lit("dao"), F.col("child")).alias("target_node"),
-                F.lit("to_target").alias("link_state"),
-                F.map_from_arrays(
-                    F.array(F.lit("path_lifetime_sec")), F.array(F.col("lifetime"))
-                ).alias("link_attrs"),
-            ),
-        )
-    )
-    dao_findings = (
-        child_links.groupBy("file", "block_id", "parent")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("line_no"), F.col("_ls"))),
-                _by_line_no,
-            ).alias("_sorted"),
-            F.max("route_num").alias("route_num"),
-            F.max("root_addr").alias("root_addr"),
-        )
-        .join(dao_blocks.select("file", "block_id", "ts_ms"), ["file", "block_id"])
-        .select(
-            "file",
-            "block_id",
-            finding_id_col(F.lit("dao"), F.col("parent")).alias("subject_node"),
-            "ts_ms",
-            F.when(
-                F.col("parent") == F.col("root_addr"),
-                F.map_from_arrays(
-                    F.array(F.lit("dao_route_num")), F.array(F.col("route_num"))
-                ),
-            )
-            .otherwise(
-                # Non-root: `DAONode Nothing` (DAO.hs:55-61). The
-                # presence marker (model.INTERNAL_ATTR_KEYS) keeps
-                # "DAONode with no route count" distinguishable from
-                # "no DAONode" through combine_nodes and the JSON wire;
-                # GraphML/pangraph drop it like `toAttributes = []`.
-                F.map_from_arrays(
-                    F.array(F.lit("dao_present")), F.array(F.lit("true"))
-                )
-            )
-            .alias("node_attrs"),
-            F.col("_sorted._ls").alias("neighbor_links"),
-        )
-    )
-
-    out = (_finding_shape(dio_findings), _finding_shape(dao_findings))
-    return out
+    return dio, dao

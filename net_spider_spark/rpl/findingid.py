@@ -3,43 +3,18 @@
 Parity target: ``net-spider-rpl/src/NetSpider/RPL/FindingID.hs:81-102``
 — node ID = finding type (dio|dao) x IPv6 address, rendered
 ``"dio://[fd00::1]"``. The engine keeps node IDs as strings, so the
-rendered form IS the ID; helpers parse/format and strip to the bare
-address (used by the Combined layer, Combined.hs:43-48).
+rendered form IS the ID (the log parser renders it, ``rpl/contiki.py``);
+the helper here strips it to the bare address (used by the Combined
+layer, Combined.hs:43-48).
 """
 
 from __future__ import annotations
 
-import re
-from typing import Optional
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-FINDING_TYPES = ("dio", "dao")
-
-_FID_RE = re.compile(r"^(dio|dao)://\[([^\]]+)\]$")
-
-
-def make_finding_id(ftype: str, addr: str) -> str:
-    if ftype not in FINDING_TYPES:
-        raise ValueError(f"unknown finding type: {ftype}")
-    return f"{ftype}://[{addr}]"
-
-
-def parse_finding_id(text: str) -> Optional[tuple[str, str]]:
-    m = _FID_RE.match(text)
-    return (m.group(1), m.group(2)) if m else None
-
-
-def finding_id_col(ftype: Column, addr: Column) -> Column:
-    """Column-level rendering."""
-    return F.concat(ftype, F.lit("://["), addr, F.lit("]"))
 
 
 def address_of(col: Column) -> Column:
     """Bare IPv6 address from a FindingID column (``ipv6Only``)."""
     return F.regexp_extract(col, r"^(?:dio|dao)://\[([^\]]+)\]$", 1)
 
-
-def type_of(col: Column) -> Column:
-    return F.regexp_extract(col, r"^(dio|dao)://", 1)

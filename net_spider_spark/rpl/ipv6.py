@@ -6,23 +6,34 @@ of ``net-spider-rpl/src/NetSpider/RPL/ContikiNG.hs:301-341``
 (Contiki-NG's log compression prints neighbor addresses as ``6G-nnn``
 node IDs or 4-hex-digit suffixes).
 
-Addresses are carried as canonical RFC 5952 strings in DataFrames
-(stable, joinable) and as 128-bit ints inside the vectorized
-resolution step. Address math happens in an Arrow-batched pandas
-function during log parsing only — snapshot queries never touch it.
+Addresses are 128-bit Python ints here and canonical RFC 5952 strings
+everywhere else (stable, joinable). The log parser calls these scalar
+functions once per address inside its per-file pass
+(``rpl/contiki.py``), and the CLI uses them to canonicalize start
+nodes; snapshot queries never touch them.
+
+Grammar (the reference's log grammar, checked before any conversion):
+a ``6G-`` body is exactly 3 ASCII decimal digits or 4 ASCII hex digits
+(the prefix is case-sensitive, the hex is not), and a full address is
+ASCII hex digits and colons only -- no zone ID and no dotted-quad IPv4
+tail, which Python's ``ipaddress`` would otherwise accept.
 """
 
 from __future__ import annotations
 
 import ipaddress
+import re
 from typing import Optional
 
 LINK_LOCAL_PREFIX = 0xFE80 >> 6  # top 10 bits fe80::/10
 
+_COMPACT_RE = re.compile(r"6G-(?:([0-9]{3})|([0-9a-fA-F]{4}))")
+_FULL_RE = re.compile(r"[0-9a-fA-F:]+")
+
 
 def parse_ipv6(text: str) -> int:
     """Parse an IPv6 address (full or Contiki compact form) to a
-    128-bit int.
+    128-bit int; ValueError outside the module's grammar.
 
     Compact forms (``6G-`` prefix): 3 decimal digits = simulator node
     ID in the low 32 bits; 4 hex digits = low 16 bits
@@ -30,12 +41,14 @@ def parse_ipv6(text: str) -> int:
     """
     text = text.strip()
     if text.startswith("6G-"):
-        body = text[3:]
-        if len(body) == 3 and body.isdigit():
-            return int(body)  # fromWord32s 0 0 0 nid
-        if len(body) == 4:
-            return int(body, 16)  # fromWord16s 0..0 addr
-        raise ValueError(f"invalid compact address: {text!r}")
+        m = _COMPACT_RE.fullmatch(text)
+        if m is None:
+            raise ValueError(f"invalid compact address: {text!r}")
+        if m.group(1) is not None:
+            return int(m.group(1))  # fromWord32s 0 0 0 nid
+        return int(m.group(2), 16)  # fromWord16s 0..0 addr
+    if not _FULL_RE.fullmatch(text):
+        raise ValueError(f"invalid IPv6 address: {text!r}")
     return int(ipaddress.IPv6Address(text))
 
 
@@ -74,231 +87,20 @@ def set_non_local_prefix(subject: int, neighbor: int) -> int:
     return neighbor
 
 
+def canonical(text: str) -> Optional[str]:
+    """Canonical text of an address, or None outside the grammar."""
+    try:
+        return format_ipv6(parse_ipv6(text))
+    except ValueError:
+        return None
+
+
 def resolve_neighbor(subject_text: str, neighbor_text: str) -> Optional[str]:
     """Full neighbor resolution: parse (incl. compact), substitute the
     subject's prefix for link-local, canonicalize. None on bad input."""
     try:
         subject = parse_ipv6(subject_text)
         neighbor = parse_ipv6(neighbor_text)
-    except (ValueError, ipaddress.AddressValueError):
+    except ValueError:
         return None
     return format_ipv6(set_non_local_prefix(subject, neighbor))
-
-
-# ---------------------------------------------------------------------------
-# Vectorized address path (SURVEY C4's 2×Long form): whole-Series parse
-# to hi/lo 64-bit halves and canonical formatting back, pure numpy /
-# pandas string kernels — NO per-element Python loop (the only loops
-# below run over fixed positions: 16 nibbles, 8 groups, ≤28 zero-run
-# windows; each iteration is vectorized across all rows). The halves
-# are two's-complement int64 so they land directly in Spark LongType
-# columns, where link-local tests and prefix substitution run as
-# Catalyst bitwise expressions (rpl/contiki.py).
-# ---------------------------------------------------------------------------
-
-_GROUP_HEX = None
-
-
-def _group_hex():
-    """65536-entry uint16 -> lowercase-hex lookup (built once)."""
-    global _GROUP_HEX
-    if _GROUP_HEX is None:
-        import numpy as np
-
-        _GROUP_HEX = np.array(
-            [format(i, "x") for i in range(1 << 16)], dtype=object
-        )
-    return _GROUP_HEX
-
-
-def _hex_fixed(strs, width: int):
-    """(values uint64, ok mask) for a string array of fixed-width
-    lowercase hex; rows of any other length/content get ok=False."""
-    import numpy as np
-
-    n = len(strs)
-    arr = np.asarray(strs, dtype=f"U{width}")
-    codes = arr.view(np.uint32).reshape(n, width)
-    nib = codes.astype(np.int64) - 48
-    nib = np.where((codes >= 97) & (codes <= 102), codes.astype(np.int64) - 87, nib)
-    ok = ((nib >= 0) & (nib <= 15)).all(axis=1)
-    val = np.zeros(n, dtype=np.uint64)
-    for j in range(width):  # fixed-width loop, vectorized across rows
-        val = (val << np.uint64(4)) | np.where(ok, nib[:, j], 0).astype(np.uint64)
-    return val, ok
-
-
-def parse_ipv6_halves(texts):
-    """Vectorized :func:`parse_ipv6` over a pandas Series: returns a
-    DataFrame with int64 columns ``hi``/``lo`` (the address's 64-bit
-    halves as two's-complement signed values, Spark LongType ready)
-    and boolean ``ok``. Invalid/None inputs get ok=False with ZERO
-    halves rather than nulls — a nullable int64 crossing the Arrow
-    boundary decays to float64 and silently rounds the low bits.
-    Handles the compact ``6G-`` forms and ``::``-compressed full
-    addresses (no zone IDs or embedded IPv4 — the reference's log
-    grammar has neither)."""
-    import numpy as np
-    import pandas as pd
-
-    raw = texts.astype("string").str.strip()
-    s = raw.str.lower()
-    n = len(s)
-    idx = s.index
-    na = s.isna().to_numpy()
-    raw = raw.fillna("")
-    s = s.fillna("")
-    hi = np.zeros(n, dtype=np.uint64)
-    lo = np.zeros(n, dtype=np.uint64)
-    valid = np.zeros(n, dtype=bool)
-
-    # Compact forms (ContikiNG.hs:304-341): the "6G-" prefix is
-    # case-sensitive in the reference grammar (P.string "6G-"); the
-    # hex body is not (isHexDigit) — so match the prefix on the raw
-    # text and the body on the lowercased one.
-    compact = raw.str.startswith("6G-").to_numpy() & ~na
-    body = s.str[3:]
-    dec3 = compact & body.str.fullmatch(r"[0-9]{3}").fillna(False).to_numpy()
-    hex4 = (
-        compact
-        & body.str.fullmatch(r"[0-9a-f]{4}").fillna(False).to_numpy()
-        & ~dec3
-    )
-    if dec3.any():
-        lo[dec3] = pd.to_numeric(body[dec3]).to_numpy().astype(np.uint64)
-        valid[dec3] = True
-    if hex4.any():
-        val, ok = _hex_fixed(body[hex4].to_numpy(dtype=object), 4)
-        lo[hex4] = val
-        valid[hex4] = ok
-
-    # Full addresses: expand '::', split to 8 groups, hex-decode —
-    # the whole pipeline is skipped when the batch is all-compact/
-    # invalid (the common Contiki neighbor case is pure 6G- forms)
-    full = ~compact & ~na & (s != "").to_numpy()
-    if full.any():
-        cs = s.where(pd.Series(full, index=idx), "")
-        ok_chars = cs.str.fullmatch(r"[0-9a-f:]+").fillna(False).to_numpy()
-        bad_triple = cs.str.contains(":::", regex=False).fillna(False).to_numpy()
-        dc = cs.str.count("::").to_numpy()
-        has_dc = dc == 1
-        halves = cs.str.split("::")
-        left = halves.str[0].fillna("")
-        right = halves.str[1].fillna("")
-
-        def n_groups(p):
-            return np.where(
-                (p == "").to_numpy(), 0, p.str.count(":").fillna(0).to_numpy() + 1
-            )
-
-        nl, nr = n_groups(left), n_groups(right)
-        missing = 8 - nl - nr
-        shape_ok = np.where(has_dc, missing >= 1, (dc == 0) & (missing == 0))
-        mid = (
-            pd.Series(["0:"] * n, index=idx)
-            .str.repeat(np.clip(missing, 0, 8))
-            .str[:-1]
-            .fillna("")
-            .to_numpy(dtype=object)
-        )
-        lobj = left.to_numpy(dtype=object)
-        robj = right.to_numpy(dtype=object)
-        lpre = np.where(lobj != "", lobj + ":", "")
-        rsuf = np.where(robj != "", ":" + robj, "")
-        expanded = np.where(
-            has_dc, lpre + mid + rsuf, cs.to_numpy(dtype=object)
-        )
-        g = pd.Series(expanded, index=idx).str.split(":", expand=True)
-        for c in range(g.shape[1], 8):
-            g[c] = None
-        g8 = (
-            g[7].notna().to_numpy()
-            if 7 in g.columns
-            else np.zeros(n, dtype=bool)
-        )
-        for c in range(8, g.shape[1]):
-            g8 &= g[c].isna().to_numpy()
-        group_ok = np.ones(n, dtype=bool)
-        val128 = [None] * 8
-        for j in range(8):  # 8 groups, vectorized across rows
-            col = g[j].fillna("")
-            len_ok = col.str.len().between(1, 4).to_numpy()
-            v, ok = _hex_fixed(col.str.zfill(4).to_numpy(dtype=object), 4)
-            group_ok &= len_ok & ok
-            val128[j] = v
-        full_ok = full & ok_chars & ~bad_triple & shape_ok & g8 & group_ok
-        if full_ok.any():
-            h = np.zeros(n, dtype=np.uint64)
-            l_ = np.zeros(n, dtype=np.uint64)
-            for j in range(4):
-                h = (h << np.uint64(16)) | val128[j]
-                l_ = (l_ << np.uint64(16)) | val128[j + 4]
-            hi[full_ok] = h[full_ok]
-            lo[full_ok] = l_[full_ok]
-            valid[full_ok] = True
-
-    return pd.DataFrame(
-        {
-            "hi": np.where(valid, hi.view(np.int64), 0),
-            "lo": np.where(valid, lo.view(np.int64), 0),
-            "ok": valid,
-        },
-        index=idx,
-    )
-
-
-def format_ipv6_halves(hi, lo):
-    """Vectorized :func:`format_ipv6`: int64 two's-complement hi/lo
-    arrays -> canonical RFC 5952 strings (lowercase, longest-leftmost
-    ``::`` run of >= 2 zero groups compressed)."""
-    import numpy as np
-    import pandas as pd
-
-    hiu = np.asarray(hi, dtype=np.int64).view(np.uint64)
-    lou = np.asarray(lo, dtype=np.int64).view(np.uint64)
-    n = len(hiu)
-    groups = np.empty((n, 8), dtype=np.int64)
-    for j in range(4):
-        groups[:, j] = ((hiu >> np.uint64(48 - 16 * j)) & np.uint64(0xFFFF)).astype(np.int64)
-        groups[:, j + 4] = ((lou >> np.uint64(48 - 16 * j)) & np.uint64(0xFFFF)).astype(np.int64)
-    hexg = _group_hex()[groups]
-    zero = groups == 0
-    best_start = np.full(n, -1, dtype=np.int64)
-    best_len = np.zeros(n, dtype=np.int64)
-    # exact maximal zero runs, longest first then leftmost (RFC 5952);
-    # <= 28 windows, each test vectorized across rows
-    for length in range(8, 1, -1):
-        for start in range(0, 9 - length):
-            m = zero[:, start : start + length].all(axis=1)
-            if start > 0:
-                m &= ~zero[:, start - 1]
-            if start + length < 8:
-                m &= ~zero[:, start + length]
-            m &= best_start == -1
-            if m.any():
-                best_start[m] = start
-                best_len[m] = length
-
-    def join_cols(mask, cols):
-        if not cols:
-            return np.full(int(mask.sum()), "", dtype=object)
-        acc = hexg[mask, cols[0]]
-        for c in cols[1:]:
-            acc = acc + ":" + hexg[mask, c]
-        return acc
-
-    out = np.empty(n, dtype=object)
-    none = best_start == -1
-    if none.any():
-        out[none] = join_cols(none, list(range(8)))
-    for st in range(8):
-        for ln in range(2, 9 - st):
-            m = (best_start == st) & (best_len == ln)
-            if not m.any():
-                continue
-            out[m] = (
-                join_cols(m, list(range(st)))
-                + "::"
-                + join_cols(m, list(range(st + ln, 8)))
-            )
-    return pd.Series(out)

@@ -107,7 +107,7 @@ def estimated_bytes(df: DataFrame, n_rows: int) -> int:
 def count_and_fits(
     df: DataFrame,
     row_threshold: int,
-    max_bytes: int = DRIVER_LOCAL_MAX_BYTES,
+    max_bytes: int | None = None,
     tag: str | None = None,
 ) -> tuple[int, bool]:
     """Row count + driver-budget check as ONE aggregate job.
@@ -115,8 +115,9 @@ def count_and_fits(
     One ``agg(count, avg(width))`` pass over the (persisted) frame
     computes both, averaging the width over EVERY row. Returns
     ``(n_rows, local)`` where local requires BOTH
-    ``n_rows <= row_threshold`` and the byte budget, and logs the
-    combined decision, so a row-threshold refusal is visible in
+    ``n_rows <= row_threshold`` and the byte budget (``max_bytes``,
+    default :data:`DRIVER_LOCAL_MAX_BYTES` read at call time), and logs
+    the combined decision, so a row-threshold refusal is visible in
     :data:`DECISION_LOG` too."""
     row = df.agg(
         F.count(F.lit(1)).alias("n"),
@@ -124,6 +125,8 @@ def count_and_fits(
     ).collect()[0]
     n = int(row["n"])
     est = int((row["avg_w"] or 0.0) * n * _PY_OVERHEAD)
+    if max_bytes is None:
+        max_bytes = DRIVER_LOCAL_MAX_BYTES
     local = n <= row_threshold and est <= max_bytes
     _log_decision(tag, n, est, local)
     return n, local
@@ -132,13 +135,17 @@ def count_and_fits(
 def fits_in_driver(
     df: DataFrame,
     n_rows: int,
-    max_bytes: int = DRIVER_LOCAL_MAX_BYTES,
+    max_bytes: int | None = None,
     tag: str | None = None,
 ) -> bool:
-    """True when collecting ``df`` is within the driver byte budget.
+    """True when collecting ``df`` is within the driver byte budget
+    (``max_bytes``, default :data:`DRIVER_LOCAL_MAX_BYTES` read at call
+    time).
     Every decision is appended to :data:`DECISION_LOG` (with the
     caller's ``tag``) so the taken path is observable and pinnable by
     tests."""
+    if max_bytes is None:
+        max_bytes = DRIVER_LOCAL_MAX_BYTES
     est = estimated_bytes(df, n_rows)
     local = est <= max_bytes
     _log_decision(tag, n_rows, est, local)

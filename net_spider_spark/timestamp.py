@@ -35,10 +35,6 @@ class Timestamp:
     def __le__(self, other: "Timestamp") -> bool:
         return self.epoch_ms <= other.epoch_ms
 
-    @property
-    def has_tz(self) -> bool:
-        return self.tz_offset_min is not None
-
 
 # Relaxed ISO-8601-ish grammar (Timestamp.hs:247-321): date with -/./ or /
 # separators, optional time separated by 'T' or space, optional seconds and

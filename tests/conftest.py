@@ -20,14 +20,29 @@ def spark_jobs(spark):
     """Start counting Spark jobs: returns a function giving the number
     of jobs started since this call (the status tracker's job-id
     delta). Counts jobs outside any job group, which is every job the
-    library starts."""
+    library starts. Its ``describe()`` lists each counted job's id and
+    stage names, for an assertion message that names an extra job."""
     tracker = spark.sparkContext.statusTracker()
 
     def last() -> int:
         return max(tracker.getJobIdsForGroup(None) or [-1])
 
     first = last()
-    return lambda: last() - first
+
+    def count() -> int:
+        return last() - first
+
+    def describe() -> str:
+        lines = []
+        for job_id in range(first + 1, last() + 1):
+            job = tracker.getJobInfo(job_id)
+            stages = [tracker.getStageInfo(s) for s in (job.stageIds if job else [])]
+            names = [f"{s.stageId} {s.name}" for s in stages if s is not None]
+            lines.append(f"job {job_id} ({job.status if job else '?'}): {names}")
+        return f"{count()} Spark jobs:\n" + "\n".join(lines)
+
+    count.describe = describe
+    return count
 
 
 @pytest.fixture(scope="session")

@@ -87,6 +87,121 @@ def test_syslog_requires_year(spark):
 
 
 # ---------------------------------------------------------------------------
+# Edge cases, two files: CRLF endings, rows before the first header, an
+# unterminated block followed by a new header, a foreign line inside a
+# DIO and inside a DAO block, a DAO block without a root entry, a glued
+# 5-digit rank, 6G- compact neighbors, a link-local rewrite and
+# unparseable neighbor addresses (their links keep a null target). The
+# rows were recorded from the window/join parser that preceded the
+# one-pass parser, and finding_id is still
+# xxhash64(file, block ordinal in the file, subject_node).
+# ---------------------------------------------------------------------------
+
+EDGE_FILES = [f"{DATA}/syslog_edge_crlf.log", f"{DATA}/syslog_edge_blocks.log"]
+
+
+def _nbr(kind, rank, metric):
+    return {"neighbor_type": kind, "neighbor_rank": rank, "metric": metric}
+
+
+EDGE_DIO = [
+    ("syslog_edge_crlf.log", 1, "dio://[fd00::a:1:1:1]", 1646128801000,
+     {"rank": "256", "dio_interval": "12"},
+     [("dio://[fd00::b:2:2:2]", "to_target", _nbr("preferred_parent", "128", "100")),
+      ("dio://[::2a]", "unused", _nbr("parent_candidate", "300", "140")),
+      ("dio://[::a0f2]", "unused", _nbr("parent_candidate", "310", "150")),
+      ("dio://[fd00::d:4:4:4]", "unused", _nbr("other_neighbor", "65535", "65535")),
+      (None, "unused", _nbr("other_neighbor", "400", "160")),
+      (None, "unused", _nbr("other_neighbor", "410", "170")),
+      (None, "unused", _nbr("other_neighbor", "420", "180"))]),
+    ("syslog_edge_blocks.log", 2, "dio://[fd00::e:1:1:1]", 1646218805000,
+     {"rank": "384", "dio_interval": "10"},
+     [("dio://[fd00::f:1:1:1]", "to_target", _nbr("preferred_parent", "256", "90"))]),
+]
+EDGE_DAO = [
+    ("syslog_edge_crlf.log", 2, "dao://[fd00::a:1:1:1]", 1646128802000,
+     {"dao_route_num": "4"},
+     [("dao://[fd00::b:2:2:2]", "to_target", {"path_lifetime_sec": "1080"})]),
+    ("syslog_edge_crlf.log", 2, "dao://[fd00::b:2:2:2]", 1646128802000,
+     {"dao_present": "true"},
+     [("dao://[::42]", "to_target", {"path_lifetime_sec": "600"})]),
+    ("syslog_edge_crlf.log", 2, "dao://[::42]", 1646128802000,
+     {"dao_present": "true"},
+     [("dao://[::a0f2]", "to_target", {"path_lifetime_sec": "300"})]),
+    ("syslog_edge_blocks.log", 6, "dao://[fd00::e:1:1:1]", 1646218840000,
+     {"dao_route_num": "3"},
+     [("dao://[fd00::f:1:1:1]", "to_target", {"path_lifetime_sec": "900"})]),
+    ("syslog_edge_blocks.log", 6, "dao://[fd00::f:1:1:1]", 1646218840000,
+     {"dao_present": "true"},
+     [("dao://[fd00::9:1:1:1]", "to_target", {"path_lifetime_sec": "60"})]),
+]
+
+
+def _by_finding_id(spark, expected):
+    from pathlib import Path
+
+    from pyspark.sql import functions as F
+
+    ids = spark.createDataFrame(
+        [(Path(DATA, f).resolve().as_uri(), b, s) for f, b, s, *_ in expected],
+        "file string, block_id long, subject_node string",
+    ).select(F.xxhash64("file", "block_id", "subject_node").alias("h"))
+    return {
+        r["h"]: (s, ts, attrs, links)
+        for r, (_, _, s, ts, attrs, links) in zip(ids.collect(), expected)
+    }
+
+
+def test_edge_case_files(spark):
+    dio, dao = parse_contiki_logs(spark, EDGE_FILES, year=2022)
+    for df, expected in ((dio, EDGE_DIO), (dao, EDGE_DAO)):
+        got = {
+            r["finding_id"]: (
+                r["subject_node"], r["found_at"], r["node_attrs"],
+                [(l["target_node"], l["link_state"], l["link_attrs"])
+                 for l in r["neighbor_links"]],
+            )
+            for r in _collect(df)
+        }
+        assert got == _by_finding_id(spark, expected)
+    assert {r["tz_offset_min"] for r in _collect(dio.unionByName(dao))} == {None}
+
+
+def test_parse_and_append_run_two_jobs(spark, tmp_path):
+    # One job parses every file, one appends both families: at log
+    # scale the cost is Spark jobs, not lines.
+    from conftest import spark_jobs
+    from net_spider_spark.ingest import write_findings
+
+    hist = str(tmp_path / "hist")
+    jobs = spark_jobs(spark)
+    dio, dao = parse_contiki_logs(spark, EDGE_FILES, year=2022)
+    write_findings(dio.unionByName(dao), hist)
+    assert jobs() <= 2, jobs.describe()
+    assert spark.read.parquet(hist).count() == len(EDGE_DIO) + len(EDGE_DAO)
+
+
+def test_parse_plan_is_one_python_map(spark, monkeypatch):
+    # The whole parse is one Arrow-batched Python map over the files
+    # (MapInPandas): no row-at-a-time (BatchEvalPython) or per-column
+    # (ArrowEvalPython) Python UDF anywhere in the plan.
+    from net_spider_spark.rpl import contiki
+
+    plans = []
+    materialize = contiki._materialize
+
+    def capture(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return materialize(df)
+
+    monkeypatch.setattr(contiki, "_materialize", capture)
+    parse_contiki_logs(spark, f"{DATA}/syslog_sample.log", year=2021)
+    (plan,) = plans
+    assert plan.count("MapInPandas") == 1, plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+# ---------------------------------------------------------------------------
 # Reference golden fixtures: drive OUR parser over the reference's own
 # test/data logs and assert the exact findings its ContikiNGSpec.hs
 # pins (read in place from /root/reference — nothing is copied).

@@ -425,4 +425,4 @@ def test_whole_graph_snapshot_job_count(spark, policy, max_jobs):
 
     assert got_nodes == {n: ts for n, (_, ts, _) in want_nodes.items()}
     assert got_links == want_links
-    assert used <= max_jobs, f"{policy}: {used} Spark jobs"
+    assert used <= max_jobs, f"{policy}: {jobs.describe()}"

@@ -78,3 +78,16 @@ def test_levels_max_hops(spark):
     expect = {"a": 0, "b": 1}
     assert _run_levels(spark, ["a"], max_hops=1) == expect
     assert _run_levels(spark, ["a"], max_hops=1, threshold=0) == expect
+
+
+def test_byte_budget_is_read_per_call(spark, monkeypatch):
+    # The BFS guard reads sizing.DRIVER_LOCAL_MAX_BYTES when it runs,
+    # like the export guard: a budget lowered at run time sends even a
+    # six-edge BFS down the distributed path.
+    from net_spider_spark import sizing
+
+    monkeypatch.setattr(sizing, "DRIVER_LOCAL_MAX_BYTES", 0)
+    n_log = len(sizing.DECISION_LOG)
+    assert _run(spark, ["a"]) == ["a", "b", "c", "d", "e"]
+    (bfs,) = [d for d in sizing.DECISION_LOG[n_log:] if d["tag"] == "bfs"]
+    assert (bfs["n_rows"], bfs["local"]) == (len(EDGES), False)
