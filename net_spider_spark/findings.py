@@ -113,6 +113,19 @@ def explode_link_samples(findings_df: DataFrame) -> DataFrame:
     )
 
 
+# Swap-insensitive link identity (Pair.hs:17-30): the unordered endpoint
+# pair, the shuffle key of link unification and of the latest-link folds.
+PAIR_KEY = (
+    "least(subject_node, target_node) AS p1",
+    "greatest(subject_node, target_node) AS p2",
+)
+
+
+def pair_link_samples(findings_df: DataFrame) -> DataFrame:
+    """:func:`explode_link_samples` plus the pair key ``(p1, p2)``."""
+    return explode_link_samples(findings_df).selectExpr("*", *PAIR_KEY)
+
+
 # ---------------------------------------------------------------------------
 # JSON wire codecs (Found.hs:70-159; FIXTURES.md §4)
 # ---------------------------------------------------------------------------

@@ -14,18 +14,22 @@ path.
 At 100 TB this is the difference between touching the day's findings
 plus a node-sized state table, and re-scanning years of history per
 refresh. On a real deployment store the state in a table format with
-atomic swap (Delta/Iceberg); the parquet temp-dir rename here is the
-local stand-in.
+atomic swap (Delta/Iceberg); the parquet temp-dir rename
+(``ingest.swap_dir``) is the local stand-in.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from net_spider_spark.snapshot import latest_findings_per_node
+from net_spider_spark.findings import pair_link_samples
+from net_spider_spark.ingest import swap_dir
+from net_spider_spark.snapshot import (
+    latest_findings_per_node,
+    latest_sample_per_pair,
+)
 
 
 def fold_latest_nodes(state: DataFrame | None, batch: DataFrame) -> DataFrame:
@@ -48,42 +52,23 @@ def _fold_and_swap(
     spark: SparkSession, state_path: str, batch: DataFrame, fold
 ) -> DataFrame:
     """Fold ``batch`` into the parquet state at ``state_path`` (created
-    on first call) with a crash-safe swap, and return the new state.
+    on first call) through the crash-safe :func:`ingest.swap_dir`, and
+    return the new state. The RETURNED DataFrame lazily reads the
+    just-swapped files — consume it before the next update replaces
+    them (snapshot isolation across updates is what Delta/Iceberg buy
+    you in production)."""
 
-    Swap order: write the new state to ``._tmp``, rename the current
-    state aside to ``._old``, rename ``._tmp`` into place, delete
-    ``._old`` — at every instant at least one complete readable state
-    exists on disk (the naive rmtree-then-rename ordering has a window
-    with none). A crash mid-swap leaves either the state in place or at
-    ``._old``; the next call recovers it automatically. The RETURNED
-    DataFrame lazily reads the just-swapped files — consume it before
-    the next update replaces them (snapshot isolation across updates is
-    what Delta/Iceberg buy you in production)."""
-    base = state_path.rstrip("/")
-    tmp, old = base + "._tmp", base + "._old"
-    # Recovery: a crash between rename-aside and rename-into-place
-    # leaves the only good state at ._old.
-    if not os.path.exists(state_path) and os.path.exists(old):
-        os.rename(old, state_path)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)  # stale partial write from a crashed run
+    def write(tmp: str) -> None:
+        state = None
+        if os.path.exists(state_path):
+            # the previous swap replaced the directory contents; drop any
+            # cached file listing for the path or the read resolves to
+            # deleted part files
+            spark.catalog.refreshByPath(state_path)
+            state = spark.read.parquet(state_path)
+        fold(state, batch).write.mode("overwrite").parquet(tmp)
 
-    state = None
-    if os.path.exists(state_path):
-        # the previous swap replaced the directory contents; drop any
-        # cached file listing for the path or the read resolves to
-        # deleted part files
-        spark.catalog.refreshByPath(state_path)
-        state = spark.read.parquet(state_path)
-    new_state = fold(state, batch)
-    new_state.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(old):
-        shutil.rmtree(old)  # leftover from a crash after rename-new
-    if os.path.exists(state_path):
-        os.rename(state_path, old)
-    os.rename(tmp, state_path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+    swap_dir(state_path, write)
     return spark.read.parquet(state_path)
 
 
@@ -106,36 +91,6 @@ def update_latest_links_state(
     return _fold_and_swap(spark, state_path, batch, fold_latest_links)
 
 
-from pyspark.sql import functions as F  # noqa: E402
-
-_LINK_COLS = [
-    "finding_id", "link_pos", "subject_node", "target_node",
-    "link_state", "found_at", "link_attrs",
-]
-
-
-def _link_samples(findings: DataFrame) -> DataFrame:
-    """Explode nested findings into per-pair link samples (the default
-    unify's input shape, keyed by the unordered endpoint pair)."""
-    s = findings.select(
-        "subject_node",
-        "found_at",
-        "finding_id",
-        F.posexplode("neighbor_links").alias("link_pos", "_nl"),
-    ).select(
-        "finding_id",
-        F.col("link_pos").cast("int").alias("link_pos"),
-        "subject_node",
-        F.col("_nl.target_node").alias("target_node"),
-        F.col("_nl.link_state").alias("link_state"),
-        "found_at",
-        F.col("_nl.link_attrs").alias("link_attrs"),
-    )
-    return s.withColumn(
-        "p1", F.least("subject_node", "target_node")
-    ).withColumn("p2", F.greatest("subject_node", "target_node"))
-
-
 def fold_latest_links(state: DataFrame | None, batch: DataFrame) -> DataFrame:
     """Links-side incremental step: previous per-pair winner state (or
     None) + a new findings batch -> new state holding each unordered
@@ -143,15 +98,6 @@ def fold_latest_links(state: DataFrame | None, batch: DataFrame) -> DataFrame:
     batch twin of ``streaming/ingest.stream_latest_link_per_pair``.
     The argmax is associative, so the folded state always equals the
     full-history reduction."""
-    samples = _link_samples(batch)
+    samples = pair_link_samples(batch)
     combined = samples if state is None else state.unionByName(samples)
-    ordering = F.struct("found_at", "finding_id", "link_pos")
-    return (
-        combined.groupBy("p1", "p2")
-        .agg(
-            F.max_by(
-                F.struct(*[F.col(c) for c in _LINK_COLS]), ordering
-            ).alias("_w")
-        )
-        .select("p1", "p2", *[F.col(f"_w.{c}").alias(c) for c in _LINK_COLS])
-    )
+    return latest_sample_per_pair(combined)

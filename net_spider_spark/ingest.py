@@ -18,8 +18,47 @@ layout choices are the 100 TB levers:
 
 from __future__ import annotations
 
+import math
+import os
+import shutil
+from typing import Callable, TypeVar
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+T = TypeVar("T")
+
+
+def swap_dir(path: str, write: Callable[[str], T]) -> T:
+    """Replace the directory ``path`` with what ``write(tmp)`` writes
+    into a sibling temp dir, crash-safely; return ``write``'s result.
+
+    Order: recover, clear a stale ``._tmp``, ``write`` into ``._tmp``,
+    rename ``path`` aside to ``._old``, rename ``._tmp`` into place,
+    delete ``._old``. At every instant one complete copy is on disk,
+    as ``path`` or as ``._old`` (the naive rmtree-then-rename order has
+    a window with none). A crash between the two renames leaves the
+    only copy at ``._old``; the next swap of the same path renames it
+    back before ``write`` runs, so ``write`` may read ``path`` (absent
+    on a first swap). The swap itself runs no Spark action. Concurrent
+    readers can still see a gap between the two renames; a table
+    format (Delta/Iceberg) closes it.
+    """
+    base = path.rstrip("/")
+    tmp, old = base + "._tmp", base + "._old"
+    if not os.path.exists(base) and os.path.exists(old):
+        os.rename(old, base)
+    if os.path.exists(tmp):
+        shutil.rmtree(tmp)  # stale partial write from a crashed run
+    result = write(tmp)
+    if os.path.exists(old):
+        shutil.rmtree(old)  # leftover from a crash after rename-new
+    if os.path.exists(base):
+        os.rename(base, old)
+    os.rename(tmp, base)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+    return result
 
 
 def write_findings(
@@ -170,6 +209,13 @@ def write_findings_bucketed(
     )
 
 
+def _parquet_files(path: str) -> int:
+    return sum(
+        len([f for f in fs if f.endswith(".parquet")])
+        for _, _, fs in os.walk(path)
+    )
+
+
 def compact_history(
     spark: SparkSession,
     path: str,
@@ -184,13 +230,8 @@ def compact_history(
     before the data does. Rewrite each day partition into
     ``ceil(rows / target_rows_per_file)`` files, preserving the
     ``sortWithinPartitions(subject_node)`` clustering the layout
-    promises. Atomicity note: this local implementation writes to a
-    sibling temp dir, renames the live table aside, renames the temp
-    into place, then deletes the old copy — every intermediate state
-    keeps a complete table on disk (as ``path`` or ``path + ".old"``),
-    so a crash mid-swap loses nothing. Concurrent readers can still see
-    a brief gap between the two renames; on a real deployment use a
-    table format's (Delta/Iceberg) rewrite for reader-visible atomicity.
+    promises. The rewrite goes through :func:`swap_dir`, so a crash
+    mid-swap loses nothing and the next compaction recovers the table.
 
     ``zorder=True`` is the OPTIMIZE-ZORDER shape: instead of the
     per-day subject sort, the whole rewrite lands along the
@@ -204,90 +245,58 @@ def compact_history(
 
     Returns {"files_before": n, "files_after": m, "rows": r}.
     """
-    import math
-    import os
-    import shutil
 
-    df = spark.read.parquet(path)
-    rows = df.count()
-    files_before = sum(
-        len([f for f in fs if f.endswith(".parquet")])
-        for _, _, fs in os.walk(path)
-    )
-    tmp = path.rstrip("/") + "._compact_tmp"
-    if zorder:
-        from net_spider_spark import layout as LY
-
+    def rewrite(tmp: str) -> tuple[int, int]:
+        df = spark.read.parquet(path)
+        rows = df.count()
+        files_before = _parquet_files(path)
         n_files = max(1, math.ceil(rows / target_rows_per_file))
-        zdf = df.drop("found_day").withColumn(
-            "_subj_key", subject_prefix_key(F.col("subject_node"))
-        )
-        LY.write_zordered(
-            zdf,
-            tmp,
-            ["_subj_key", "found_at"],
-            n_files=n_files,
-            bits=16,
-            mode="overwrite",
-            keep_z=False,
-            drop_cols=["_subj_key"],
-        )
-        old = path.rstrip("/") + ".old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-        files_after = sum(
-            len([f for f in fs if f.endswith(".parquet")])
-            for _, _, fs in os.walk(path)
-        )
-        return {
-            "files_before": files_before,
-            "files_after": files_after,
-            "rows": rows,
-        }
-    has_day = "found_day" in df.columns
-    if has_day:
-        # per-day file budget: ceil(day_rows / target) files for big
-        # days, one for small ones. Clustering rows by (day, file-slot)
-        # makes each task hold whole slots, so the output file count is
-        # at most the budget (hash collisions only merge slots).
-        per_day = df.groupBy("found_day").agg(
-            F.ceil(F.count(F.lit(1)) / target_rows_per_file)
-            .cast("int")
-            .alias("_slots")
-        )
-        out = (
-            df.join(F.broadcast(per_day), "found_day")
-            .withColumn(
-                "_slot",
-                F.pmod(
-                    F.xxhash64("subject_node"),
-                    F.greatest(F.col("_slots"), F.lit(1)),
-                ),
+        if zorder:
+            write_findings_zordered(
+                df.drop("found_day"), tmp, mode="overwrite", n_files=n_files
             )
-            .repartition(F.col("found_day"), F.col("_slot"))
-            .drop("_slots", "_slot")
-            .sortWithinPartitions("subject_node")
-        )
-        writer = out.write.mode("overwrite").partitionBy("found_day")
-    else:
-        n_files = max(1, math.ceil(rows / target_rows_per_file))
-        out = df.repartition(n_files).sortWithinPartitions("subject_node")
-        writer = out.write.mode("overwrite")
-    writer.parquet(tmp)
-    old = path.rstrip("/") + ".old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    files_after = sum(
-        len([f for f in fs if f.endswith(".parquet")])
-        for _, _, fs in os.walk(path)
-    )
-    return {"files_before": files_before, "files_after": files_after, "rows": rows}
+        elif "found_day" in df.columns:
+            # per-day file budget: ceil(day_rows / target) files for big
+            # days, one for small ones. Clustering rows by (day,
+            # file-slot) makes each task hold whole slots, so the output
+            # file count is at most the budget (hash collisions only
+            # merge slots).
+            per_day = df.groupBy("found_day").agg(
+                F.ceil(F.count(F.lit(1)) / target_rows_per_file)
+                .cast("int")
+                .alias("_slots")
+            )
+            (
+                df.join(F.broadcast(per_day), "found_day")
+                .withColumn(
+                    "_slot",
+                    F.pmod(
+                        F.xxhash64("subject_node"),
+                        F.greatest(F.col("_slots"), F.lit(1)),
+                    ),
+                )
+                .repartition(F.col("found_day"), F.col("_slot"))
+                .drop("_slots", "_slot")
+                .sortWithinPartitions("subject_node")
+                .write.mode("overwrite")
+                .partitionBy("found_day")
+                .parquet(tmp)
+            )
+        else:
+            (
+                df.repartition(n_files)
+                .sortWithinPartitions("subject_node")
+                .write.mode("overwrite")
+                .parquet(tmp)
+            )
+        return files_before, rows
+
+    files_before, rows = swap_dir(path, rewrite)
+    return {
+        "files_before": files_before,
+        "files_after": _parquet_files(path),
+        "rows": rows,
+    }
 
 
 def clear_all(spark: SparkSession, path: str) -> None:

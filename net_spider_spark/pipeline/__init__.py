@@ -1,10 +1,9 @@
-"""Large-scale training-data pipeline operators: dedup, similarity
-search, text analysis, curation (sampling/packing/scrubbing/
-decontamination), multimodal column plumbing.
+"""Corpus operators outside the snapshot engine: dedup, similarity
+search and k-means/PQ, text analysis, sketches, curation
+(sampling/packing/scrubbing/decontamination) and pure-numpy media
+decode.
 
-These extend the reference's surface (BASELINE.json north star): the
-same engine that answers time-varying-graph snapshot queries also has
-to prepare 100 TB-class document/embedding corpora. Everything here is
-built-in-DataFrame-first; Python appears only in Arrow-batched Pandas
-UDFs where Spark genuinely lacks the operator.
+Nothing in the engine, the CLI or the benchmark imports this package.
+It is left from an earlier corpus-pipeline scope and is being deleted
+one module group at a time, leaves first (ROADMAP open item 5).
 """

@@ -612,8 +612,7 @@ def kmv_set_estimates(
 # DISJOINT shards merge by "concatenate, keep k smallest by hash" —
 # associative and commutative, i.e. a safe distributed partial
 # aggregate — and the whole construction is reproducible bit-for-bit
-# by any engine (the fallback ``events.value_quantiles`` names for
-# groups too large to sort exactly).
+# by any engine.
 # ---------------------------------------------------------------------------
 
 

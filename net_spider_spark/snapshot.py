@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from net_spider_spark.findings import explode_link_samples
+from net_spider_spark.findings import PAIR_KEY, explode_link_samples
 from net_spider_spark.interval import Interval
 from net_spider_spark.reliability import materialize_lazy
 from net_spider_spark.traverse import reachable_nodes
@@ -332,14 +332,7 @@ def get_snapshot(
         # [a]-[b]: from N samples" lines: total samples and distinct
         # unify groups.
         n_samples = samples.count()
-        n_groups = (
-            samples.select(
-                F.least("subject_node", "target_node"),
-                F.greatest("subject_node", "target_node"),
-            )
-            .distinct()
-            .count()
-        )
+        n_groups = samples.selectExpr(*PAIR_KEY).distinct().count()
         _log(f"unify: {n_groups} link groups from {n_samples} samples")
     links = _unify_links(samples, nodes, query.unify)
     return nodes, links
@@ -356,6 +349,37 @@ def get_snapshot_logged(
     return nodes, links, logs
 
 
+def latest_sample_per_pair(
+    samples: DataFrame, keys: Sequence[str] = ("p1", "p2")
+) -> DataFrame:
+    """The default merge, latestLinkSample over both endpoints' samples:
+    each ``keys`` group's maximal sample under (found_at, finding_id,
+    link_pos), as ``(p1, p2, *_SAMPLE_COLS)``.
+
+    Samples are NARROW rows (no nested arrays), so a single ``max_by``
+    aggregate — sort-based because of the attrs map, but one shuffle
+    and map-side partial — wins here. Measured at both 6.4M and 51M
+    samples: a max(found_at) hash-agg + semi-join prefilter before the
+    max_by added ~17 s at 6.4M and paid for itself nowhere — the
+    partial aggregate already collapses each map partition to ~one row
+    per pair before the shuffle. The argmax-join shape is reserved for
+    the wide nested findings (:func:`latest_findings_per_node`), where
+    sorting full rows is the 100 TB hazard. The argmax is associative,
+    so folding batches into a previous result equals reducing the full
+    history (``incremental.fold_latest_links``).
+    """
+    return (
+        samples.groupBy(*keys)
+        .agg(
+            F.expr(
+                "max_by(struct(" + ", ".join(_SAMPLE_COLS) + "), "
+                "struct(found_at, finding_id, link_pos))"
+            ).alias("_w")
+        )
+        .selectExpr("p1", "p2", *[f"_w.{c} AS {c}" for c in _SAMPLE_COLS])
+    )
+
+
 def _unify_links(
     samples: DataFrame,
     nodes: DataFrame,
@@ -363,27 +387,18 @@ def _unify_links(
 ) -> DataFrame:
     """Steps 1-3 of unifyStd (Unify.hs:169-193) + direction resolution
     (Weaver.hs:190-203)."""
-    # Swap-insensitive link identity (Pair.hs:17-30). The pair columns
-    # are the shuffle key; the un-swapped subject/target stay inside the
-    # sample struct because output direction depends on them.
-    # One selectExpr instead of three withColumn (each withColumn
-    # re-analyzes the whole accumulated plan and pays its own py4j
-    # round-trips); the custom sub_id hook still receives/returns a
-    # Column, mixed into the same single select.
-    pair_exprs = [
-        "*",
-        "least(subject_node, target_node) AS p1",
-        "greatest(subject_node, target_node) AS p2",
-    ]
+    # The pair columns are the shuffle key; the un-swapped
+    # subject/target stay inside the sample struct because output
+    # direction depends on them. One select instead of three withColumn
+    # (each withColumn re-analyzes the whole accumulated plan and pays
+    # its own py4j round-trips); the custom sub_id hook still
+    # receives/returns a Column, mixed into the same single select.
     if conf.sub_id is not None:
         with_pair = samples.select(
-            "*",
-            F.expr(pair_exprs[1]),
-            F.expr(pair_exprs[2]),
-            conf.sub_id().alias("sub_id"),
+            "*", *map(F.expr, PAIR_KEY), conf.sub_id().alias("sub_id")
         )
     else:
-        with_pair = samples.selectExpr(*pair_exprs, "'' AS sub_id")
+        with_pair = samples.selectExpr("*", *PAIR_KEY, "'' AS sub_id")
 
     if conf.merge_samples is not None:
         # Custom merge: Arrow-batched grouped-map per (pair, sub_id).
@@ -394,30 +409,7 @@ def _unify_links(
             .applyInPandas(conf.merge_samples, schema=conf.merge_output_schema)
         )
     else:
-        # Default merge = latestLinkSample over both endpoints' samples,
-        # deterministic tie-break on (found_at, finding_id, link_pos).
-        # Samples are NARROW rows (no nested arrays), so a single
-        # max_by aggregate — sort-based because of the attrs map, but
-        # one shuffle and map-side partial — wins here. Measured at
-        # both 6.4M and 51M samples: a max(found_at) hash-agg +
-        # semi-join prefilter before the max_by added ~17 s at 6.4M
-        # and paid for itself nowhere — the partial aggregate already
-        # collapses each map partition to ~one row per pair before the
-        # shuffle. The argmax-join shape is reserved for the wide
-        # nested findings (latest_findings_per_node), where sorting
-        # full rows is the 100 TB hazard.
-        merged = (
-            with_pair.groupBy("p1", "p2", "sub_id")
-            .agg(
-                F.expr(
-                    "max_by(struct(" + ", ".join(_SAMPLE_COLS) + "), "
-                    "struct(found_at, finding_id, link_pos))"
-                ).alias("_w")
-            )
-            .selectExpr(
-                "p1", "p2", *[f"_w.{c} AS {c}" for c in _SAMPLE_COLS]
-            )
-        )
+        merged = latest_sample_per_pair(with_pair, ("p1", "p2", "sub_id"))
 
     if conf.winner_transform is not None:
         for name, col in conf.winner_transform().items():

@@ -12,9 +12,10 @@ exactly that:
   ``readStream.format``) appended to the history Parquet table.
 * ``stream_latest_per_node`` — the policyOverwrite view maintained
   incrementally with ``applyInPandasWithState`` keyed by
-  subject_node: state = the newest finding seen; late rows lose the
-  timestamp comparison instead of being dropped by a watermark, so
-  batch replay and streaming agree row-for-row.
+  subject_node: state = the newest finding seen under the batch
+  argmax's order (found_at, finding_id); late rows lose that
+  comparison instead of being dropped by a watermark, so batch replay
+  and streaming agree row-for-row, ties included.
 * ``parse_logs_streaming`` — incremental RPL log parse: new log files
   land in a directory; ``foreachBatch`` runs the batch block parser
   per micro-batch (blocks are contiguous within one file, so files
@@ -32,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from net_spider_spark.findings import pair_link_samples
 from net_spider_spark.model import FINDINGS_SCHEMA
 
 # JSON wire schema for one finding per line (FIXTURES.md §4).
@@ -145,7 +147,7 @@ def append_to_history(
     return writer.start()
 
 
-_LATEST_STATE_SCHEMA = "found_at BIGINT, payload STRING"
+_LATEST_STATE_SCHEMA = "found_at BIGINT, finding_id BIGINT, payload STRING"
 _LATEST_OUT_SCHEMA = (
     "subject_node STRING, found_at BIGINT, node_attrs MAP<STRING,STRING>"
 )
@@ -154,34 +156,37 @@ _LATEST_OUT_SCHEMA = (
 def _update_latest(
     key, pdf_iter: Iterable[pd.DataFrame], state: GroupState
 ) -> Iterable[pd.DataFrame]:
-    """Keep the newest finding per subject; emit the winner per batch.
+    """Keep the maximal finding per subject under the batch argmax's
+    order (found_at, finding_id); emit the winner per batch.
 
-    Late rows older than the stored state lose the comparison — the
-    same outcome the batch ``max_by`` produces on full replay.
+    Late rows, and rows tied on found_at with a smaller finding_id,
+    lose the comparison — the same winner ``latest_findings_per_node``
+    keeps on full replay, whatever the micro-batch boundaries.
     """
     (subject,) = key
-    if state.exists:
-        best_ts, best_payload = state.get
-    else:
-        best_ts, best_payload = -1, None
+    best = state.get if state.exists else None  # (ts, fid, payload)
     for pdf in pdf_iter:
         if not len(pdf):
             continue
-        # vectorized per-batch argmax (idxmax) — a single row lookup
-        # replaces the per-row Python loop. In-batch ties keep the
-        # first max row (arrival order in a stream is arbitrary
-        # anyway); a tie with the stored state prefers the new batch.
-        i = pdf["found_at"].idxmax()
-        ts = int(pdf["found_at"].loc[i])
-        if ts >= best_ts:
-            best_ts = ts
-            best_payload = json.dumps(dict(pdf["node_attrs"].loc[i] or {}))
-    state.update((best_ts, best_payload))
+        # vectorized lexicographic argmax over the batch
+        i = (
+            pdf[["found_at", "finding_id"]]
+            .sort_values(["found_at", "finding_id"])
+            .index[-1]
+        )
+        cand = (
+            int(pdf["found_at"].loc[i]),
+            int(pdf["finding_id"].loc[i]),
+            json.dumps(dict(pdf["node_attrs"].loc[i] or {})),
+        )
+        if best is None or cand[:2] > tuple(best[:2]):
+            best = cand
+    state.update(tuple(best))
     yield pd.DataFrame(
         {
             "subject_node": [subject],
-            "found_at": [best_ts],
-            "node_attrs": [json.loads(best_payload) if best_payload else {}],
+            "found_at": [best[0]],
+            "node_attrs": [json.loads(best[2])],
         }
     )
 
@@ -190,7 +195,9 @@ def stream_latest_per_node(findings_stream: DataFrame) -> DataFrame:
     """Incrementally-maintained policyOverwrite view (A1 as a stream):
     ``applyInPandasWithState`` keyed by subject_node."""
     return (
-        findings_stream.select("subject_node", "found_at", "node_attrs")
+        findings_stream.select(
+            "subject_node", "found_at", "finding_id", "node_attrs"
+        )
         .groupBy("subject_node")
         .applyInPandasWithState(
             _update_latest,
@@ -280,7 +287,7 @@ def stream_latest_link_per_pair(findings_stream: DataFrame) -> DataFrame:
     holds the same link rows the batch ``get_snapshot`` would produce
     on full replay (before negation, which needs the node view and
     stays a batch join over the two small maintained views)."""
-    keyed = _explode_link_samples(findings_stream)
+    keyed = pair_link_samples(findings_stream)
     return keyed.groupBy("p1", "p2").applyInPandasWithState(
         _update_latest_link,
         outputStructType=_LINK_OUT_SCHEMA,
@@ -291,26 +298,6 @@ def stream_latest_link_per_pair(findings_stream: DataFrame) -> DataFrame:
 
 
 _UNIFIED_STATE_SCHEMA = "left STRING, right STRING"
-
-
-def _explode_link_samples(findings_stream: DataFrame) -> DataFrame:
-    samples = findings_stream.select(
-        "subject_node",
-        "found_at",
-        "finding_id",
-        F.posexplode("neighbor_links").alias("link_pos", "nl"),
-    ).select(
-        "subject_node",
-        "found_at",
-        "finding_id",
-        F.col("link_pos").cast("int").alias("link_pos"),
-        F.col("nl.target_node").alias("target_node"),
-        F.col("nl.link_state").alias("link_state"),
-        F.col("nl.link_attrs").alias("link_attrs"),
-    )
-    return samples.withColumn(
-        "p1", F.least("subject_node", "target_node")
-    ).withColumn("p2", F.greatest("subject_node", "target_node"))
 
 
 def stream_unified_link_per_pair(findings_stream: DataFrame, conf) -> DataFrame:
@@ -401,7 +388,7 @@ def stream_unified_link_per_pair(findings_stream: DataFrame, conf) -> DataFrame:
         + [T.StructField("_state_ord", T.ArrayType(T.LongType()))]
     )
 
-    keyed = _explode_link_samples(findings_stream)
+    keyed = pair_link_samples(findings_stream)
     sub_id = conf.sub_id() if conf.sub_id is not None else F.lit("")
     keyed = keyed.withColumn("sub_id", sub_id)
 

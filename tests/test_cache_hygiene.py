@@ -13,8 +13,11 @@ EMPTY — the deterministic registry a persist() leak would land in.
 """
 
 import gc
+import os
 
 from pyspark.sql import functions as F
+
+DATA = os.path.join(os.path.dirname(__file__), "data")
 
 
 def _cache_manager_empty(spark) -> bool:
@@ -38,12 +41,17 @@ def _edges(spark):
 
 
 def test_operator_burst_leaves_cache_manager_empty(spark, tmp_path, monkeypatch):
-    from net_spider_spark import sizing
+    from net_spider_spark import cli, sizing
     from net_spider_spark.graph.components import connected_components
     from net_spider_spark.findings import FoundLink, FoundNode, findings_to_df
     from net_spider_spark.graphml import write_graphml_to
+    from net_spider_spark.incremental import update_latest_state
+    from net_spider_spark.ingest import (
+        compact_history,
+        read_findings,
+        write_findings,
+    )
     from net_spider_spark.pipeline.dedup import dedup_representatives
-    from net_spider_spark.pipeline.temporal import time_rollup
     from net_spider_spark.pipeline.text import bm25_search
     from net_spider_spark.rpl.contiki import parse_contiki_logs
     from net_spider_spark.seqid import convert_graph
@@ -55,10 +63,6 @@ def test_operator_burst_leaves_cache_manager_empty(spark, tmp_path, monkeypatch)
 
     docs = _docs(spark)
     edges = _edges(spark)
-    events = spark.createDataFrame(
-        [(i * 30_000, "a" if i % 2 else "b", float(i)) for i in range(200)],
-        "ts_ms long, event_type string, value double",
-    )
     log = tmp_path / "mesh.log"
     log.write_text(
         "Nov 12 10:00:00 node1 DAG Node\n"
@@ -71,7 +75,6 @@ def test_operator_burst_leaves_cache_manager_empty(spark, tmp_path, monkeypatch)
     # session would.
     dedup_representatives(docs).count()
     bm25_search(docs, ["alpha", "tok1"]).count()
-    time_rollup(events).count()
     parse_contiki_logs(spark, str(log), year=2021)[0].count()
     nodes = edges.select(F.col("src").alias("node_id")).distinct()
     convert_graph(
@@ -133,6 +136,25 @@ def test_operator_burst_leaves_cache_manager_empty(spark, tmp_path, monkeypatch)
         snap_nodes.collect()
         snap_links.collect()
     snapshot_timeline(findings, [15, 25, 35]).collect()
+
+    # History storage: append and read back, two latest-state folds
+    # (the second folds into existing state) and a compaction.
+    hist = str(tmp_path / "hist")
+    write_findings(findings, hist)
+    read_findings(spark, hist).collect()
+    state = str(tmp_path / "state")
+    for batch in (findings, read_findings(spark, hist)):
+        update_latest_state(spark, state, batch).collect()
+    compact_history(spark, hist)
+
+    # The CLI cis composition: clear, parse + append, then the dio and
+    # dao snapshots combined and exported.
+    assert cli.main(
+        ["--db", str(tmp_path / "cis"), "cis", f"{DATA}/syslog_sample.log",
+         "--format", "syslog", "--year", "2021",
+         "-o", str(tmp_path / "cis.graphml")],
+        spark=spark,
+    ) == 0
 
     gc.collect()
     assert _cache_manager_empty(spark), (

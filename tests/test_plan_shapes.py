@@ -254,41 +254,6 @@ def test_rule_filters_pure_projection(docs):
         assert "ArrowEvalPython" not in plan
 
 
-def test_robots_filter_no_window_no_cartesian(spark):
-    # The longest-match resolution is a max-struct AGGREGATE, never a
-    # window over the frontier, and the rules join is an equi-join on
-    # host — no cartesian, no per-URL sort.
-    from net_spider_spark.pipeline import url as U
-
-    urls = spark.createDataFrame(
-        [(i, f"http://h{i % 3}.test/p/{i}") for i in range(50)],
-        "doc_id long, url string",
-    )
-    rules = spark.createDataFrame(
-        [(f"h{h}.test", False, "/p/") for h in range(3)],
-        "host string, allow boolean, path_prefix string",
-    )
-    plan = plan_of(U.robots_filter(urls, rules))
-    assert "CartesianProduct" not in plan
-    assert "Window" not in plan
-    assert "BatchEvalPython" not in plan
-
-
-def test_host_link_graph_single_aggregate_exchange(spark):
-    # extract_links is a projection + generator; the only shuffle is
-    # the final (src, dst) hash aggregate (plus AQE reads of it).
-    from net_spider_spark.pipeline import url as U
-
-    pages = spark.createDataFrame(
-        [(i, f'<a href="http://h{(i + 1) % 3}.test/x">a</a>',
-          f"http://h{i % 3}.test/p") for i in range(50)],
-        "doc_id long, html string, url string",
-    )
-    plan = plan_of(U.host_link_graph(U.extract_links(pages)))
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert plan.count("Exchange hashpartitioning") <= 1
-
-
 def test_wordpiece_encode_single_arrow_stage(docs):
     # The greedy encoder is ONE mapInPandas over a projection: no
     # shuffle before the Arrow stage, exactly one Python boundary.

@@ -437,31 +437,6 @@ def test_bloom_collisions_are_one_sided(spark):
     assert any(out[f"x{i}"] for i in range(200))  # saturated -> FPs exist
 
 
-def test_value_quantiles_sketch_mode(spark):
-    from net_spider_spark.pipeline import events as EV
-
-    df = spark.range(200).select(
-        F.lit("a").alias("event_type"),
-        F.col("id").cast("double").alias("value"),
-        F.col("id").alias("event_id"),
-    )
-    exact = EV.value_quantiles(df, ("event_type",), quantiles=(0.5, 0.9))
-    # k above the group size: the sample IS the group, so sketch mode
-    # must reproduce the exact aggregate, same schema.
-    sk = EV.value_quantiles(
-        df, ("event_type",), quantiles=(0.5, 0.9),
-        method="sketch", key_col="event_id", k=512,
-    )
-    assert sk.columns == exact.columns
-    assert sorted(map(tuple, sk.collect())) == sorted(
-        map(tuple, exact.collect())
-    )
-    with pytest.raises(ValueError):
-        EV.value_quantiles(df, method="sketch")
-    with pytest.raises(ValueError):
-        EV.value_quantiles(df, method="bogus")
-
-
 def test_cms_and_bloom_grouped_paths(spark):
     # group_cols plumbing: per-group sketches must not leak across
     # groups (value counted in g0 only estimates/matches in g0).

@@ -81,14 +81,52 @@ def test_update_latest_state_parquet_fold(spark, tmp_path):
     ) == sorted((r["subject_node"], r["finding_id"]) for r in got.collect())
 
 
-def test_update_latest_state_crash_windows(spark, tmp_path, monkeypatch):
-    # VERDICT r4 #9: the swap is write-new -> rename-aside -> rename-new
-    # -> delete-old, so a kill at ANY point leaves a complete readable
-    # state on disk (in place or at ._old) and the next call recovers.
-    import shutil as _shutil
+def _kill_after_rename_aside(monkeypatch, path, swap):
+    """Run ``swap`` and kill it right after it renames ``path`` aside,
+    before the new copy is renamed into place."""
+    import pytest
+
+    real_rename = os.rename
+
+    def dying_rename(src, dst):
+        real_rename(src, dst)
+        if src == path:  # just moved the live copy aside
+            raise RuntimeError("killed mid-swap")
+
+    monkeypatch.setattr(ingest.os, "rename", dying_rename)
+    with pytest.raises(RuntimeError, match="killed mid-swap"):
+        swap()
+    monkeypatch.setattr(ingest.os, "rename", real_rename)
+    # a complete copy survives aside
+    assert os.path.exists(path + "._old") and not os.path.exists(path)
+
+
+def _kill_before_delete_old(monkeypatch, path, swap):
+    """Run ``swap`` and kill it after the new copy is in place, before
+    the aside copy is deleted."""
+    import shutil
 
     import pytest
 
+    real_rmtree = shutil.rmtree
+
+    def dying_rmtree(target, *a, **kw):
+        if target == path + "._old":
+            raise RuntimeError("killed before delete-old")
+        return real_rmtree(target, *a, **kw)
+
+    monkeypatch.setattr(ingest.shutil, "rmtree", dying_rmtree)
+    with pytest.raises(RuntimeError, match="killed before delete-old"):
+        swap()
+    monkeypatch.setattr(ingest.shutil, "rmtree", real_rmtree)
+    assert os.path.exists(path) and os.path.exists(path + "._old")
+
+
+def test_update_latest_state_crash_windows(spark, tmp_path, monkeypatch):
+    # The swap (ingest.swap_dir) is write-new -> rename-aside ->
+    # rename-new -> delete-old, so a kill at ANY point leaves a complete
+    # readable copy on disk (in place or at ._old) and the next call
+    # recovers. Covered for the latest-state fold and for compaction.
     import net_spider_spark.incremental as inc
 
     schema = (
@@ -107,19 +145,8 @@ def test_update_latest_state_crash_windows(spark, tmp_path, monkeypatch):
 
     # Kill in the window AFTER rename-aside, BEFORE rename-into-place —
     # the exact spot the old rmtree ordering left zero readable state.
-    real_rename = os.rename
-
-    def dying_rename(src, dst):
-        real_rename(src, dst)
-        if src == sp:  # just moved the live state aside
-            raise RuntimeError("killed mid-swap")
-
-    monkeypatch.setattr(inc.os, "rename", dying_rename)
-    with pytest.raises(RuntimeError, match="killed mid-swap"):
-        inc.update_latest_state(spark, sp, b2)
-    monkeypatch.setattr(inc.os, "rename", real_rename)
-    # a complete state survives (aside), and recovery folds correctly
-    assert os.path.exists(sp + "._old") and not os.path.exists(sp)
+    _kill_after_rename_aside(
+        monkeypatch, sp, lambda: inc.update_latest_state(spark, sp, b2))
     got = inc.update_latest_state(spark, sp, b2)
     assert [r["found_at"] for r in got.collect()] == [900]
     assert not os.path.exists(sp + "._old")
@@ -129,21 +156,38 @@ def test_update_latest_state_crash_windows(spark, tmp_path, monkeypatch):
     # the stale aside copy is cleaned on the next call.
     b3 = spark.createDataFrame(
         [(3, "a", 950, None, None, None, {}, [])], schema)
-    real_rmtree = _shutil.rmtree
-
-    def dying_rmtree(path, *a, **kw):
-        if path == sp + "._old":
-            raise RuntimeError("killed before delete-old")
-        return real_rmtree(path, *a, **kw)
-
-    monkeypatch.setattr(inc.shutil, "rmtree", dying_rmtree)
-    with pytest.raises(RuntimeError, match="killed before delete-old"):
-        inc.update_latest_state(spark, sp, b3)
-    monkeypatch.setattr(inc.shutil, "rmtree", real_rmtree)
-    assert os.path.exists(sp) and os.path.exists(sp + "._old")
+    _kill_before_delete_old(
+        monkeypatch, sp, lambda: inc.update_latest_state(spark, sp, b3))
     got = inc.update_latest_state(spark, sp, b3)
     assert [r["found_at"] for r in got.collect()] == [950]
     assert not os.path.exists(sp + "._old")
+
+    # The same two windows in compact_history: the next compaction
+    # recovers every row of the history.
+    hp = str(tmp_path / "hist")
+    for i in range(3):
+        ingest.write_findings(spark.createDataFrame(
+            [(i * 10 + j, f"n{j}", 86_400_000 * (j % 2) + i, None, None,
+              None, {}, []) for j in range(4)], schema), hp)
+    hist = ingest.read_findings(spark, hp)
+    want = (hist.count(), hist.agg(F.sum("finding_id")).first()[0])
+
+    def rows():
+        got = ingest.read_findings(spark, hp)
+        return got.count(), got.agg(F.sum("finding_id")).first()[0]
+
+    _kill_after_rename_aside(
+        monkeypatch, hp, lambda: ingest.compact_history(spark, hp))
+    assert ingest.compact_history(spark, hp)["rows"] == want[0]
+    assert rows() == want
+    assert not os.path.exists(hp + "._old")
+    assert not os.path.exists(hp + "._tmp")
+
+    _kill_before_delete_old(
+        monkeypatch, hp, lambda: ingest.compact_history(spark, hp))
+    assert ingest.compact_history(spark, hp)["rows"] == want[0]
+    assert rows() == want
+    assert not os.path.exists(hp + "._old")
 
 
 def test_update_latest_links_state_fold(spark, tmp_path):

@@ -148,6 +148,61 @@ def test_stream_distinct_content_same_subject_ts(spark, tmp_path):
     assert len([r for r in out2 if r["subject_node"] == "x"]) == 1
 
 
+def test_stream_latest_per_node_ties_break_like_batch(spark, tmp_path):
+    # Two subjects, each with two findings at the same found_at, one
+    # per file and in opposite finding_id order: an arrival-order rule
+    # (first in a batch, or newest batch) picks the smaller finding_id
+    # for one of them. The stream must keep the batch argmax's winner,
+    # the larger finding_id, in one micro-batch and in one per file.
+    from pyspark.sql import functions as F
+
+    from net_spider_spark.snapshot import latest_findings_per_node
+    from net_spider_spark.streaming.ingest import read_findings_json
+
+    def line(subject, v):
+        return json.dumps(_finding(subject, 100, [], {"v": v}))
+
+    def fid(text):
+        return spark.createDataFrame([(text,)], "value string").select(
+            F.xxhash64("value")).first()[0]
+
+    files = ([], [])
+    for subject, larger_first in (("x", True), ("y", False)):
+        pair = sorted((line(subject, "1"), line(subject, "2")), key=fid)
+        if larger_first:
+            pair.reverse()
+        for f, text in zip(files, pair):
+            f.append(text)
+    src = tmp_path / "in"
+    src.mkdir()
+    for n, f in enumerate(files):
+        (src / f"b{n}.jsonl").write_text("\n".join(f) + "\n")
+
+    want = {
+        r["subject_node"]: r["node_attrs"]
+        for r in latest_findings_per_node(
+            read_findings_json(spark, str(src))).collect()
+    }
+    assert len(want) == 2
+    for per_trigger in (None, 1):
+        out = []
+        q = (
+            stream_latest_per_node(stream_findings_json(
+                spark, str(src), max_files_per_trigger=per_trigger))
+            .writeStream.outputMode("update")
+            .foreachBatch(lambda d, _id: out.extend(
+                r.asDict(recursive=True) for r in d.collect()))
+            .option("checkpointLocation", str(tmp_path / f"ckpt{per_trigger}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        if per_trigger:
+            assert len(out) == 4  # both subjects emitted in both batches
+        got = {r["subject_node"]: r["node_attrs"] for r in out}  # last wins
+        assert got == want, per_trigger
+
+
 def test_stream_tz_fields_parsed(spark, tmp_path):
     src = tmp_path / "in"
     src.mkdir()
@@ -354,8 +409,8 @@ def test_stream_unified_link_custom_dio_merge(spark, tmp_path):
         dio_merge_samples,
         dio_unifier_conf,
     )
+    from net_spider_spark.findings import pair_link_samples
     from net_spider_spark.streaming.ingest import (
-        _explode_link_samples,
         read_findings_json,
         stream_unified_link_per_pair,
     )
@@ -388,7 +443,7 @@ def test_stream_unified_link_custom_dio_merge(spark, tmp_path):
 
     def batch_view():
         batch = read_findings_json(spark, str(src))
-        samples = _explode_link_samples(batch).withColumn("sub_id", F.lit(""))
+        samples = pair_link_samples(batch).withColumn("sub_id", F.lit(""))
         merged = samples.groupBy("p1", "p2", "sub_id").applyInPandas(
             dio_merge_samples, DIO_MERGE_SCHEMA)
         return {

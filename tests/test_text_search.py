@@ -1,10 +1,8 @@
-"""common_ngrams (boilerplate detection), BM25 retrieval, exact
-per-group quantiles."""
+"""common_ngrams (boilerplate detection), BM25 retrieval."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from net_spider_spark.pipeline import events as EV
 from net_spider_spark.pipeline import text as TX
 
 
@@ -49,21 +47,6 @@ def test_bm25_case_insensitive_and_dedup_terms(spark):
     )
     out = TX.bm25_search(docs, ["SPARK", "spark"], top_k=5).collect()
     assert [r["doc_id"] for r in out] == [1]
-
-
-def test_value_quantiles_match_numpy(spark):
-    import numpy as np
-
-    vals = [float(v % 97) for v in range(500)]
-    df = spark.createDataFrame(
-        [("a", v) for v in vals], "event_type string, value double"
-    )
-    r = EV.value_quantiles(df).collect()[0]
-    assert r["n_events"] == 500
-    for q, col in [(0.5, "p50"), (0.9, "p90"), (0.99, "p99")]:
-        want = float(np.quantile(np.array(vals), q))  # linear interp
-        assert abs(r[col] - want) < 1e-9, col
-    assert r["value_min"] == 0.0 and r["value_max"] == 96.0
 
 
 def test_token_divergence(spark):
