@@ -29,6 +29,16 @@ from pyspark.sql import functions as F
 T = TypeVar("T")
 
 
+def _recover_swap(path: str) -> None:
+    """Undo a :func:`swap_dir` crash between its two renames (``path``
+    absent, the only copy at ``._old``) before ``path`` is read,
+    appended to or swapped: an append must not re-create ``path`` with
+    just its own batch while the history sits aside. No Spark action."""
+    base = path.rstrip("/")
+    if not os.path.exists(base) and os.path.exists(base + "._old"):
+        os.rename(base + "._old", base)
+
+
 def swap_dir(path: str, write: Callable[[str], T]) -> T:
     """Replace the directory ``path`` with what ``write(tmp)`` writes
     into a sibling temp dir, crash-safely; return ``write``'s result.
@@ -38,16 +48,15 @@ def swap_dir(path: str, write: Callable[[str], T]) -> T:
     delete ``._old``. At every instant one complete copy is on disk,
     as ``path`` or as ``._old`` (the naive rmtree-then-rename order has
     a window with none). A crash between the two renames leaves the
-    only copy at ``._old``; the next swap of the same path renames it
-    back before ``write`` runs, so ``write`` may read ``path`` (absent
-    on a first swap). The swap itself runs no Spark action. Concurrent
-    readers can still see a gap between the two renames; a table
-    format (Delta/Iceberg) closes it.
+    only copy at ``._old``; :func:`_recover_swap` renames it back before
+    the next swap, read or append of the same path, so ``write`` may
+    read ``path`` (absent on a first swap). The swap itself runs no
+    Spark action. Concurrent readers can still see a gap between the
+    two renames; a table format (Delta/Iceberg) closes it.
     """
     base = path.rstrip("/")
     tmp, old = base + "._tmp", base + "._old"
-    if not os.path.exists(base) and os.path.exists(old):
-        os.rename(old, base)
+    _recover_swap(base)
     if os.path.exists(tmp):
         shutil.rmtree(tmp)  # stale partial write from a crashed run
     result = write(tmp)
@@ -68,6 +77,7 @@ def write_findings(
     partition_by_day: bool = True,
 ) -> None:
     """Vectorized batch append of findings (S2 ``addFoundNode`` x N)."""
+    _recover_swap(path)
     df = findings
     writer = None
     if partition_by_day:
@@ -96,6 +106,7 @@ def read_findings(
     here — this is the step that turns a 100 TB history scan into a
     per-interval scan.
     """
+    _recover_swap(path)
     df = spark.read.parquet(path)
     if "found_day" not in df.columns:
         return df

@@ -18,44 +18,20 @@ Parity target: ``net-spider-rpl/src/NetSpider/RPL/DIO.hs``:
   disabled (``negatesLinkSample = \\_ _ -> False``).
 * ``dioDefQuery`` (DIO.hs:246-252): default query wiring the unifier.
 
-The merge itself runs as an Arrow-batched ``applyInPandas`` per
-(pair, sub-ID) group — groups are a handful of rows (two endpoints'
-recent observations of one link), so the Python hook touches tiny
-slices while grouping/shuffling stays JVM-side.
+The merge is one ``merge_sides`` column expression over the two
+endpoints' latest samples (``unify.UnifyConfig``), so the snapshot's
+unify step is one Catalyst aggregate and the streaming view
+(``streaming.ingest.stream_unified_link_per_pair``) applies the same
+column to its two state slots.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import types as T
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 from net_spider_spark.snapshot import Query
 from net_spider_spark.unify import UnifyConfig, no_negation
-
-#: ``NeighborType`` merge precedence (DIO.hs:110-123, derive Ord).
-NEIGHBOR_TYPE_ORDER = {
-    "preferred_parent": 0,
-    "parent_candidate": 1,
-    "other_neighbor": 2,
-}
-
-#: Output of the DIO merge: the engine's link-sample shape
-#: (snapshot._SAMPLE_COLS behind the (p1, p2) pair key).
-DIO_MERGE_SCHEMA = T.StructType(
-    [
-        T.StructField("p1", T.StringType()),
-        T.StructField("p2", T.StringType()),
-        T.StructField("finding_id", T.LongType()),
-        T.StructField("link_pos", T.IntegerType()),
-        T.StructField("subject_node", T.StringType()),
-        T.StructField("target_node", T.StringType()),
-        T.StructField("link_state", T.StringType()),
-        T.StructField("found_at", T.LongType()),
-        T.StructField("link_attrs", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
-
-_OUT_COLS = [f.name for f in DIO_MERGE_SCHEMA.fields]
 
 
 def dio_link_state(neighbor_type: str) -> str:
@@ -63,64 +39,48 @@ def dio_link_state(neighbor_type: str) -> str:
     return "to_target" if neighbor_type == "preferred_parent" else "unused"
 
 
-def _nt_order(attrs) -> int:
-    nt = (attrs or {}).get("neighbor_type")
-    return NEIGHBOR_TYPE_ORDER.get(nt, len(NEIGHBOR_TYPE_ORDER))
+def _rank(side: Column) -> Column:
+    """``NeighborType`` merge precedence (DIO.hs:110-123, derive Ord):
+    the more parent-ish type compares smaller; a missing or unknown
+    type ranks last."""
+    nt = side["link_attrs"]["neighbor_type"]
+    return F.coalesce(
+        F.when(nt == "preferred_parent", 0)
+        .when(nt == "parent_candidate", 1)
+        .when(nt == "other_neighbor", 2),
+        F.lit(3),
+    )
 
 
-def _prefixed(prefix: str, attrs) -> dict:
+def _prefixed(prefix: str, side: Column) -> Column:
     """``withKeyPrefix`` (DIO.hs:238-243). The map encoding writes
     absent ``Maybe`` fields as empty strings; drop those so the merged
     attrs mirror ``GraphML.toAttributes`` omitting Nothing metrics."""
-    return {
-        f"{prefix}{k}": v
-        for k, v in (attrs or {}).items()
-        if v is not None and v != ""
-    }
+    attrs = F.coalesce(side["link_attrs"], F.create_map().cast("map<string,string>"))
+    kept = F.map_filter(attrs, lambda _, v: v.isNotNull() & (v != ""))
+    return F.transform_keys(kept, lambda k, _: F.concat(F.lit(prefix), k))
 
 
-def dio_merge_samples(pdf: pd.DataFrame) -> pd.DataFrame:
-    """``mergeSamples`` of ``dioUnifierConf`` (DIO.hs:254-279).
-
-    ``pdf`` holds one (pair, sub-ID) group: every kept observation of
-    one physical link, from both endpoints. Left = the pair's lesser
-    node ID (the order ``unifyStd`` sees endpoints in); ties on equal
-    neighbor type keep the left endpoint's sample, matching
-    ``neighborType main_ll <= neighborType sub_ll`` with main = left.
-    """
-    p1 = pdf["p1"].iat[0]
-    sides = []
-    for side_mask in (pdf["subject_node"] == p1, pdf["subject_node"] != p1):
-        side = pdf[side_mask]
-        if len(side):
-            side = side.sort_values(["found_at", "finding_id", "link_pos"])
-            sides.append(side.iloc[-1])
-        else:
-            sides.append(None)
-    left, right = sides
-    if left is None and right is None:
-        return pdf.iloc[0:0][_OUT_COLS]
-    if left is None or right is None:
-        main, sub = (left if right is None else right), None
-    else:
-        main, sub = left, right
-        if _nt_order(main["link_attrs"]) > _nt_order(sub["link_attrs"]):
-            main, sub = sub, main
-    merged = _prefixed("source_", main["link_attrs"])
-    if sub is not None:
-        merged.update(_prefixed("dest_", sub["link_attrs"]))
-    out = main.to_frame().T.copy()
-    out["link_attrs"] = [merged]
-    return out[_OUT_COLS]
+def dio_merge_sides(l: Column, r: Column) -> Column:
+    """``mergeSamples`` of ``dioUnifierConf`` (DIO.hs:254-279) over
+    each endpoint's latest sample: ``l`` from the pair's lesser node ID
+    (the order ``unifyStd`` sees endpoints in), ``r`` from the other.
+    The more parent-ish side is the base; equal neighbor types keep
+    ``l``, matching ``neighborType main_ll <= neighborType sub_ll``
+    with main = left. Attrs become the base's ``source_``-prefixed
+    attrs plus the other side's ``dest_``-prefixed ones."""
+    swap = l.isNull() | (_rank(l) > _rank(r))
+    main = F.when(swap, r).otherwise(l)
+    other = F.when(swap, l).otherwise(r)
+    return main.withField(
+        "link_attrs",
+        F.map_concat(_prefixed("source_", main), _prefixed("dest_", other)),
+    )
 
 
 def dio_unifier_conf() -> UnifyConfig:
     """``dioUnifierConf`` (DIO.hs:254-258)."""
-    return UnifyConfig(
-        merge_samples=dio_merge_samples,
-        merge_output_schema=DIO_MERGE_SCHEMA,
-        negates=no_negation,
-    )
+    return UnifyConfig(merge_sides=dio_merge_sides, negates=no_negation)
 
 
 def dio_def_query(starts_from=None, **kwargs) -> Query:

@@ -35,7 +35,7 @@ from net_spider_spark.findings import PAIR_KEY, explode_link_samples
 from net_spider_spark.interval import Interval
 from net_spider_spark.reliability import materialize_lazy
 from net_spider_spark.traverse import reachable_nodes
-from net_spider_spark.unify import UnifyConfig, unify_to_one
+from net_spider_spark.unify import UnifyConfig, no_negation, unify_to_one
 
 POLICY_OVERWRITE = "overwrite"
 POLICY_APPEND = "append"
@@ -400,7 +400,23 @@ def _unify_links(
     else:
         with_pair = samples.selectExpr("*", *PAIR_KEY, "'' AS sub_id")
 
-    if conf.merge_samples is not None:
+    if conf.merge_sides is not None:
+        # Two-sided merge: each endpoint's latest sample in one
+        # aggregate, then the hook's Column over the two.
+        side = (
+            "max_by(struct(" + ", ".join(_SAMPLE_COLS) + "), "
+            "struct(found_at, finding_id, link_pos)) FILTER (WHERE "
+        )
+        merged = (
+            with_pair.groupBy("p1", "p2", "sub_id")
+            .agg(
+                F.expr(side + "subject_node = p1)").alias("_l"),
+                F.expr(side + "subject_node != p1)").alias("_r"),
+            )
+            .select("p1", "p2", conf.merge_sides(F.col("_l"), F.col("_r")).alias("_w"))
+            .selectExpr("p1", "p2", *[f"_w.{c} AS {c}" for c in _SAMPLE_COLS])
+        )
+    elif conf.merge_samples is not None:
         # Custom merge: Arrow-batched grouped-map per (pair, sub_id).
         if conf.merge_output_schema is None:
             raise ValueError("merge_output_schema required with merge_samples")
@@ -440,12 +456,12 @@ def negate_and_resolve(
     # aggregate — orders of magnitude smaller than the sample table — so
     # these two equi-joins broadcast under AQE at typical scales. Both
     # read the same node subtree, which the plan computes once and
-    # reuses (exchange reuse), so nothing is persisted here.
-    node_ts = nodes.selectExpr("node_id", "node_ts AS _end_ts")
-    for end in ("p1", "p2"):
-        nt = node_ts.selectExpr(
-            f"node_id AS _{end}_id", f"_end_ts AS _{end}_ts"
-        )
+    # reuses (exchange reuse), so nothing is persisted here. With
+    # negation off (the RPL unifiers) the joins are not built: Catalyst
+    # would prune them, but only after analyzing the node subtree twice.
+    ends = ("p1", "p2") if conf.negates is not no_negation else ()
+    for end in ends:
+        nt = nodes.selectExpr(f"node_id AS _{end}_id", f"node_ts AS _{end}_ts")
         merged = merged.join(nt, merged[end] == nt[f"_{end}_id"], "left")
         merged = merged.filter(
             ~conf.negates(F.col(f"_{end}_id"), F.col(f"_{end}_ts"))

@@ -28,13 +28,14 @@ import json
 from typing import Callable, Iterable, Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from net_spider_spark.findings import pair_link_samples
 from net_spider_spark.model import FINDINGS_SCHEMA
+from net_spider_spark.snapshot import _SAMPLE_COLS
 
 # JSON wire schema for one finding per line (FIXTURES.md §4).
 FINDING_JSON_SCHEMA = T.StructType(
@@ -300,17 +301,31 @@ def stream_latest_link_per_pair(findings_stream: DataFrame) -> DataFrame:
 _UNIFIED_STATE_SCHEMA = "left STRING, right STRING"
 
 
+def _later_side(l: Column, r: Column) -> Column:
+    """The default merge as a ``merge_sides`` column: the later of the
+    two side-latest samples under (found_at, finding_id, link_pos),
+    which is the latest of all the pair's samples (max is
+    associative)."""
+
+    def key(side: Column) -> Column:
+        return F.struct(side["found_at"], side["finding_id"], side["link_pos"])
+
+    return F.when(r.isNull() | (l.isNotNull() & (key(l) > key(r))), l).otherwise(r)
+
+
 def stream_unified_link_per_pair(findings_stream: DataFrame, conf) -> DataFrame:
     """Custom-unifier incremental link view: the streaming twin of the
-    batch ``_unify_links`` custom-merge path (``snapshot.py``), keyed by
-    (pair, sub-ID) with ``applyInPandasWithState``.
+    batch ``_unify_links`` (``snapshot.py``), keyed by (pair, sub-ID)
+    with ``applyInPandasWithState``.
 
     State per key = the LATEST sample from each endpoint side (under
     the batch ordering (found_at, finding_id, link_pos)); each
-    micro-batch folds its per-side argmax into the slots and re-runs
-    ``conf.merge_samples`` on the (<= 2)-row group — so replaying the
-    stream emits exactly what the batch ``applyInPandas`` merge
-    produces over the full sample history, late data included.
+    micro-batch folds its per-side argmax into the slots and re-merges
+    them: ``conf.merge_sides`` is the same Column the batch aggregate
+    projects, applied to the two slots; a pandas ``conf.merge_samples``
+    re-runs on the (<= 2)-row group. So replaying the stream emits
+    exactly what the batch merge produces over the full sample
+    history, late data included.
 
     CONTRACT: faithful for unifiers whose merge depends only on each
     endpoint's latest sample — the reference's flagship
@@ -323,69 +338,41 @@ def stream_unified_link_per_pair(findings_stream: DataFrame, conf) -> DataFrame:
 
     Default-merge configs are supported too: with no ``sub_id`` this
     degrades to :func:`stream_latest_link_per_pair`; with a ``sub_id``
-    the same stateful machinery runs keyed by (pair, sub-ID) with a
-    synthesized latest-wins merge, so multi-link pairs keep one winner
-    PER PHYSICAL LINK exactly like the batch path. A
+    the same stateful machinery runs keyed by (pair, sub-ID) and merges
+    with the later of the two slots, so multi-link pairs keep one
+    winner PER PHYSICAL LINK exactly like the batch path. A
     ``winner_transform`` is applied as Column rewrites over the merged
     output, mirroring ``snapshot.py``; ``negates`` needs the node view
     and stays a batch join downstream for every config, as with the
     default path.
     """
-    if conf.merge_samples is None and conf.sub_id is None:
-        out = stream_latest_link_per_pair(findings_stream)
-        if conf.winner_transform is not None:
-            for name, col in conf.winner_transform().items():
-                out = out.withColumn(name, col)
-        return out
-    if conf.merge_samples is None:
-        # sub_id with the default merge: latest sample per (pair,
-        # sub-ID) under the batch ordering — the group is <= 2 slot
-        # rows, so the overall latest equals the latest of the two
-        # side-latests (associativity of max).
-        _DEFAULT_OUT = [
-            "p1", "p2", "sub_id", "subject_node", "target_node",
-            "link_state", "found_at", "finding_id", "link_pos",
-            "link_attrs",
-        ]
-
-        def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-            i = pdf.sort_values(
-                ["found_at", "finding_id", "link_pos"]
-            ).index[-1]
-            return pdf.loc[[i], _DEFAULT_OUT]
-
-        merge_output_schema = T.StructType(
-            [
-                T.StructField("p1", T.StringType()),
-                T.StructField("p2", T.StringType()),
-                T.StructField("sub_id", T.StringType()),
-                T.StructField("subject_node", T.StringType()),
-                T.StructField("target_node", T.StringType()),
-                T.StructField("link_state", T.StringType()),
-                T.StructField("found_at", T.LongType()),
-                T.StructField("finding_id", T.LongType()),
-                T.StructField("link_pos", T.IntegerType()),
-                T.StructField(
-                    "link_attrs", T.MapType(T.StringType(), T.StringType())
-                ),
-            ]
-        )
-    else:
-        if conf.merge_output_schema is None:
-            raise ValueError(
-                "merge_output_schema required with merge_samples"
-            )
-        merge = conf.merge_samples
-        merge_output_schema = conf.merge_output_schema
+    merge_sides = conf.merge_sides
+    merge = conf.merge_samples if merge_sides is None else None
+    if merge is None and merge_sides is None:
+        if conf.sub_id is None:
+            out = stream_latest_link_per_pair(findings_stream)
+            if conf.winner_transform is not None:
+                for name, col in conf.winner_transform().items():
+                    out = out.withColumn(name, col)
+            return out
+        merge_sides = _later_side
     # The merged row's own found_at is NOT monotone across batches (a
     # winner flip can adopt the other side's older timestamp), so each
     # emission carries ``_state_ord`` — the two slot ordering tuples,
     # which only ever advance — and a multi-batch update-mode sink
     # reduces with max_by(_state_ord) to recover the final view
     # independent of micro-batch boundaries.
+    if merge is None:
+        # the two slots as JSON, parsed and merged in the JVM below
+        out_fields = T.StructType.fromDDL(
+            "p1 STRING, p2 STRING, sub_id STRING, _l STRING, _r STRING"
+        ).fields
+    elif conf.merge_output_schema is None:
+        raise ValueError("merge_output_schema required with merge_samples")
+    else:
+        out_fields = conf.merge_output_schema.fields
     out_schema = T.StructType(
-        list(merge_output_schema.fields)
-        + [T.StructField("_state_ord", T.ArrayType(T.LongType()))]
+        out_fields + [T.StructField("_state_ord", T.ArrayType(T.LongType()))]
     )
 
     keyed = pair_link_samples(findings_stream)
@@ -427,16 +414,8 @@ def stream_unified_link_per_pair(findings_stream: DataFrame, conf) -> DataFrame:
                     cand["found_at"], cand["finding_id"], cand["link_pos"]
                 ) > (cur["found_at"], cur["finding_id"], cur["link_pos"]):
                     slots[side] = cand
-        state.update(
-            tuple(json.dumps(s) if s is not None else None for s in slots)
-        )
-        rows = [s for s in slots if s is not None]
-        group = pd.DataFrame(
-            [
-                {"p1": p1, "p2": p2, "sub_id": sid, **s}
-                for s in rows
-            ]
-        )
+        docs = tuple(json.dumps(s) if s is not None else None for s in slots)
+        state.update(docs)
         ord_vals = [
             v
             for s in slots
@@ -446,9 +425,17 @@ def stream_unified_link_per_pair(findings_stream: DataFrame, conf) -> DataFrame:
                 else (-1, -1, -1)
             )
         ]
-        mdf = merge(group)
-        mdf = mdf.assign(_state_ord=[list(ord_vals)] * len(mdf))
-        yield mdf
+        if merge is None:
+            mdf = pd.DataFrame(
+                {"p1": [p1], "p2": [p2], "sub_id": [sid],
+                 "_l": [docs[0]], "_r": [docs[1]]}
+            )
+        else:
+            mdf = merge(pd.DataFrame(
+                [{"p1": p1, "p2": p2, "sub_id": sid, **s}
+                 for s in slots if s is not None]
+            ))
+        yield mdf.assign(_state_ord=[list(ord_vals)] * len(mdf))
 
     out = keyed.groupBy("p1", "p2", "sub_id").applyInPandasWithState(
         update,
@@ -457,6 +444,15 @@ def stream_unified_link_per_pair(findings_stream: DataFrame, conf) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+    if merge is None:
+        sample_t = keyed.select(F.struct(*_SAMPLE_COLS)).schema[0].dataType
+        l, r = (F.from_json(c, sample_t) for c in ("_l", "_r"))
+        out = out.select(
+            "p1", "p2", "sub_id", merge_sides(l, r).alias("_w"), "_state_ord"
+        ).selectExpr(
+            "p1", "p2", "sub_id", *[f"_w.{c} AS {c}" for c in _SAMPLE_COLS],
+            "_state_ord",
+        )
     if conf.winner_transform is not None:
         # Column rewrites over the merged sample, exactly where the
         # batch path applies them (snapshot._unify_links)

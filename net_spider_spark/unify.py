@@ -16,11 +16,14 @@ The standard unifier (``unifyStd``, Unify.hs:169-193) is, relationally:
    (``defNegatesLinkSample``, Unify.hs:213-217: endpoint has a newer
    node timestamp and is not the sample's subject).
 
-The default path is pure Catalyst expressions (whole-stage codegen);
-a custom ``merge_samples`` drops to Arrow-batched ``applyInPandas``
-per pair-group only when the semantics genuinely need it
-(e.g. attribute-type-changing merges like MergedDIOLink,
-net-spider-rpl/src/NetSpider/RPL/DIO.hs:230-279).
+The default path is pure Catalyst expressions (whole-stage codegen).
+A merge that depends only on each endpoint's latest sample, like the
+attribute-type-changing MergedDIOLink merge
+(net-spider-rpl/src/NetSpider/RPL/DIO.hs:230-279), is a
+``merge_sides`` column expression over the two side-latest samples and
+stays in Catalyst too; a custom ``merge_samples`` drops to
+Arrow-batched ``applyInPandas`` per pair-group only for merges that
+need the whole group.
 """
 
 from __future__ import annotations
@@ -45,6 +48,13 @@ WinnerTransform = Callable[[], dict[str, Column]]
 # Custom negation: (endpoint_node_id, endpoint_node_ts, sample cols in
 # scope) -> boolean Column; True kills the link.
 NegatesExpr = Callable[[Column, Column], Column]
+
+# Two-sided merge: (l, r) -> the merged sample. ``l``/``r`` are the
+# latest samples (structs over snapshot._SAMPLE_COLS, ordered by
+# (found_at, finding_id, link_pos)) observed by the pair's lesser
+# endpoint p1 and by the other endpoint; either may be null. Returns a
+# struct with the same fields.
+MergeSidesExpr = Callable[[Column, Column], Column]
 
 
 def default_negates(node_id: Column, node_ts: Column) -> Column:
@@ -125,10 +135,13 @@ class UnifyConfig:
 
     ``sub_id``: expression builder partitioning a node-pair's samples
     into physical links (default: single group).
-    ``merge_samples``: None => latest-by-timestamp ``max_by`` (pure
-    SQL); else a pandas grouped-map function
+    ``merge_sides``: a Column-level merge of each endpoint's latest
+    sample (``MergeSidesExpr``), run as one aggregate (pure SQL); it
+    takes precedence over ``merge_samples``.
+    ``merge_samples``: a pandas grouped-map function
     ``(pandas.DataFrame) -> pandas.DataFrame`` returning <= 1 row per
-    group with ``merge_output_schema``.
+    group with ``merge_output_schema``. With neither, the merge is the
+    latest-by-timestamp ``max_by`` (pure SQL).
     ``winner_transform``: Column rewrites applied to the merged sample
     (e.g. port alignment).
     ``negates``: negation predicate builder; ``default_negates`` or
@@ -136,6 +149,7 @@ class UnifyConfig:
     """
 
     sub_id: Optional[SubIdExpr] = None
+    merge_sides: Optional[MergeSidesExpr] = None
     merge_samples: Optional[Callable] = None
     merge_output_schema: Optional[T.StructType] = None
     winner_transform: Optional[WinnerTransform] = None

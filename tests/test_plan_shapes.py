@@ -10,10 +10,14 @@ loaded box.
 import pytest
 from pyspark.sql import functions as F
 
-from net_spider_spark import ingest
+from net_spider_spark import graphml, ingest
+from net_spider_spark.cli import main
 from net_spider_spark.findings import FoundLink, FoundNode, findings_to_df
 from net_spider_spark.incremental import fold_latest_links
 from net_spider_spark.interval import Interval
+from net_spider_spark.rpl.dao import dao_def_query
+from net_spider_spark.rpl.dio import dio_def_query
+from net_spider_spark.snapshot import Query, get_snapshot
 from net_spider_spark.pipeline import curate as CU
 from net_spider_spark.pipeline import dedup as D
 
@@ -50,6 +54,49 @@ def test_partitioned_history_scan_prunes(spark, tmp_path):
     # partition filter reaches the FileSourceScan.
     assert "found_day" in plan and "PartitionFilters: [" in plan
     assert pruned.count() == 20  # days 2 and 3 only
+
+
+def test_cis_snapshot_runs_no_python(spark, tmp_path, monkeypatch, capsys):
+    # The CLI cis composition (DIO + DAO snapshots, combine_graphs) is
+    # Catalyst end to end: no pandas grouped map, no Python UDF.
+    import os
+
+    log = os.path.join(os.path.dirname(__file__), "data", "syslog_sample.log")
+    plans = []
+
+    def capture(nodes, links, write):
+        plans.extend(plan_of(df) for df in (nodes, links))
+
+    monkeypatch.setattr(graphml, "write_graphml_to", capture)
+    assert main(["--db", str(tmp_path / "db"), "cis", log, "--year", "2021"],
+                spark=spark) == 0
+    assert len(plans) == 2
+    for plan in plans:
+        for op in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert op not in plan, plan
+
+
+def _analyzed_links(spark, query):
+    findings = findings_to_df(spark, [
+        FoundNode("a", 1000, [FoundLink("b")]),
+        FoundNode("b", 2000, [FoundLink("a"), FoundLink("c")]),
+        FoundNode("c", 1500, []),
+    ])
+    _, links = get_snapshot(findings, query)
+    return links._jdf.queryExecution().analyzed().toString()
+
+
+def test_negation_joins_only_when_negation_is_on(spark):
+    # With negation off (the DIO and DAO unifiers) the links plan has
+    # no node-timestamp join at all, not even one Catalyst prunes later.
+    for query in (dio_def_query(found_node_policy="append"),
+                  dao_def_query(found_node_policy="append")):
+        assert "Join" not in _analyzed_links(spark, query)
+    # The default unifier keeps both negation joins, under either
+    # policy (the overwrite policy's argmax adds its LeftSemi join).
+    for policy in ("append", "overwrite"):
+        plan = _analyzed_links(spark, Query(found_node_policy=policy))
+        assert plan.count("Join LeftOuter") == 2, plan
 
 
 def test_codegen_only_ops_have_no_exchange(docs):

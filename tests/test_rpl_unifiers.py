@@ -4,10 +4,27 @@ no-negation default merge (DAO.hs:139-140), driven through the full
 snapshot pipeline. The merged-attribute expectations mirror the
 MergedDIOLink example in test/NetSpider/RPL/DIOSpec.hs:36-44."""
 
-from net_spider_spark.findings import FoundLink, FoundNode, findings_to_df
+import random
+
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from net_spider_spark.findings import (
+    FoundLink,
+    FoundNode,
+    findings_to_df,
+    pair_link_samples,
+)
+from net_spider_spark.model import FINDINGS_SCHEMA
 from net_spider_spark.rpl.dao import dao_def_query, dao_unifier_conf
 from net_spider_spark.rpl.dio import dio_def_query, dio_link_state, dio_unifier_conf
-from net_spider_spark.snapshot import Query, get_snapshot
+from net_spider_spark.snapshot import (
+    Query,
+    get_snapshot,
+    latest_findings_per_node,
+    negate_and_resolve,
+)
 
 
 def _dio_link(target, nt, rank, metric=None, ts_state=None):
@@ -134,9 +151,169 @@ def test_dao_unifier_disables_negation(spark):
 
 def test_unifier_conf_shapes():
     dio = dio_unifier_conf()
-    assert dio.merge_samples is not None and dio.merge_output_schema is not None
+    # a Catalyst column merge, no pandas hook
+    assert dio.merge_sides is not None and dio.merge_samples is None
     dao = dao_unifier_conf()
-    assert dao.merge_samples is None  # stays on the pure-Catalyst path
+    assert dao.merge_sides is None and dao.merge_samples is None
+
+
+# ---------------------------------------------------------------------------
+# DIO merge property: the Catalyst merge against the pandas reference
+# ---------------------------------------------------------------------------
+
+#: ``NeighborType`` merge precedence (DIO.hs:110-123, derive Ord).
+_NT_ORDER = {"preferred_parent": 0, "parent_candidate": 1, "other_neighbor": 2}
+
+_ORACLE_SCHEMA = (
+    "p1 string, p2 string, finding_id long, link_pos int, subject_node string, "
+    "target_node string, link_state string, found_at long, "
+    "link_attrs map<string,string>"
+)
+_ORACLE_COLS = [c.split()[0] for c in _ORACLE_SCHEMA.split(", ")]
+
+
+def _nt_order(attrs) -> int:
+    nt = (attrs or {}).get("neighbor_type")
+    return _NT_ORDER.get(nt, len(_NT_ORDER))
+
+
+def _prefixed(prefix, attrs) -> dict:
+    return {
+        f"{prefix}{k}": v
+        for k, v in (attrs or {}).items()
+        if v is not None and v != ""
+    }
+
+
+def oracle_dio_merge_samples(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The pandas grouped-map DIO merge the engine ran before its
+    Catalyst merge (``mergeSamples`` of ``dioUnifierConf``,
+    DIO.hs:254-279), kept as the reference: each endpoint's latest
+    sample, the more parent-ish one as the base (the pair's lesser
+    node ID on a tie), ``source_``/``dest_``-prefixed attrs."""
+    p1 = pdf["p1"].iat[0]
+    sides = []
+    for side_mask in (pdf["subject_node"] == p1, pdf["subject_node"] != p1):
+        side = pdf[side_mask]
+        if len(side):
+            side = side.sort_values(["found_at", "finding_id", "link_pos"])
+            sides.append(side.iloc[-1])
+        else:
+            sides.append(None)
+    left, right = sides
+    if left is None and right is None:
+        return pdf.iloc[0:0][_ORACLE_COLS]
+    if left is None or right is None:
+        main, sub = (left if right is None else right), None
+    else:
+        main, sub = left, right
+        if _nt_order(main["link_attrs"]) > _nt_order(sub["link_attrs"]):
+            main, sub = sub, main
+    merged = _prefixed("source_", main["link_attrs"])
+    if sub is not None:
+        merged.update(_prefixed("dest_", sub["link_attrs"]))
+    out = main.to_frame().T.copy()
+    out["link_attrs"] = [merged]
+    return out[_ORACLE_COLS]
+
+
+def _random_dio_history(rng):
+    """Findings over 6 nodes: found_at from 3 values (ties broken by
+    finding_id), a target may repeat within a finding (ties broken by
+    link_pos), neighbor types of all four ranks (missing and unknown
+    rank last), null attr maps, '' and null attr values. No sample is
+    'unused', so every merged link reaches the snapshot."""
+    nodes = [f"n{i}" for i in range(6)]
+    rows = []
+    for fid in range(40):
+        subject = rng.choice(nodes)
+        links = []
+        for _ in range(rng.randint(0, 3)):
+            attrs = None
+            if rng.random() > 0.1:
+                attrs = {"neighbor_rank": str(rng.randint(1, 999))}
+                nt = rng.choice(list(_NT_ORDER) + ["bogus", None])
+                if nt is not None:
+                    attrs["neighbor_type"] = nt
+                attrs["metric"] = rng.choice(["", None, str(rng.randint(1, 500))])
+            target = (links[-1][0] if links and rng.random() < 0.5
+                      else rng.choice([n for n in nodes if n != subject]))
+            links.append((
+                target,
+                rng.choice(["to_target", "to_subject", "bidirectional"]),
+                attrs,
+            ))
+        rows.append((fid, subject, rng.choice([1000, 2000, 3000]),
+                     None, None, None, {}, links))
+    return rows
+
+
+def _coverage(rows) -> set:
+    """Which of the property's cases the history exercises."""
+    latest, keys = {}, {}
+    for fid, subject, ts, *_, links in rows:
+        for pos, (target, _, attrs) in enumerate(links):
+            pair = (min(subject, target), max(subject, target))
+            side = (pair, subject == pair[0])
+            keys.setdefault(side, []).append((ts, fid, pos))
+            if side not in latest or (ts, fid, pos) > latest[side][0]:
+                latest[side] = ((ts, fid, pos), attrs)
+    cases = set()
+    for (pair, is_left), (_, attrs) in latest.items():
+        other = latest.get((pair, not is_left))
+        cases.add("two-sided" if other else "one-sided")
+        cases.add(f"rank {_nt_order(attrs)}")
+        if attrs is None:
+            cases.add("null map")
+        else:
+            cases.update(
+                "'' value" if v == "" else "null value"
+                for v in attrs.values() if v in ("", None)
+            )
+        if other and is_left and _nt_order(attrs) == _nt_order(other[1]):
+            cases.add("equal ranks")
+    for side, ks in keys.items():
+        best = latest[side][0]
+        if any(k[0] == best[0] and k[1] != best[1] for k in ks):
+            cases.add("found_at tie")  # finding_id picks the latest
+        if any(k[:2] == best[:2] and k != best for k in ks):
+            cases.add("finding_id tie")  # link_pos picks the latest
+    return cases
+
+
+def _link_rows(links):
+    return sorted(
+        (r["source_node"], r["dest_node"], r["is_directed"], r["link_ts"],
+         r["attrs"])
+        for r in links.select(
+            "source_node", "dest_node", "is_directed", "link_ts",
+            F.map_entries("link_attrs").alias("attrs"),
+        ).collect()
+    )
+
+
+@pytest.mark.parametrize("policy", ["append", "overwrite"])
+def test_dio_merge_matches_pandas_reference(spark, policy):
+    cases = set()
+    for seed in range(4):
+        rows = _random_dio_history(random.Random(seed))
+        cases |= _coverage(rows)
+        findings = spark.createDataFrame(rows, FINDINGS_SCHEMA)
+        nodes, links = get_snapshot(
+            findings, dio_def_query(found_node_policy=policy))
+        kept = (latest_findings_per_node(findings) if policy == "overwrite"
+                else findings)
+        merged = pair_link_samples(kept).groupBy("p1", "p2").applyInPandas(
+            oracle_dio_merge_samples, _ORACLE_SCHEMA)
+        want = _link_rows(negate_and_resolve(merged, nodes, dio_unifier_conf()))
+        got = _link_rows(links)
+        assert got == want and got, f"seed {seed}"
+    if policy == "append":
+        assert cases >= {
+            "one-sided", "two-sided", "equal ranks", "rank 0", "rank 1",
+            "rank 2", "rank 3", "null map", "'' value", "null value",
+            "found_at tie", "finding_id tie",
+        }, cases
 
 
 # ---------------------------------------------------------------------------

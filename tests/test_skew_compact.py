@@ -190,6 +190,34 @@ def test_update_latest_state_crash_windows(spark, tmp_path, monkeypatch):
     assert not os.path.exists(hp + "._old")
 
 
+def test_append_after_crashed_swap_keeps_history(spark, tmp_path, monkeypatch):
+    # A crash between the swap's two renames leaves the history only at
+    # ._old. An append before the next compaction must not re-create
+    # the table with just its own batch (that compaction would then
+    # delete ._old, the whole earlier history): reads, appends and
+    # swaps all recover the aside copy first.
+    schema = (
+        "finding_id long, subject_node string, found_at long, "
+        "tz_offset_min int, tz_summer_only boolean, tz_name string, "
+        "node_attrs map<string,string>, "
+        "neighbor_links array<struct<target_node:string,link_state:string,"
+        "link_attrs:map<string,string>>>"
+    )
+    hp = str(tmp_path / "hist")
+    ingest.write_findings(spark.createDataFrame(
+        [(j, f"n{j}", 86_400_000 * (j % 2) + j, None, None, None, {}, [])
+         for j in range(10)], schema), hp)
+    _kill_after_rename_aside(
+        monkeypatch, hp, lambda: ingest.compact_history(spark, hp))
+
+    ingest.write_findings(spark.createDataFrame(
+        [(10, "n10", 5, None, None, None, {}, [])], schema), hp)
+    assert ingest.read_findings(spark, hp).count() == 11
+    assert ingest.compact_history(spark, hp)["rows"] == 11
+    assert ingest.read_findings(spark, hp).count() == 11
+    assert not os.path.exists(hp + "._old")
+
+
 def test_update_latest_links_state_fold(spark, tmp_path):
     # links-side persistent incremental state: fold == full-history
     # reduction, and refolding a replayed batch is a no-op (argmax

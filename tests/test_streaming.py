@@ -400,16 +400,10 @@ def test_stream_unified_link_custom_dio_merge(spark, tmp_path):
     # VERDICT r4 #6: the custom unifier (the reference's flagship
     # dioUnifierConf two-endpoint merge, DIO.hs:255-279) maintained
     # INCREMENTALLY: latest-sample-per-side state + re-merge per batch
-    # must agree with the batch applyInPandas merge on full replay,
+    # must agree with the batch get_snapshot merge on full replay,
     # late data and winner flips included.
-    from pyspark.sql import functions as F
-
-    from net_spider_spark.rpl.dio import (
-        DIO_MERGE_SCHEMA,
-        dio_merge_samples,
-        dio_unifier_conf,
-    )
-    from net_spider_spark.findings import pair_link_samples
+    from net_spider_spark.rpl.dio import dio_def_query, dio_unifier_conf
+    from net_spider_spark.snapshot import get_snapshot
     from net_spider_spark.streaming.ingest import (
         read_findings_json,
         stream_unified_link_per_pair,
@@ -437,19 +431,23 @@ def test_stream_unified_link_custom_dio_merge(spark, tmp_path):
         # pair changes: the LAST emission per pair is the current view
         view = {}
         for r in out:
-            view[(r["p1"], r["p2"])] = (
-                r["subject_node"], r["found_at"], r["link_attrs"])
-        return view
+            view[(r["p1"], r["p2"])] = r
+        # the links a snapshot keeps (DIO links are to_target or unused)
+        return {
+            k: (r["subject_node"], r["found_at"], r["link_attrs"])
+            for k, r in view.items()
+            if r["link_state"] != "unused"
+        }
 
     def batch_view():
         batch = read_findings_json(spark, str(src))
-        samples = pair_link_samples(batch).withColumn("sub_id", F.lit(""))
-        merged = samples.groupBy("p1", "p2", "sub_id").applyInPandas(
-            dio_merge_samples, DIO_MERGE_SCHEMA)
+        _, links = get_snapshot(
+            batch, dio_def_query(found_node_policy="append"))
         return {
-            (r["p1"], r["p2"]): (
-                r["subject_node"], r["found_at"], r["link_attrs"])
-            for r in merged.collect()
+            (min(r["source_node"], r["dest_node"]),
+             max(r["source_node"], r["dest_node"])): (
+                r["source_node"], r["link_ts"], r["link_attrs"])
+            for r in links.collect()
         }
 
     # batch 1: both endpoints observe (a,b); a's view is more parent-ish
