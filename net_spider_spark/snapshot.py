@@ -120,6 +120,11 @@ def latest_findings_per_node(findings: DataFrame) -> DataFrame:
     ``count()`` prunes the payload and flatters ``max_by``): the
     earlier per-column argmax rounds 10-18 s, full-row
     ``max_by(struct)`` 8-21 s, window ``row_number`` 17-20 s.
+
+    The incremental fold (``incremental.fold_latest_nodes``) keeps the
+    same winners but is one full-row ``max_by``: its input is the
+    node-sized state plus one batch, never the history, and there the
+    join's extra pass over the input costs more than the sort.
     """
     return keep_argmax(findings, ["subject_node"], ["found_at", "finding_id"])
 

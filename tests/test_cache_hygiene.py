@@ -45,7 +45,10 @@ def test_operator_burst_leaves_cache_manager_empty(spark, tmp_path, monkeypatch)
     from net_spider_spark.graph.components import connected_components
     from net_spider_spark.findings import FoundLink, FoundNode, findings_to_df
     from net_spider_spark.graphml import write_graphml_to
-    from net_spider_spark.incremental import update_latest_state
+    from net_spider_spark.incremental import (
+        update_latest_links_state,
+        update_latest_state,
+    )
     from net_spider_spark.ingest import (
         compact_history,
         read_findings,
@@ -137,14 +140,16 @@ def test_operator_burst_leaves_cache_manager_empty(spark, tmp_path, monkeypatch)
         snap_links.collect()
     snapshot_timeline(findings, [15, 25, 35]).collect()
 
-    # History storage: append and read back, two latest-state folds
-    # (the second folds into existing state) and a compaction.
+    # History storage: append and read back, two folds of each latest
+    # state, node and link (the second folds into existing state), and
+    # a compaction.
     hist = str(tmp_path / "hist")
     write_findings(findings, hist)
     read_findings(spark, hist).collect()
-    state = str(tmp_path / "state")
-    for batch in (findings, read_findings(spark, hist)):
-        update_latest_state(spark, state, batch).collect()
+    for update, state in ((update_latest_state, str(tmp_path / "state")),
+                          (update_latest_links_state, str(tmp_path / "lstate"))):
+        for batch in (findings, read_findings(spark, hist)):
+            update(spark, state, batch).collect()
     compact_history(spark, hist)
 
     # The CLI cis composition: clear, parse + append, then the dio and

@@ -7,13 +7,19 @@ These assert on `explain` output, not timings, so they are stable on a
 loaded box.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from net_spider_spark import graphml, ingest
 from net_spider_spark.cli import main
 from net_spider_spark.findings import FoundLink, FoundNode, findings_to_df
-from net_spider_spark.incremental import fold_latest_links
+from net_spider_spark.incremental import (
+    fold_latest_links,
+    fold_latest_nodes,
+    update_latest_state,
+)
 from net_spider_spark.interval import Interval
 from net_spider_spark.rpl.dao import dao_def_query
 from net_spider_spark.rpl.dio import dio_def_query
@@ -162,6 +168,40 @@ def test_incremental_links_single_aggregate(spark):
     assert sorted(map(str, state.collect())) == sorted(
         map(str, fold_latest_links(None, findings).collect())
     )
+
+
+def test_incremental_nodes_single_aggregate(spark, tmp_path):
+    # The node-state fold is one aggregate (partial + final) over the
+    # union of state and batch: no join, no second pass over the union.
+    # A refold into a stored state runs the old state's schema
+    # inference plus the write (two jobs under AQE) and nothing more.
+    from conftest import spark_jobs
+
+    findings = findings_to_df(
+        spark,
+        [
+            FoundNode(
+                f"n{i % 5}",
+                1000 + i,
+                [FoundLink(f"n{(i + 1) % 5}"), FoundLink(f"n{(i + 2) % 5}")],
+            )
+            for i in range(20)
+        ],
+    )
+    b1 = findings.where(findings.finding_id % 2 == 0)
+    b2 = findings.where(findings.finding_id % 2 == 1)
+    plan = plan_of(fold_latest_nodes(b1, b2))
+    assert "Join" not in plan
+    assert len(re.findall(r"Aggregate\(", plan)) == 2, plan
+    state = fold_latest_nodes(fold_latest_nodes(None, b1), b2)
+    assert "Join" not in plan_of(state)
+
+    path = str(tmp_path / "state")
+    update_latest_state(spark, path, b1)
+    jobs = spark_jobs(spark)
+    got = update_latest_state(spark, path, b2)
+    assert jobs() <= 3, jobs.describe()
+    assert sorted(map(str, got.collect())) == sorted(map(str, state.collect()))
 
 
 def test_set_based_dedup_never_explodes_shingles(docs):

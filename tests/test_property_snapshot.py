@@ -12,9 +12,11 @@ from unittest import mock
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from net_spider_spark import sizing, traverse
 from net_spider_spark.findings import FoundLink, FoundNode, findings_to_df
+from net_spider_spark.incremental import fold_latest_nodes, update_latest_state
 from net_spider_spark.interval import Interval
 from net_spider_spark.pyweaver import PyFinding, PyLink, snapshot as py_snapshot
 from net_spider_spark.snapshot import (
@@ -22,6 +24,7 @@ from net_spider_spark.snapshot import (
     BOUNDARY_VISIT,
     Query,
     get_snapshot,
+    latest_findings_per_node,
 )
 
 NODE_IDS = ["a", "b", "c", "d", "e"]
@@ -64,8 +67,8 @@ tied_findings_st = st.lists(
 ).map(_numbered)
 
 
-def run_engine(spark, pyfindings, **query_kw):
-    fns = [
+def to_df(spark, pyfindings):
+    return findings_to_df(spark, [
         FoundNode(
             f.subject,
             f.found_at,
@@ -73,8 +76,11 @@ def run_engine(spark, pyfindings, **query_kw):
             node_attrs=dict(f.attrs),
         )
         for f in pyfindings
-    ]
-    df = findings_to_df(spark, fns)
+    ])
+
+
+def run_engine(spark, pyfindings, **query_kw):
+    df = to_df(spark, pyfindings)
     nodes_df, links_df = get_snapshot(df, Query(**query_kw))
     node_rows = nodes_df.collect()
     link_rows = [
@@ -290,6 +296,73 @@ def test_custom_negates_matches_spec(spark, fs, policy, grace, exempt_subject):
     assert got_links == exp_links, (
         f"links differ for {fs} grace={grace} exempt={exempt_subject}"
     )
+
+
+def _row_set(df):
+    """A frame's rows as a set (exact duplicates collapsed), columns in
+    name order, maps and arrays made hashable."""
+
+    def canon(v):
+        if isinstance(v, dict):
+            return tuple(sorted((k, canon(x)) for k, x in v.items()))
+        if isinstance(v, (list, tuple)):
+            return tuple(canon(x) for x in v)
+        return v
+
+    return {canon(r) for r in df.select(*sorted(df.columns)).collect()}
+
+
+batched_findings_st = findings_st.flatmap(
+    lambda fs: st.tuples(
+        st.just(fs),
+        st.lists(st.integers(0, 2), min_size=len(fs), max_size=len(fs)),
+        st.integers(0, 2),
+    )
+)
+
+
+def check_fold_equals_recompute(spark, batched, fold_all):
+    """Split the findings into three batches (any may be empty), replay
+    one of them, fold the four in order with ``fold_all(batches)``; the
+    folded state must equal the full-history reduction."""
+    fs, assign, replay = batched
+    history = to_df(spark, fs)
+    batches = [
+        history.where(F.col("finding_id").isin(
+            [i for i, b in enumerate(assign) if b == k]))
+        for k in range(3)
+    ]
+    batches.append(batches[replay])
+    want = _row_set(latest_findings_per_node(history))
+    assert _row_set(fold_all(batches)) == want, (
+        f"fold differs from recompute for {fs} batches={assign} replay={replay}"
+    )
+
+
+@given(batched=batched_findings_st)
+@_settings
+def test_fold_equals_recompute(spark, batched):
+    def fold_all(batches):
+        state = None
+        for b in batches:
+            state = fold_latest_nodes(state, b)
+        return state
+
+    check_fold_equals_recompute(spark, batched, fold_all)
+
+
+# Through the parquet state: each fold writes and swaps a directory,
+# so only a few examples.
+@given(batched=batched_findings_st)
+@settings(_settings, max_examples=3)
+def test_update_latest_state_equals_recompute(spark, tmp_path_factory, batched):
+    def fold_all(batches):
+        path = str(tmp_path_factory.mktemp("state") / "state")
+        for b in batches:
+            state = update_latest_state(spark, path, b)
+        return state
+
+    check_fold_equals_recompute(spark, batched, fold_all)
 
 
 def test_hub_skew_shape(spark):

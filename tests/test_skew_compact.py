@@ -81,6 +81,70 @@ def test_update_latest_state_parquet_fold(spark, tmp_path):
     ) == sorted((r["subject_node"], r["finding_id"]) for r in got.collect())
 
 
+def test_fold_latest_nodes_null_keys_and_ties(spark):
+    # A subject whose winning key has a null found_at or finding_id is
+    # dropped (b, c) — filtered on the winner, not the input, so c's
+    # older non-null finding does not win in its place; an exact
+    # duplicate row folds to one (a); a found_at tie goes to the larger
+    # finding_id (d). One fold or two, same as the recompute.
+    from net_spider_spark.incremental import fold_latest_nodes
+    from net_spider_spark.snapshot import latest_findings_per_node
+
+    # nullable keys, as any parquet read of a history or state has them
+    schema = (
+        "finding_id long, subject_node string, found_at long, "
+        "tz_offset_min int, tz_summer_only boolean, tz_name string, "
+        "node_attrs map<string,string>, "
+        "neighbor_links array<struct<target_node:string,link_state:string,"
+        "link_attrs:map<string,string>>>"
+    )
+
+    def df(rows):
+        return spark.createDataFrame(
+            [(f, s, t, None, None, None, {}, []) for f, s, t in rows], schema)
+
+    # d's larger finding_id comes first, so arrival order cannot
+    # stand in for the finding_id tie-break
+    first = [(1, "a", 100), (1, "a", 100), (2, "b", None), (3, "c", 50),
+             (5, "d", 70)]
+    rest = [(None, "c", 100), (4, "d", 70)]
+    want = [("a", 1, 100), ("d", 5, 70)]
+
+    def keys(out):
+        return sorted((r["subject_node"], r["finding_id"], r["found_at"])
+                      for r in out.collect())
+
+    assert keys(fold_latest_nodes(None, df(first + rest))) == want
+    assert keys(fold_latest_nodes(fold_latest_nodes(None, df(first)),
+                                  df(rest))) == want
+    assert sorted(set(keys(latest_findings_per_node(df(first + rest))))) == want
+
+
+def test_update_latest_state_rejects_mismatched_batch(spark, tmp_path):
+    # A batch whose columns differ from the stored state's fails in the
+    # fold, before the swap: the state keeps its old rows and no aside
+    # or temp copy is left behind.
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from net_spider_spark.findings import FINDINGS_SCHEMA
+    from net_spider_spark.incremental import update_latest_state
+
+    sp = str(tmp_path / "state")
+    update_latest_state(spark, sp, spark.createDataFrame(
+        [(1, "a", 100, None, None, None, {}, [])], FINDINGS_SCHEMA))
+    bad = spark.createDataFrame(
+        [(2, "a", 900, None, None, None, {}, [])], FINDINGS_SCHEMA
+    ).withColumn("extra", F.lit("x"))
+    with pytest.raises(AnalysisException):
+        update_latest_state(spark, sp, bad)
+    spark.catalog.refreshByPath(sp)
+    assert [(r["finding_id"], r["found_at"])
+            for r in spark.read.parquet(sp).collect()] == [(1, 100)]
+    assert not os.path.exists(sp + "._old")
+    assert not os.path.exists(sp + "._tmp")
+
+
 def _kill_after_rename_aside(monkeypatch, path, swap):
     """Run ``swap`` and kill it right after it renames ``path`` aside,
     before the new copy is renamed into place."""
