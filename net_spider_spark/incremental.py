@@ -13,8 +13,10 @@ path.
 
 A refresh is cheap in Spark jobs as well as in rows: each fold is one
 ``max_by`` aggregate over the union of state and batch (one shuffle,
-no join), and the new state is read back with the schema the fold just
-wrote, so the returned frame plans without a schema-inference job.
+no join), written once. No schema-inference job runs around it: the
+old state's schema comes from one footer read on the driver
+(``ingest.read_parquet``), and the new state is read back with the
+schema the fold just wrote.
 
 At 100 TB this is the difference between touching the day's findings
 plus a node-sized state table, and re-scanning years of history per
@@ -32,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from net_spider_spark.findings import pair_link_samples
-from net_spider_spark.ingest import swap_dir
+from net_spider_spark.ingest import read_parquet, swap_dir
 from net_spider_spark.snapshot import latest_sample_per_pair
 
 
@@ -79,8 +81,9 @@ def _fold_and_swap(
     runs no schema-inference job — consume it before the next update
     replaces them (snapshot isolation across updates is what
     Delta/Iceberg buy you in production). The previous state is read
-    with an inferred schema, so a batch whose columns differ from it
-    fails in ``unionByName`` before anything is swapped."""
+    with the schema in its own footer (``ingest.read_parquet``, no
+    Spark job), so a batch whose columns differ from it fails in
+    ``unionByName`` before anything is swapped."""
 
     def write(tmp: str) -> StructType:
         state = None
@@ -89,7 +92,7 @@ def _fold_and_swap(
             # cached file listing for the path or the read resolves to
             # deleted part files
             spark.catalog.refreshByPath(state_path)
-            state = spark.read.parquet(state_path)
+            state = read_parquet(spark, state_path)
         folded = fold(state, batch)
         folded.write.mode("overwrite").parquet(tmp)
         return folded.schema

@@ -18,6 +18,7 @@ layout choices are the 100 TB levers:
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import shutil
@@ -37,6 +38,69 @@ def _recover_swap(path: str) -> None:
     base = path.rstrip("/")
     if not os.path.exists(base) and os.path.exists(base + "._old"):
         os.rename(base + "._old", base)
+
+
+_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file index lists a file or directory of this
+    name (``HadoopFSUtils.shouldFilterOutPathName``)."""
+    return not (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _first_data_file(path: str) -> str | None:
+    """The one file Spark's schema inference reads for the table at
+    ``path``: the lexicographically first listed leaf, as
+    ``ParquetUtils.splitFiles`` sorts them. None when ``path`` is no
+    local directory (a URI, a glob, a single file, a missing path) or
+    holds a summary file, which Spark would read first."""
+    if any(c in path for c in "{}[]*?\\"):
+        return None
+    files = []
+    for root, dirs, names in os.walk(path, followlinks=True):
+        dirs[:] = [d for d in dirs if _listed(d)]
+        for name in names:
+            if name.startswith(("_metadata", "_common_metadata")):
+                return None
+            if _listed(name):
+                files.append(os.path.join(root, name))
+    return min(files, default=None)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job.
+
+    Spark infers a table's schema by reading one file's footer in a
+    1-task job. This reads the same footer on the driver (pyarrow) and
+    hands its Spark row schema to ``spark.read.schema``, so building
+    the frame runs no Spark job; partition columns are still discovered
+    from the directory names. Spark's own inference is kept when there
+    is no local data file, when the footer carries no Spark schema (a
+    file written by another tool) and under
+    ``spark.sql.parquet.mergeSchema``. The schema is the first file's,
+    exactly as Spark would pick it, so a reader of this frame sees the
+    same columns (and the same mismatch errors) as a plain read."""
+    merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false")
+    first = None if merge.lower() == "true" else _first_data_file(path)
+    schema = None
+    if first is not None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import StructType
+
+        try:
+            row = (pq.read_metadata(first).metadata or {}).get(_ROW_METADATA)
+            if row is not None:
+                schema = StructType.fromJson(json.loads(row))
+        except (OSError, ValueError, pa.ArrowException):
+            pass  # not a footer this reads: Spark's inference decides
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def swap_dir(path: str, write: Callable[[str], T]) -> T:
@@ -76,21 +140,24 @@ def write_findings(
     mode: str = "append",
     partition_by_day: bool = True,
 ) -> None:
-    """Vectorized batch append of findings (S2 ``addFoundNode`` x N)."""
+    """Vectorized batch append of findings (S2 ``addFoundNode`` x N).
+    Each file is sorted by ``subject_node`` (within its day): the
+    planned write sorts by the partition column, and only a sort that
+    leads with that column survives it."""
     _recover_swap(path)
-    df = findings
-    writer = None
-    if partition_by_day:
-        df = df.withColumn(
-            "found_day",
-            F.date_format(
-                F.timestamp_millis(F.col("found_at")), "yyyy-MM-dd"
-            ),
-        )
-        df = df.sortWithinPartitions("subject_node")
-        writer = df.write.partitionBy("found_day")
+    if not partition_by_day:
+        writer = findings.sortWithinPartitions("subject_node").write
     else:
-        writer = df.sortWithinPartitions("subject_node").write
+        writer = (
+            findings.withColumn(
+                "found_day",
+                F.date_format(
+                    F.timestamp_millis(F.col("found_at")), "yyyy-MM-dd"
+                ),
+            )
+            .sortWithinPartitions("found_day", "subject_node")
+            .write.partitionBy("found_day")
+        )
     writer.mode(mode).parquet(path)
 
 
@@ -104,10 +171,12 @@ def read_findings(
     predicate on its own (the dependency is ours, not the planner's),
     so the interval is translated into an explicit partition filter
     here — this is the step that turns a 100 TB history scan into a
-    per-interval scan.
+    per-interval scan. Building the frame runs no Spark job: the
+    schema comes from one footer (:func:`read_parquet`) and the
+    partitions from the directory listing.
     """
     _recover_swap(path)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if "found_day" not in df.columns:
         return df
     if interval is not None:
@@ -239,9 +308,8 @@ def compact_history(
     with per-trigger files; at 100 TB the file-listing and
     footer-reading overhead dominates short-interval queries long
     before the data does. Rewrite each day partition into
-    ``ceil(rows / target_rows_per_file)`` files, preserving the
-    ``sortWithinPartitions(subject_node)`` clustering the layout
-    promises. The rewrite goes through :func:`swap_dir`, so a crash
+    ``ceil(rows / target_rows_per_file)`` files, each sorted by
+    ``subject_node`` as :func:`write_findings` lays them out. The rewrite goes through :func:`swap_dir`, so a crash
     mid-swap loses nothing and the next compaction recovers the table.
 
     ``zorder=True`` is the OPTIMIZE-ZORDER shape: instead of the
@@ -258,7 +326,7 @@ def compact_history(
     """
 
     def rewrite(tmp: str) -> tuple[int, int]:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         rows = df.count()
         files_before = _parquet_files(path)
         n_files = max(1, math.ceil(rows / target_rows_per_file))
@@ -288,7 +356,7 @@ def compact_history(
                 )
                 .repartition(F.col("found_day"), F.col("_slot"))
                 .drop("_slots", "_slot")
-                .sortWithinPartitions("subject_node")
+                .sortWithinPartitions("found_day", "subject_node")
                 .write.mode("overwrite")
                 .partitionBy("found_day")
                 .parquet(tmp)

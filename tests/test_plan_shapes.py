@@ -62,6 +62,34 @@ def test_partitioned_history_scan_prunes(spark, tmp_path):
     assert pruned.count() == 20  # days 2 and 3 only
 
 
+def test_table_reads_run_no_job(spark, tmp_path):
+    # Reading the history (with or without an interval) takes its
+    # schema from one footer on the driver: no inference job. A
+    # compaction's read does the same, one job fewer than a plain
+    # spark.read.parquet (7 jobs there on this table under AQE).
+    from conftest import spark_jobs
+
+    findings = spark.createDataFrame(
+        [(i, f"n{i % 5}", 86_400_000 * (i % 4) + i, None, None, None, {}, [])
+         for i in range(40)],
+        "finding_id long, subject_node string, found_at long, "
+        "tz_offset_min int, tz_summer_only boolean, tz_name string, "
+        "node_attrs map<string,string>, "
+        "neighbor_links array<struct<target_node:string,link_state:string,"
+        "link_attrs:map<string,string>>>",
+    )
+    path = str(tmp_path / "hist")
+    ingest.write_findings(findings, path)
+    ingest.write_findings(findings, path)
+    for iv in (None, Interval.since(86_400_000 * 2)):
+        jobs = spark_jobs(spark)
+        ingest.read_findings(spark, path, interval=iv)
+        assert jobs() == 0, jobs.describe()
+    jobs = spark_jobs(spark)
+    ingest.compact_history(spark, path)
+    assert jobs() <= 6, jobs.describe()
+
+
 def test_cis_snapshot_runs_no_python(spark, tmp_path, monkeypatch, capsys):
     # The CLI cis composition (DIO + DAO snapshots, combine_graphs) is
     # Catalyst end to end: no pandas grouped map, no Python UDF.
@@ -173,8 +201,9 @@ def test_incremental_links_single_aggregate(spark):
 def test_incremental_nodes_single_aggregate(spark, tmp_path):
     # The node-state fold is one aggregate (partial + final) over the
     # union of state and batch: no join, no second pass over the union.
-    # A refold into a stored state runs the old state's schema
-    # inference plus the write (two jobs under AQE) and nothing more.
+    # A fold runs the write (two jobs under AQE) and nothing more: the
+    # old state's schema comes from a footer read on the driver, and
+    # the new state is read back with the schema the fold wrote.
     from conftest import spark_jobs
 
     findings = findings_to_df(
@@ -197,10 +226,12 @@ def test_incremental_nodes_single_aggregate(spark, tmp_path):
     assert "Join" not in plan_of(state)
 
     path = str(tmp_path / "state")
+    jobs = spark_jobs(spark)
     update_latest_state(spark, path, b1)
+    assert jobs() <= 2, jobs.describe()
     jobs = spark_jobs(spark)
     got = update_latest_state(spark, path, b2)
-    assert jobs() <= 3, jobs.describe()
+    assert jobs() <= 2, jobs.describe()
     assert sorted(map(str, got.collect())) == sorted(map(str, state.collect()))
 
 

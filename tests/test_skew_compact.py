@@ -50,6 +50,45 @@ def test_compact_history_reduces_files(spark, tmp_path):
     ).count() == 40
 
 
+def _unsorted_files(path):
+    """The parquet files under ``path`` whose rows are not in
+    ``subject_node`` order."""
+    import pyarrow.parquet as pq
+
+    bad = []
+    for root, _, names in os.walk(path):
+        for name in names:
+            if name.endswith(".parquet"):
+                f = os.path.join(root, name)
+                subjects = pq.read_table(f, columns=["subject_node"])
+                subjects = subjects.column(0).to_pylist()
+                if subjects != sorted(subjects):
+                    bad.append(f)
+    return bad
+
+
+def test_history_files_are_sorted_by_subject(spark, tmp_path):
+    # The layout promises each file clustered by subject (its min/max
+    # stats prune point lookups): the append and the compaction both
+    # keep that order through the write's own partition-column sort.
+    path = str(tmp_path / "hist")
+    for b in range(3):
+        ingest.write_findings(spark.createDataFrame(
+            [(i, f"n{(i * 7) % 13:02d}", 86_400_000 * (i % 4) + i, None,
+              None, None, {}, []) for i in range(b * 70, b * 70 + 70)],
+            "finding_id long, subject_node string, found_at long, "
+            "tz_offset_min int, tz_summer_only boolean, tz_name string, "
+            "node_attrs map<string,string>, "
+            "neighbor_links array<struct<target_node:string,"
+            "link_state:string,link_attrs:map<string,string>>>",
+        ), path)
+    assert _count_files(path) >= 4
+    assert _unsorted_files(path) == []
+    ingest.compact_history(spark, path)
+    assert _count_files(path) == 4
+    assert _unsorted_files(path) == []
+
+
 def test_update_latest_state_parquet_fold(spark, tmp_path):
     from net_spider_spark.incremental import update_latest_state
     from net_spider_spark.snapshot import latest_findings_per_node
