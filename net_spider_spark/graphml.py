@@ -14,9 +14,11 @@ There is one writer, :func:`write_graphml_to`; :func:`write_graphml`
 makes two passes per side (keys, then elements) over rows from
 :func:`rows_of`, which decides once per export from the driver budget
 (``sizing.DRIVER_LOCAL_MAX_BYTES``) whether to collect each side once
-or to stream it through ``toLocalIterator``. A snapshot graph is the
-small end product of the query, so the collect is the usual path; the
-stream keeps driver memory flat for snapshots that are not small.
+or to stream it through ``toLocalIterator``. The decision reads the
+sizes the Spark cache recorded while it built the persisted sides, so
+it costs no job on sides that are already built. A snapshot graph is
+the small end product of the query, so the collect is the usual path;
+the stream keeps driver memory flat for snapshots that are not small.
 """
 
 from __future__ import annotations
@@ -386,38 +388,53 @@ def _emit_graphml(nodes, links, write, rows, default_directed: bool) -> None:
 
 
 @contextmanager
-def rows_of(frames, tag: str):
+def rows_of(frames, tag: str, sized=None):
     """Row source shared by the GraphML and pangraph emitters: yields
     ``rows(df)``, the rows of one of ``frames`` in partition order,
     for as many passes as the emitter makes.
 
-    The path is decided once, by one :func:`sizing.frames_fit`
-    aggregate over all ``frames`` (one ``DECISION_LOG`` entry tagged
-    ``tag``). Under the driver budget each frame is collected once and
+    The path is decided once, by :func:`sizing.frames_fit` over the
+    ``sized`` frames (default ``frames``; the pangraph writer passes
+    the inputs its vertex and edge tables project row for row) with
+    one ``DECISION_LOG`` entry tagged ``tag``. It reads the row counts
+    and byte sizes of their cache entries: no job when every frame is
+    already built, one job that builds the rest otherwise. Under the
+    driver budget each frame is collected once and
     every pass reads those rows. Above it every pass streams through
     ``toLocalIterator``, so driver memory stays at one partition plus
     the emitter's key registry.
 
-    Unpersisted inputs are persisted for the duration (and unpersisted
-    after): the sizing aggregate then materializes them once, and with
-    a nondeterministic upstream (shuffle/sample) the streamed passes
-    still read the same rows, so the element pass never meets a key
-    the key pass did not register."""
+    Unpersisted ``sized`` frames are persisted for the duration (and
+    unpersisted after), so the sizing step builds them once; on the
+    streamed path so are unpersisted ``frames``, so that with a
+    nondeterministic upstream (shuffle/sample) every pass reads the
+    same rows and the element pass never meets a key the key pass did
+    not register."""
     from pyspark import StorageLevel
 
     from net_spider_spark import sizing
 
-    persisted = [df for df in frames if df.storageLevel == StorageLevel.NONE]
-    for df in persisted:
-        df.persist()
+    sized = frames if sized is None else sized
+    persisted = []
+
+    def persist(dfs) -> None:
+        for df in dfs:
+            if df.storageLevel == StorageLevel.NONE:
+                df.persist()
+                persisted.append(df)
+
     try:
-        if sizing.frames_fit(frames, tag=tag):
+        persist(sized)
+        if sizing.frames_fit(sized, tag=tag):
             collected = {id(df): df.collect() for df in frames}
             yield lambda df: collected[id(df)]
         else:
+            persist(frames)
             yield lambda df: df.toLocalIterator()
     finally:
-        for df in persisted:
+        # reverse order: unpersisting a sized frame first would re-plan
+        # the cache of a frame that projects it
+        for df in reversed(persisted):
             df.unpersist()
 
 
@@ -435,11 +452,11 @@ def write_graphml_to(
     fall back to inference.
 
     This is the one writer. :func:`rows_of` picks its path: a snapshot
-    under the driver budget costs one sizing aggregate plus one collect
-    per side (at most four Spark jobs on cached inputs); a larger one
-    streams twice per side through ``toLocalIterator``, one job per
-    partition each time. Both paths read rows in partition order, so
-    the bytes are the same."""
+    under the driver budget costs one collect per side (two Spark jobs
+    on inputs already built in the cache, plus one job that builds
+    them otherwise); a larger one streams twice per side through
+    ``toLocalIterator``, one job per partition each time. Both paths
+    read rows in partition order, so the bytes are the same."""
     with rows_of((nodes, links), "graphml") as rows:
         _emit_graphml(nodes, links, write, rows, default_directed)
 

@@ -53,13 +53,18 @@ def _listed(name: str) -> bool:
     )
 
 
+def _local_dir(path: str) -> bool:
+    """Whether ``path`` names a local directory (no URI, no glob)."""
+    return not any(c in path for c in "{}[]*?\\") and os.path.isdir(path)
+
+
 def _first_data_file(path: str) -> str | None:
     """The one file Spark's schema inference reads for the table at
     ``path``: the lexicographically first listed leaf, as
     ``ParquetUtils.splitFiles`` sorts them. None when ``path`` is no
     local directory (a URI, a glob, a single file, a missing path) or
     holds a summary file, which Spark would read first."""
-    if any(c in path for c in "{}[]*?\\"):
+    if not _local_dir(path):
         return None
     files = []
     for root, dirs, names in os.walk(path, followlinks=True):
@@ -72,6 +77,29 @@ def _first_data_file(path: str) -> str | None:
     return min(files, default=None)
 
 
+def _footer_schema(spark: SparkSession, path: str):
+    """The Spark row schema Spark's inference would give the table at
+    ``path`` (the first data file's, see :func:`_first_data_file`),
+    read from that file's footer on the driver; None when there is no
+    local data file, the footer carries no Spark schema (a file written
+    by another tool) or ``spark.sql.parquet.mergeSchema`` is on."""
+    merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false")
+    first = None if merge.lower() == "true" else _first_data_file(path)
+    if first is None:
+        return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    try:
+        row = (pq.read_metadata(first).metadata or {}).get(_ROW_METADATA)
+        if row is not None:
+            return StructType.fromJson(json.loads(row))
+    except (OSError, ValueError, pa.ArrowException):
+        pass  # not a footer this reads: Spark's inference decides
+    return None
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` without its schema-inference job.
 
@@ -79,26 +107,11 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     1-task job. This reads the same footer on the driver (pyarrow) and
     hands its Spark row schema to ``spark.read.schema``, so building
     the frame runs no Spark job; partition columns are still discovered
-    from the directory names. Spark's own inference is kept when there
-    is no local data file, when the footer carries no Spark schema (a
-    file written by another tool) and under
-    ``spark.sql.parquet.mergeSchema``. The schema is the first file's,
+    from the directory names. Spark's own inference is kept where
+    :func:`_footer_schema` gives none. The schema is the first file's,
     exactly as Spark would pick it, so a reader of this frame sees the
     same columns (and the same mismatch errors) as a plain read."""
-    merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false")
-    first = None if merge.lower() == "true" else _first_data_file(path)
-    schema = None
-    if first is not None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.types import StructType
-
-        try:
-            row = (pq.read_metadata(first).metadata or {}).get(_ROW_METADATA)
-            if row is not None:
-                schema = StructType.fromJson(json.loads(row))
-        except (OSError, ValueError, pa.ArrowException):
-            pass  # not a footer this reads: Spark's inference decides
+    schema = _footer_schema(spark, path)
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(path)
 
@@ -171,14 +184,18 @@ def read_findings(
     predicate on its own (the dependency is ours, not the planner's),
     so the interval is translated into an explicit partition filter
     here — this is the step that turns a 100 TB history scan into a
-    per-interval scan. Building the frame runs no Spark job: the
-    schema comes from one footer (:func:`read_parquet`) and the
-    partitions from the directory listing.
+    per-interval scan. On a local table with a bounded interval only
+    the ``found_day=`` directories inside it are listed (read with the
+    table as ``basePath``), so a short interval never lists the whole
+    archive, and an interval that holds no day is an empty frame of the
+    table's schema. Building the frame runs no Spark job: the schema
+    comes from one footer (:func:`read_parquet`) and the partitions
+    from the directory listing, which Spark runs as a job only above
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+    listed directories.
     """
     _recover_swap(path)
-    df = read_parquet(spark, path)
-    if "found_day" not in df.columns:
-        return df
+    lo = hi = None
     if interval is not None:
         from datetime import datetime, timezone
 
@@ -191,13 +208,53 @@ def read_findings(
                 "%Y-%m-%d"
             )
 
-        pred = F.lit(True)
         if not isinstance(interval.lower, _NegInf):
-            pred = pred & (F.col("found_day") >= day_of(interval.lower))
+            lo = day_of(interval.lower)
         if not isinstance(interval.upper, _PosInf):
-            pred = pred & (F.col("found_day") <= day_of(interval.upper))
-        df = df.filter(pred)
+            hi = day_of(interval.upper)
+    df = None
+    if lo is not None or hi is not None:
+        df = _read_days(spark, path, lo, hi)
+    if df is None:
+        df = read_parquet(spark, path)
+    if "found_day" not in df.columns:
+        return df
+    if lo is not None:
+        df = df.filter(F.col("found_day") >= lo)
+    if hi is not None:
+        df = df.filter(F.col("found_day") <= hi)
     return df.drop("found_day")
+
+
+def _read_days(
+    spark: SparkSession, path: str, lo: str | None, hi: str | None
+) -> DataFrame | None:
+    """The ``found_day=`` partitions of the local table at ``path``
+    whose day lies in ``[lo, hi]`` (``yyyy-MM-dd``, None unbounded),
+    with the schema of :func:`_footer_schema`. None, for a whole-table
+    read instead, when ``path`` is no local day-partitioned table or
+    has no footer schema."""
+    if not _local_dir(path):
+        return None
+    days = [
+        name[len("found_day="):] for name in os.listdir(path)
+        if name.startswith("found_day=")
+    ]
+    schema = _footer_schema(spark, path) if days else None
+    if schema is None:
+        return None
+    # the null day (__HIVE_DEFAULT_PARTITION__) fails any bound, as in
+    # the partition filter
+    inside = sorted(
+        os.path.join(path, "found_day=" + day) for day in days
+        if day[:1].isdigit()
+        and (lo is None or day >= lo)
+        and (hi is None or day <= hi)
+    )
+    reader = spark.read.schema(schema)
+    if not inside:
+        return reader.parquet()
+    return reader.option("basePath", path).parquet(*inside)
 
 
 def subject_prefix_key(col) -> "F.Column":
@@ -327,39 +384,42 @@ def compact_history(
 
     def rewrite(tmp: str) -> tuple[int, int]:
         df = read_parquet(spark, path)
-        rows = df.count()
         files_before = _parquet_files(path)
-        n_files = max(1, math.ceil(rows / target_rows_per_file))
-        if zorder:
-            write_findings_zordered(
-                df.drop("found_day"), tmp, mode="overwrite", n_files=n_files
-            )
-        elif "found_day" in df.columns:
+        if "found_day" in df.columns and not zorder:
             # per-day file budget: ceil(day_rows / target) files for big
-            # days, one for small ones. Clustering rows by (day,
-            # file-slot) makes each task hold whole slots, so the output
-            # file count is at most the budget (hash collisions only
-            # merge slots).
-            per_day = df.groupBy("found_day").agg(
-                F.ceil(F.count(F.lit(1)) / target_rows_per_file)
-                .cast("int")
-                .alias("_slots")
-            )
+            # days, one for small ones, from one per-day count collected
+            # to the driver (which also sums to ``rows``). Clustering
+            # rows by (day, file-slot) makes each task hold whole slots,
+            # so the output file count is at most the budget (hash
+            # collisions only merge slots).
+            per_day = df.groupBy("found_day").count().collect()
+            rows = sum(r["count"] for r in per_day)
+            slots = F.create_map(*(
+                F.lit(v)
+                for r in per_day if r["found_day"] is not None
+                for v in (r["found_day"], math.ceil(r["count"] / target_rows_per_file))
+            ))
             (
-                df.join(F.broadcast(per_day), "found_day")
-                .withColumn(
+                df.withColumn(
                     "_slot",
                     F.pmod(
                         F.xxhash64("subject_node"),
-                        F.greatest(F.col("_slots"), F.lit(1)),
+                        F.coalesce(slots[F.col("found_day")], F.lit(1)),
                     ),
                 )
                 .repartition(F.col("found_day"), F.col("_slot"))
-                .drop("_slots", "_slot")
+                .drop("_slot")
                 .sortWithinPartitions("found_day", "subject_node")
                 .write.mode("overwrite")
                 .partitionBy("found_day")
                 .parquet(tmp)
+            )
+            return files_before, rows
+        rows = df.count()
+        n_files = max(1, math.ceil(rows / target_rows_per_file))
+        if zorder:
+            write_findings_zordered(
+                df.drop("found_day"), tmp, mode="overwrite", n_files=n_files
             )
         else:
             (

@@ -145,7 +145,7 @@ def _emit_pangraph(verts: DataFrame, edges: DataFrame, write, rows) -> None:
 
 def _write_pangraph_to(nodes: DataFrame, links: DataFrame, write) -> None:
     verts, edges = make_vertices(nodes), make_edges(links)
-    with rows_of((verts, edges), "pangraph") as rows:
+    with rows_of((verts, edges), "pangraph", sized=(nodes, links)) as rows:
         _emit_pangraph(verts, edges, write, rows)
 
 
@@ -156,7 +156,10 @@ def write_pangraph(nodes: DataFrame, links: DataFrame) -> str:
     ByteStrings), unlike graphml.write_graphml's inferred types. Rows
     come from ``graphml.rows_of``: each side is collected once under
     the driver budget and streamed through ``toLocalIterator`` above
-    it, with the same bytes either way."""
+    it, with the same bytes either way. The vertex and edge tables
+    project the inputs row for row, so the inputs' cache entries size
+    the export: on inputs already built in the cache it runs two Spark
+    jobs, the two collects."""
     import io
 
     buf = io.StringIO()

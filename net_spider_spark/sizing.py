@@ -11,7 +11,9 @@ budget, regardless of row count:
 
 * :func:`count_and_fits` — row count plus byte budget, for the BFS and
   connected components;
-* :func:`frames_fit` — byte budget over several frames, for export;
+* :func:`frames_fit` — byte budget over several persisted frames, for
+  export, read from the sizes their Spark cache entries recorded while
+  they were built (no sizing job when they are already built);
 * :func:`fits_in_driver` — byte budget for a frame whose row count the
   caller already holds (the quality-model trainer in
   ``pipeline.text``).
@@ -42,9 +44,11 @@ DECISION_LOG: list[dict] = []
 _DECISION_LOG_MAX = 256
 
 
-def _log_decision(tag: str | None, n_rows: int, est: int, local: bool) -> None:
+def _log_decision(
+    tag: str | None, n_rows: int, est: int, local: bool, **extra
+) -> None:
     DECISION_LOG.append(
-        {"tag": tag, "n_rows": n_rows, "est_bytes": est, "local": local}
+        {"tag": tag, "n_rows": n_rows, "est_bytes": est, "local": local, **extra}
     )
     if len(DECISION_LOG) > _DECISION_LOG_MAX:
         del DECISION_LOG[: -_DECISION_LOG_MAX]
@@ -152,21 +156,44 @@ def fits_in_driver(
     return local
 
 
+def _cache_builder(df: DataFrame):
+    """The JVM ``CachedRDDBuilder`` of ``df``'s Spark cache entry: it
+    knows whether every partition is built, and counts the rows and
+    the uncompressed column bytes of what it built. ``ValueError``
+    when ``df`` is not persisted."""
+    cache = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    entry = cache.lookupCachedData(df._jdf)
+    if entry.isEmpty():
+        raise ValueError("frames_fit sizes persisted frames; persist() it first")
+    return entry.get().cachedRepresentation().cacheBuilder()
+
+
 def frames_fit(frames, tag: str | None = None) -> bool:
     """True when collecting every frame in ``frames`` together stays
-    within :data:`DRIVER_LOCAL_MAX_BYTES` (read at call time). One
-    aggregate over the union of the frames' row widths sizes them all,
-    and one :data:`DECISION_LOG` entry records the total row count, the
-    estimate and the decision."""
-    widths = reduce(
-        DataFrame.unionAll,
-        [df.select(_row_width_expr(df).alias("w")) for df in frames],
-    )
-    row = widths.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("w").alias("w")
-    ).collect()[0]
-    n = int(row["n"])
-    est = int((row["w"] or 0) * _PY_OVERHEAD)
+    within :data:`DRIVER_LOCAL_MAX_BYTES` (read at call time).
+
+    Every frame must be persisted (``ValueError`` otherwise). Its cache
+    entry counted the rows and the column bytes (strings and maps at
+    their byte length) while it was built, so built frames are sized
+    with no Spark job. Frames not yet fully built are built together
+    by one ``noop`` write over the union of their ``lit(1)``
+    projections: one job that adds no shuffle of its own and builds
+    every column of each cache.
+    A recomputed cache partition only adds to the counts, so the
+    estimate errs large. One :data:`DECISION_LOG` entry records the
+    total row count, the estimate, the decision and ``filled``, the
+    number of frames that had to be built."""
+    frames = list(frames)
+    builders = [_cache_builder(df) for df in frames]
+    unbuilt = [
+        df for df, b in zip(frames, builders) if not b.isCachedColumnBuffersLoaded()
+    ]
+    if unbuilt:
+        reduce(
+            DataFrame.unionAll, [df.select(F.lit(1)) for df in unbuilt]
+        ).write.format("noop").mode("overwrite").save()
+    n = sum(b.rowCountStats().value() for b in builders)
+    est = sum(b.sizeInBytesStats().value() for b in builders) * _PY_OVERHEAD
     local = est <= DRIVER_LOCAL_MAX_BYTES
-    _log_decision(tag, n, est, local)
+    _log_decision(tag, n, est, local, filled=len(unbuilt))
     return local

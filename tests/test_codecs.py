@@ -574,13 +574,14 @@ def test_write_graphml_streams_above_driver_budget(spark, monkeypatch):
 
 
 def test_write_graphml_under_budget_collects_each_side_once(spark, monkeypatch):
-    # Under the driver budget the writer sizes both sides in one
-    # aggregate and collects each side once: at most 4 Spark jobs
-    # however many partitions, where the two-pass stream runs one job
-    # per partition per pass per side (32 here). The inputs are cached
-    # by the caller, as snapshot results are before export. The bytes
-    # must equal the streamed document's, and each export logs exactly
-    # one guard decision.
+    # Under the driver budget the writer sizes both sides from what
+    # their cache entries recorded and collects each side once: at most
+    # 2 Spark jobs however many partitions, where the two-pass stream
+    # runs one job per partition per pass per side (32 here). The
+    # inputs are cached and built by the caller, as snapshot results
+    # are before export, so sizing builds nothing. The bytes must equal
+    # the streamed document's, and each export logs exactly one guard
+    # decision.
     import io
 
     from net_spider_spark import sizing
@@ -618,10 +619,83 @@ def test_write_graphml_under_budget_collects_each_side_once(spark, monkeypatch):
 
     assert local_doc == streamed_doc
     assert local_doc.count("<node ") == 400
-    assert local_jobs <= 4, local_jobs
+    assert local_jobs <= 2, local_jobs
     assert streamed_jobs >= 2 * 2 * 8
-    assert [(d["tag"], d["n_rows"], d["local"]) for d in local_log] == [
-        ("graphml", 799, True)
+    assert [(d["tag"], d["n_rows"], d["local"], d["filled"]) for d in local_log] == [
+        ("graphml", 799, True, 0)
     ]
-    assert [(d["tag"], d["local"]) for d in streamed_log] == [("graphml", False)]
+    assert [(d["tag"], d["local"], d["filled"]) for d in streamed_log] == [
+        ("graphml", False, 0)
+    ]
     assert local_log[0]["est_bytes"] == streamed_log[0]["est_bytes"] > 0
+
+
+def _small_snapshot(spark):
+    findings = [
+        FoundNode(f"n{i}", 1000 + i,
+                  [FoundLink(f"n{(i * 7 + 1) % 30}", "to_target", {"w": str(i)})])
+        for i in range(30)
+    ]
+    return get_snapshot(findings_to_df(spark, findings), Query())
+
+
+def test_write_graphml_of_unmaterialized_snapshot(spark, monkeypatch):
+    # The CLI's shape: the export gets the lazy get_snapshot frames.
+    # Sizing builds both caches in one job that computes the snapshot
+    # (11 jobs in all here; the width aggregate it replaced made it
+    # 12), and the export leaves no cache entry behind, on either path.
+    import io
+
+    from net_spider_spark import sizing
+    from net_spider_spark.graphml import write_graphml_to
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def export():
+        nodes, links = _small_snapshot(spark)
+        buf = io.StringIO()
+        n_log = len(sizing.DECISION_LOG)
+        jobs = spark_jobs(spark)
+        write_graphml_to(nodes, links, buf.write)
+        used = jobs()
+        assert cache.isEmpty()
+        return buf.getvalue(), used, sizing.DECISION_LOG[n_log:]
+
+    local_doc, local_jobs, local_log = export()
+    monkeypatch.setattr(sizing, "DRIVER_LOCAL_MAX_BYTES", 0)
+    streamed_doc, _, streamed_log = export()
+
+    assert local_doc == streamed_doc
+    assert local_doc.count("<node ") == 30
+    assert local_jobs == 11, local_jobs
+    assert [(d["local"], d["filled"]) for d in local_log + streamed_log] == [
+        (True, 2), (False, 2)
+    ]
+
+
+def test_write_pangraph_under_budget_collects_each_side_once(spark):
+    # The pangraph tables project the inputs row for row, so the
+    # inputs' cache entries size the export: on cached, built inputs
+    # the only jobs are the two collects, and no cache entry of the
+    # export's own outlives it.
+    from net_spider_spark import sizing
+    from net_spider_spark.pangraph import write_pangraph
+
+    spark.catalog.clearCache()
+    nodes, links = _small_snapshot(spark)
+    nodes, links = nodes.persist(), links.persist()
+    nodes.count(), links.count()
+    n_log = len(sizing.DECISION_LOG)
+    jobs = spark_jobs(spark)
+    doc = write_pangraph(nodes, links)
+    used = jobs()
+    log = sizing.DECISION_LOG[n_log:]
+    nodes.unpersist(); links.unpersist()
+
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert doc.count("<node ") == 30
+    assert used <= 2, used
+    assert [(d["tag"], d["local"], d["filled"]) for d in log] == [
+        ("pangraph", True, 0)
+    ]

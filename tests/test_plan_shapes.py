@@ -65,8 +65,10 @@ def test_partitioned_history_scan_prunes(spark, tmp_path):
 def test_table_reads_run_no_job(spark, tmp_path):
     # Reading the history (with or without an interval) takes its
     # schema from one footer on the driver: no inference job. A
-    # compaction's read does the same, one job fewer than a plain
-    # spark.read.parquet (7 jobs there on this table under AQE).
+    # compaction's read does the same, and one per-day count gives it
+    # both the row total and the file budget: 4 jobs, where a plain
+    # spark.read.parquet plus a total count and a per-day count join
+    # ran 7 on this table under AQE.
     from conftest import spark_jobs
 
     findings = spark.createDataFrame(
@@ -87,7 +89,53 @@ def test_table_reads_run_no_job(spark, tmp_path):
         assert jobs() == 0, jobs.describe()
     jobs = spark_jobs(spark)
     ingest.compact_history(spark, path)
-    assert jobs() <= 6, jobs.describe()
+    assert jobs() <= 4, jobs.describe()
+
+
+def test_interval_read_lists_only_its_days(spark, tmp_path):
+    # Above 32 day directories Spark lists a whole table in a job. A
+    # bounded interval lists only its own found_day= directories, so a
+    # one-day read of a 40-day history runs no job, and a read whose
+    # interval holds no day is an empty frame of the table's schema.
+    # Every read keeps exactly the rows of the whole-table read pruned
+    # to the interval's days.
+    from conftest import spark_jobs
+
+    day = 86_400_000
+    findings = spark.createDataFrame(
+        [(i, f"n{i % 7}", day * (i % 40) + i, None, None, None, {}, [])
+         for i in range(120)],
+        "finding_id long, subject_node string, found_at long, "
+        "tz_offset_min int, tz_summer_only boolean, tz_name string, "
+        "node_attrs map<string,string>, "
+        "neighbor_links array<struct<target_node:string,link_state:string,"
+        "link_attrs:map<string,string>>>",
+    )
+    path = str(tmp_path / "hist")
+    ingest.write_findings(findings, path)
+    whole = spark.read.parquet(path)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    cases = [
+        (Interval(day * 50, day * 60), None),  # no day
+        (Interval(day * 5 + 1, day * 5 + 9), ("1970-01-06", "1970-01-06")),
+        (Interval(0, day * 40), ("1970-01-01", "1970-02-09")),
+        (Interval.since(day * 30), ("1970-01-31", "9999-12-31")),
+        (Interval.until(day * 3 + 5), ("0000-01-01", "1970-01-04")),
+    ]
+    for iv, days in cases:
+        jobs = spark_jobs(spark)
+        got = ingest.read_findings(spark, path, interval=iv)
+        built = jobs()
+        want = whole.limit(0) if days is None else whole.filter(
+            F.col("found_day").between(*days))
+        assert got.schema == ingest.read_findings(spark, path).schema
+        assert rows(got) == rows(want.drop("found_day")), iv
+        if days is None or days[0] == days[1]:
+            assert built == 0, jobs.describe()
+    assert len(rows(ingest.read_findings(spark, path, Interval.always()))) == 120
 
 
 def test_cis_snapshot_runs_no_python(spark, tmp_path, monkeypatch, capsys):

@@ -89,6 +89,30 @@ def test_history_files_are_sorted_by_subject(spark, tmp_path):
     assert _unsorted_files(path) == []
 
 
+def test_compaction_keeps_rows_without_a_day(spark, tmp_path):
+    # A finding with no found_at lands in the null day partition. The
+    # compaction's per-day file budget must not drop it: the budget is
+    # a lookup that falls back to one file, not a join on the day.
+    path = str(tmp_path / "hist")
+    schema = (
+        "finding_id long, subject_node string, found_at long, "
+        "tz_offset_min int, tz_summer_only boolean, tz_name string, "
+        "node_attrs map<string,string>, "
+        "neighbor_links array<struct<target_node:string,"
+        "link_state:string,link_attrs:map<string,string>>>"
+    )
+    ingest.write_findings(spark.createDataFrame(
+        [(i, "a", None, None, None, None, {}, []) for i in range(3)], schema
+    ), path)
+    ingest.write_findings(spark.createDataFrame(
+        [(9, "b", 5, None, None, None, {}, [])], schema
+    ), path)
+    assert ingest.compact_history(spark, path)["rows"] == 4
+    assert sorted(
+        r["finding_id"] for r in ingest.read_findings(spark, path).collect()
+    ) == [0, 1, 2, 9]
+
+
 def test_update_latest_state_parquet_fold(spark, tmp_path):
     from net_spider_spark.incremental import update_latest_state
     from net_spider_spark.snapshot import latest_findings_per_node
